@@ -1,7 +1,8 @@
 # Developer entry points (mirrors the reference repo's Makefile role).
 
 .PHONY: test test-fast parity parity-all parity-sf01 parity-hostile bench smoke \
-        fetch-grid ulp-canary close scale-data scale-curve parity-scale
+        fetch-grid ulp-canary close scale-data scale-curve parity-scale \
+        perfbench ingest-bench
 
 fetch-grid:      ## best-effort: pull the real LINZ NTv2 grid when network exists
 	-python tools/fetch_linz_grid.py
@@ -76,6 +77,12 @@ parity-scale:    ## full oracle sweep at the sf1 clone (r12) — 10x sf0.1
 
 bench:           ## headline queries at sf0.1, one JSON line
 	python bench.py
+
+perfbench:       ## the repo benchmark (BENCHMARK.json): every workload, untraced + traced
+	python3 perfbench/run.py --all --seed 1
+
+ingest-bench:    ## streaming/ingest.py throughput -> INGEST_BENCH.json
+	python tools/ingest_bench.py
 
 smoke:           ## driver-contract smoke (entry + registry shape)
 	python -c "import importlib.util; \

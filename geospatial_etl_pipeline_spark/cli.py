@@ -11,12 +11,19 @@ regardless of ``--regions_layer`` — SURVEY §2k.2; here both work):
         [--output_folder_zipped /out/zips] [-r regions.csv] \
         [-b my-bucket] [--s3prefix climate/products] [--crs EPSG:27200]
 
-Dataflow (one lazy Spark job, not a file loop):
+Dataflow (DataFrame operators, not a file loop):
   recursive .asc scan → decode (sources.asc) → × regions fan-out
   (broadcast; region "99" excluded, :271–273) → clip to region polygon
   (operators.raster) → sidecar stats → product naming via lookup dims
   (:244–251, 292) → per-product zip + metadata JSON (operators.sinks)
   → optional S3 URI targets (:377–406).
+
+``run`` issues several Spark jobs, not one: the products DataFrame is
+cached and counted (``--strict`` adds a grid count and a region count),
+then the zip sink, the metadata sink, the upload manifest (write plus a
+10-row sample) and the upload each run their own jobs over it.
+perfbench's etl_grids job (strict, 96 products, bucket and upload)
+issues 21 jobs in 34 stages.
 
 Regions come from a local CSV ``regc_code,region_name_ascii,wkt`` (the
 reference fetches a hosted feature layer over HTTPS at import time,

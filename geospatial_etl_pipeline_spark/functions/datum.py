@@ -17,9 +17,9 @@ by LINZ) is not shipped in this image, so the shift is PLUGGABLE:
   NZGD2000 Bursa-Wolf values, accurate to ~2–4 m nationally vs ~0.1–1 m
   for the grid. tests/test_geometry_functions.py pins that tolerance.
 
-Everything here is vectorized numpy on coordinate arrays; the Spark
-entry point is ``geometry.lonlat_to_nztm(..., datum_shift=...)`` inside
-the existing Arrow-batched pandas UDFs — per-batch, no driver work.
+Everything here is vectorized numpy on coordinate arrays; the entry
+point is ``geometry.lonlat_to_nztm(..., datum_shift=...)``, which runs
+per Arrow batch when called inside a pandas UDF — no driver work.
 """
 
 from __future__ import annotations

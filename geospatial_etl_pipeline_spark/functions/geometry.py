@@ -240,15 +240,3 @@ def st_area(wkt: pd.Series) -> pd.Series:
         )
 
     return wkt.map(area)
-
-
-@F.pandas_udf(DoubleType())
-def st_x_nztm(lon: pd.Series, lat: pd.Series) -> pd.Series:
-    e, _ = lonlat_to_nztm(lon.to_numpy(), lat.to_numpy())
-    return pd.Series(e)
-
-
-@F.pandas_udf(DoubleType())
-def st_y_nztm(lon: pd.Series, lat: pd.Series) -> pd.Series:
-    _, n = lonlat_to_nztm(lon.to_numpy(), lat.to_numpy())
-    return pd.Series(n)

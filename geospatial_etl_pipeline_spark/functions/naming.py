@@ -81,12 +81,6 @@ def dim_df(spark: SparkSession, d: dict[str, str], key: str, value: str) -> Data
     return literal_df(spark, sorted(d.items()), [key, value])
 
 
-def sql_values(d: dict[str, str], key: str, value: str) -> str:
-    """The same dimension as an inline SQL VALUES relation."""
-    rows = ", ".join(f"('{k}', '{v}')" for k, v in sorted(d.items()))
-    return f"(VALUES {rows}) AS _dim_{key}({key}, {value})"
-
-
 def parse_base_name(base: Column) -> dict[str, Column]:
     """Positional filename-schema parse (copy_esrigrid…py:244–251).
 

@@ -88,42 +88,6 @@ def fingerprint_t(tok: Column) -> Column:
     return F.when(tok.isNotNull(), F.md5(F.concat_ws(" ", tok)))
 
 
-def token_count(text: Column | str) -> Column:
-    return F.size(tokens(text)).cast("bigint")
-
-
-def char_ngrams(text: Column | str, n: int = 5) -> Column:
-    """All character n-grams (shingles) of the normalized text.
-
-    Expressed with sequence+transform so it stays JVM-side; a document of
-    L chars yields max(L-n+1, 1) shingles.
-    """
-    c = normalized(text)
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(c) - (n - 1), F.lit(1))),
-        lambda i: F.substring(c, i, n),
-    )
-
-
-def word_ngrams(text: Column | str, n: int = 2) -> Column:
-    """Word n-grams joined by single spaces."""
-    tok = tokens(text)
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(tok) - (n - 1), F.lit(1))),
-        lambda i: F.concat_ws(
-            " ", *[F.try_element_at(tok, i + j) for j in range(n)]
-        ),
-    )
-
-
-def stopword_hits(text: Column | str, lang: str) -> Column:
-    """How many tokens are stopwords of ``lang`` (with repetition)."""
-    sw = STOPWORDS[lang]
-    return F.size(
-        F.filter(tokens(text), lambda t: t.isin(*sw))
-    ).cast("bigint")
-
-
 def punct_count(text: Column | str) -> Column:
     c = F.col(text) if isinstance(text, str) else text
     return F.size(F.regexp_extract_all(c, F.lit(r"[.!?,;:]"), F.lit(0))).cast(
@@ -140,22 +104,6 @@ def fingerprint(text: Column | str) -> Column:
     # referencing the tokens() subtree twice would re-run the regex
     # split per reference (see tokens() docstring)
     return F.when(c.isNotNull(), F.md5(F.concat_ws(" ", tokens(c))))
-
-
-def quality_score(text: Column | str) -> Column:
-    """Deterministic quality heuristic in [0,1]-ish space:
-    rewards moderate length and stopword presence, penalizes punctuation
-    soup. All-integer feature extraction, one double formula at the end."""
-    c = F.col(text) if isinstance(text, str) else text
-    n_tok = token_count(c).cast("double")
-    n_chars = F.length(c).cast("double")
-    sw = stopword_hits(c, "en").cast("double")
-    punct = punct_count(c).cast("double")
-    return (
-        F.least(n_tok / F.lit(100.0), F.lit(1.0)) * F.lit(0.4)
-        + (sw / F.greatest(n_tok, F.lit(1.0))) * F.lit(0.4)
-        + F.when(n_chars > 0, F.lit(0.2) - F.least(punct / n_chars, F.lit(0.2))).otherwise(F.lit(0.0))
-    )
 
 
 def bow_fingerprint_t(tok: Column) -> Column:

@@ -1,6 +1,6 @@
-"""User-defined-function registration surface (SURVEY §2j [EXT]).
+"""User-defined functions (SURVEY §2j [EXT]).
 
-The reference has no UDF registration (the whole 585-line script IS one
+The reference has no UDFs of its own (the whole 585-line script IS one
 big UDF, copy_esrigrid_to_geotiff_rename_and_clip_w_Arguments.py:225-373);
 this is the [EXT] surface a general engine needs. Three tiers, fastest
 first, per the engine's "UDFs are the slow path" rule:
@@ -24,17 +24,9 @@ oracle-comparable bit-for-bit (see q64_pandas_udaf_wavg).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 
 _S = float(10**12)
-
-
-@pandas_udf("double")
-def relu_pandas(v: pd.Series) -> pd.Series:
-    """SCALAR pandas UDF: elementwise max(v, 0) over Arrow batches.
-    (Illustrative — production code uses F.greatest, tier 1.)"""
-    return v.clip(lower=0.0)
 
 
 @pandas_udf("double")
@@ -111,9 +103,3 @@ def qwavg_pandas(v: pd.Series, w: pd.Series) -> float:  # -> float = GROUPED_AGG
     sign = -1 if (total < 0) != (ws < 0) else 1
     q = sign * (abs(total) // abs(ws))
     return float(q) / _S
-
-
-def register_udfs(spark: SparkSession) -> None:
-    """Register the pandas UDFs for SQL use: SELECT relu(x), qwavg(v, w)."""
-    spark.udf.register("relu", relu_pandas)
-    spark.udf.register("qwavg", qwavg_pandas)

@@ -112,11 +112,12 @@ def _signatures_from_shingles(
     n_seeds = -(-num_hashes // 4)
     # keep_sh emits the shingle array under its fixed column name 'sh'
     # beside the id — an id column NAMED 'sh' would silently duplicate
-    # (ADVICE r12); fail loudly instead
-    assert not (keep_sh and id_col == "sh"), (
-        "keep_sh=True reserves the column name 'sh' for the shingle "
-        f"array; id_col={id_col!r} collides"
-    )
+    # (ADVICE r12); fail loudly instead, also under python -O
+    if keep_sh and id_col == "sh":
+        raise ValueError(
+            "keep_sh=True reserves the column name 'sh' for the shingle "
+            f"array; id_col={id_col!r} collides"
+        )
     # stage the md5 arrays ONCE per seed, in their own projection —
     # slice-mins in the same select would re-evaluate the md5 transform
     # per output column (no cross-lambda subexpression elimination)

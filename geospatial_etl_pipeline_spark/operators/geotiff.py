@@ -1,40 +1,35 @@
-"""Minimal pure-Python GeoTIFF codec (no GDAL, stdlib ``struct`` only).
+"""Pure-Python Cloud-Optimized GeoTIFF codec (no GDAL, stdlib only).
 
 The reference shells out to arcpy's CopyRaster for its GeoTIFF sink
+with the ``CLOUD_OPTIMIZED_GEOTIFF`` config keyword
 (copy_esrigrid…py:259–261); this image has no GDAL/arcpy, so the sink is
-implemented directly against the TIFF 6.0 + GeoTIFF 1.1 specs (both
-public): little-endian classic TIFF, ONE strip of uncompressed float64
-samples, and the three GeoTIFF tags a reader needs to georeference it —
-ModelPixelScale, ModelTiepoint, and a GeoKeyDirectory carrying the EPSG
-code. GDAL_NODATA (tag 42113) carries the nodata value the way GDAL
-writes it.
-
-Deliberately minimal, honestly real: any TIFF reader that understands
-float64 grayscale (GDAL, rasterio, QGIS, tifffile) can open the output.
-``decode_geotiff`` reads the same subset back for round-trip tests and
-for re-ingesting our own artifacts.
-
-Cloud-Optimized GeoTIFF (``encode_cog``): the reference's literal config
-keyword (copy_esrigrid…py:259–261 ``CLOUD_OPTIMIZED_GEOTIFF``) is honored
-with a REAL COG layout per the public COG spec: internal tiles
-(multiple-of-16 edge, default 512) with DEFLATE-compressed tile data
-(TIFF compression 8, stdlib zlib), reduced-resolution overview IFDs
+implemented directly against the public TIFF 6.0, GeoTIFF 1.1 and COG
+specs. ``encode_cog`` writes little-endian float64 samples in internal
+tiles (multiple-of-16 edge, default 512) with DEFLATE-compressed tile
+data (TIFF compression 8, stdlib zlib), reduced-resolution overview IFDs
 (NewSubfileType=1) built by nodata-aware block-mean, and ALL IFDs
 serialized at the front of the file so an HTTP range reader learns the
 complete tile layout from one small initial request; tile data follows,
 coarsest overview first and full resolution last (GDAL's COG ordering).
-``read_cog_tile`` takes a ``fetch(offset, size)`` callback and touches
-only the header walk plus the one tile's byte range — the range-read
-property is pinned by test, not just claimed.
+Georeferencing is ModelPixelScale, ModelTiepoint and a GeoKeyDirectory
+carrying the EPSG code; GDAL_NODATA (tag 42113) carries the nodata value
+the way GDAL writes it. Any TIFF reader that understands tiled float64
+grayscale (GDAL, rasterio, QGIS, tifffile) can open the output.
 
-Scale note: the codec is a per-row kernel — the DataFrame operator wraps
-it in Arrow-batched ``mapInPandas`` (see operators.raster.encode_geotiff
-/ encode_cog), so encoding parallelizes per raster/tile row and never
-touches the driver. Classic TIFF's 32-bit offsets cap one artifact at
-4 GB; ``encode_cog`` auto-switches to BigTIFF (magic 43, 8-byte
-offsets, LONG8 tile arrays — the same public spec GDAL emits past
-4 GB) before that ceiling, so mosaic-scale rasters can't produce a
-wrapped offset. Both formats round-trip through the same readers.
+``decode_cog`` reads every level back for round-trip tests and for
+re-ingesting our own artifacts; ``read_cog_tile`` takes a
+``fetch(offset, size)`` callback and touches only the header walk plus
+the one tile's byte range — the range-read property is pinned by test,
+not just claimed.
+
+Scale note: the codec is a per-row kernel — ``cli.product_files`` calls
+``encode_cog`` once per product row inside Arrow-batched
+``mapInPandas``, so encoding parallelizes per raster and never touches
+the driver. Classic TIFF's 32-bit offsets cap one artifact at 4 GB;
+``encode_cog`` auto-switches to BigTIFF (magic 43, 8-byte offsets,
+LONG8 tile arrays — the same public spec GDAL emits past 4 GB) before
+that ceiling, so mosaic-scale rasters can't produce a wrapped offset.
+Both formats round-trip through the same readers.
 """
 
 from __future__ import annotations
@@ -55,8 +50,7 @@ _MAGIC_BIG = 43
 _NEW_SUBFILE_TYPE = 254
 _IMAGE_WIDTH, _IMAGE_LENGTH = 256, 257
 _BITS_PER_SAMPLE, _COMPRESSION, _PHOTOMETRIC = 258, 259, 262
-_STRIP_OFFSETS, _SAMPLES_PER_PIXEL, _ROWS_PER_STRIP = 273, 277, 278
-_STRIP_BYTE_COUNTS, _PLANAR_CONFIG, _SAMPLE_FORMAT = 279, 284, 339
+_SAMPLES_PER_PIXEL, _PLANAR_CONFIG, _SAMPLE_FORMAT = 277, 284, 339
 _TILE_WIDTH, _TILE_LENGTH, _TILE_OFFSETS, _TILE_BYTE_COUNTS = 322, 323, 324, 325
 _MODEL_PIXEL_SCALE, _MODEL_TIEPOINT = 33550, 33922
 _GEO_KEY_DIRECTORY = 34735
@@ -80,147 +74,6 @@ def _epsg(crs: str | None) -> int:
         except ValueError:
             pass
     return 32767
-
-
-def encode_geotiff(
-    width: int,
-    height: int,
-    xllcorner: float,
-    yllcorner: float,
-    cellsize: float,
-    nodata_value: float,
-    crs: str | None,
-    cells: list[float],
-) -> bytes:
-    """Encode one raster (row-major, row 0 = TOP row, ASC convention) as
-    a classic little-endian GeoTIFF: single uncompressed strip of
-    float64 samples + GeoTIFF georeferencing tags."""
-    if len(cells) != width * height:
-        raise ValueError(
-            f"cells length {len(cells)} != width*height {width * height}"
-        )
-    data = struct.pack(f"<{len(cells)}d", *cells)
-    data_off = 8
-    ifd_off = data_off + len(data)
-    if ifd_off % 2:  # TIFF offsets must be word-aligned
-        data += b"\x00"
-        ifd_off += 1
-
-    epsg = _epsg(crs)
-    model_type = _MODEL_GEOGRAPHIC if 4000 <= epsg < 5000 else _MODEL_PROJECTED
-    cs_key = _GEOGRAPHIC_TYPE if model_type == _MODEL_GEOGRAPHIC else _PROJECTED_CS_TYPE
-    geo_keys = [
-        1, 1, 0, 3,  # KeyDirectoryVersion, KeyRevision, MinorRevision, NumberOfKeys
-        _GT_MODEL_TYPE, 0, 1, model_type,
-        _GT_RASTER_TYPE, 0, 1, _RASTER_PIXEL_IS_AREA,
-        cs_key, 0, 1, epsg,
-    ]
-    pixel_scale = [float(cellsize), float(cellsize), 0.0]
-    # raster (0,0) = top-left corner ↔ model (xll, ytop)
-    ytop = float(yllcorner) + height * float(cellsize)
-    tiepoint = [0.0, 0.0, 0.0, float(xllcorner), ytop, 0.0]
-    nodata_ascii = (repr(float(nodata_value)).encode("ascii")) + b"\x00"
-
-    # (tag, type, values) — ascending tag order per spec
-    entries: list[tuple[int, int, list]] = [
-        (_IMAGE_WIDTH, _T_LONG, [width]),
-        (_IMAGE_LENGTH, _T_LONG, [height]),
-        (_BITS_PER_SAMPLE, _T_SHORT, [64]),
-        (_COMPRESSION, _T_SHORT, [1]),
-        (_PHOTOMETRIC, _T_SHORT, [1]),  # BlackIsZero
-        (_STRIP_OFFSETS, _T_LONG, [data_off]),
-        (_SAMPLES_PER_PIXEL, _T_SHORT, [1]),
-        (_ROWS_PER_STRIP, _T_LONG, [height]),
-        (_STRIP_BYTE_COUNTS, _T_LONG, [width * height * 8]),
-        (_PLANAR_CONFIG, _T_SHORT, [1]),
-        (_SAMPLE_FORMAT, _T_SHORT, [3]),  # IEEE float
-        (_MODEL_PIXEL_SCALE, _T_DOUBLE, pixel_scale),
-        (_MODEL_TIEPOINT, _T_DOUBLE, tiepoint),
-        (_GEO_KEY_DIRECTORY, _T_SHORT, geo_keys),
-        (_GDAL_NODATA, _T_ASCII, [nodata_ascii]),
-    ]
-
-    ifd_size = 2 + len(entries) * 12 + 4
-    ext_off = ifd_off + ifd_size
-    ifd = struct.pack("<H", len(entries))
-    ext = b""
-    for tag, typ, values in entries:
-        if typ == _T_ASCII:
-            payload = values[0]
-            count = len(payload)
-        else:
-            payload = struct.pack(f"<{len(values)}{_TYPE_FMT[typ]}", *values)
-            count = len(values)
-        if len(payload) <= 4:
-            value_field = payload.ljust(4, b"\x00")
-        else:
-            if (ext_off + len(ext)) % 2:
-                ext += b"\x00"
-            value_field = struct.pack("<I", ext_off + len(ext))
-            ext += payload
-        ifd += struct.pack("<HHI", tag, typ, count) + value_field
-    ifd += struct.pack("<I", 0)  # no next IFD
-
-    header = _II + struct.pack("<HI", _MAGIC, ifd_off)
-    return header + data + ifd + ext
-
-
-def decode_geotiff(blob: bytes) -> dict:
-    """Decode a GeoTIFF produced by :func:`encode_geotiff` (classic
-    little-endian, single float64 strip) back into the raster-struct
-    dict. Raises ValueError on anything outside that subset."""
-    if blob[:2] != _II or struct.unpack_from("<H", blob, 2)[0] != _MAGIC:
-        raise ValueError("not a little-endian classic TIFF")
-    (ifd_off,) = struct.unpack_from("<I", blob, 4)
-    (n,) = struct.unpack_from("<H", blob, ifd_off)
-    tags: dict[int, list] = {}
-    for i in range(n):
-        off = ifd_off + 2 + i * 12
-        tag, typ, count = struct.unpack_from("<HHI", blob, off)
-        size = _TYPE_SIZE[typ] * count
-        voff = off + 8 if size <= 4 else struct.unpack_from("<I", blob, off + 8)[0]
-        if typ == _T_ASCII:
-            tags[tag] = [blob[voff : voff + count].rstrip(b"\x00").decode("ascii")]
-        else:
-            tags[tag] = list(
-                struct.unpack_from(f"<{count}{_TYPE_FMT[typ]}", blob, voff)
-            )
-
-    width, height = tags[_IMAGE_WIDTH][0], tags[_IMAGE_LENGTH][0]
-    if tags.get(_COMPRESSION, [1])[0] != 1 or tags.get(_SAMPLE_FORMAT, [3])[0] != 3:
-        raise ValueError("unsupported compression/sample format")
-    (strip_off,) = tags[_STRIP_OFFSETS]
-    (strip_len,) = tags[_STRIP_BYTE_COUNTS]
-    cells = list(
-        struct.unpack_from(f"<{width * height}d", blob, strip_off)
-    )
-    if strip_len != width * height * 8:
-        raise ValueError("strip byte count mismatch")
-
-    cellsize = tags[_MODEL_PIXEL_SCALE][0]
-    xll = tags[_MODEL_TIEPOINT][3]
-    ytop = tags[_MODEL_TIEPOINT][4]
-    yll = ytop - height * cellsize
-    keys = tags.get(_GEO_KEY_DIRECTORY, [])
-    epsg, model_type = 32767, _MODEL_PROJECTED
-    for k in range(4, len(keys), 4):
-        kid, _, _, val = keys[k : k + 4]
-        if kid == _GT_MODEL_TYPE:
-            model_type = val
-        elif kid in (_GEOGRAPHIC_TYPE, _PROJECTED_CS_TYPE):
-            epsg = val
-    nodata = float(tags.get(_GDAL_NODATA, ["nan"])[0])
-    return {
-        "width": width,
-        "height": height,
-        "xllcorner": xll,
-        "yllcorner": yll,
-        "cellsize": cellsize,
-        "nodata_value": nodata,
-        "crs": f"EPSG:{epsg}" if epsg != 32767 else None,
-        "cells": cells,
-        "model_type": "geographic" if model_type == _MODEL_GEOGRAPHIC else "projected",
-    }
 
 
 # --------------------------------------------------------------------------
@@ -687,8 +540,8 @@ def read_cog_tile(src, level: int, tile_row: int, tile_col: int) -> dict:
 
 def decode_cog(blob: bytes) -> dict:
     """Decode a COG produced by :func:`encode_cog`: level 0 plus every
-    overview, tiles reassembled and cropped. Shares the raster-struct
-    shape of :func:`decode_geotiff` with an ``overviews`` list."""
+    overview, tiles reassembled and cropped, as a raster-struct dict
+    (with ``crs``) plus an ``overviews`` list."""
     ifds = cog_ifds(blob)
     levels = []
     for tags in ifds:

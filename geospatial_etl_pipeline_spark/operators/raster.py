@@ -12,13 +12,10 @@ as composable DataFrame transformations:
   SURVEY §7 hard-part 1) via an Arrow-batched pandas UDF.
 - ``resample_nearest``: cellSize="MINOF" resampling analogue (:300) in
   JVM expressions (nearest-neighbor decimation/replication).
-- ``encode_geotiff``: the GeoTIFF sink boundary (:259–261) — a real
-  minimal GeoTIFF (pure-``struct`` TIFF 6.0 + GeoTIFF 1.1 tags, codec
-  in operators/geotiff.py), openable by any float64-capable TIFF
-  reader. Strip-based; kept as the cheap option.
-- ``encode_cog``: the CLOUD_OPTIMIZED_GEOTIFF path (:259–261's literal
-  config keyword) — internal tiles + deflate + overview pyramid +
-  front-loaded IFDs (codec in operators/geotiff.py, range-read tested).
+
+The GeoTIFF sink (:259–261) is not a DataFrame operator here:
+``cli.product_files`` calls the per-row COG codec
+``operators.geotiff.encode_cog`` for each product.
 
 Scale: one row per raster keeps lineage columnar; a 10k×10k float grid
 is ~800 MB of cells, so production tiling would split rasters into
@@ -138,7 +135,8 @@ def clip_to_bbox(
 
 def clip_to_polygon(rasters: DataFrame, wkt_col: Column | str) -> DataFrame:
     """ClippingGeometry semantics: mask cells whose centers fall outside
-    the polygon to NODATA, then shrink the extent to the polygon's bbox.
+    the polygon to NODATA. The raster keeps its full extent and cell
+    count; it is not cropped to the polygon's bbox.
 
     The point-in-polygon test is an Arrow-batched pandas UDF over the
     cells array; everything around it stays columnar.
@@ -219,7 +217,7 @@ def tile(rasters: DataFrame, tile_px: int) -> DataFrame:
     partition the cells exactly, ``raster_stats`` composes UNCHANGED:
     stats over tile rows == stats over the whole raster (count/min/max/
     mean/stddev are flat aggregates over exploded cells). ``clip_to_*``
-    and ``encode_geotiff`` likewise see ordinary (smaller) rasters.
+    and ``geotiff.encode_cog`` likewise see ordinary (smaller) rasters.
     Pure JVM array expressions — one explode per tile, no Python.
     """
     if tile_px < 1:
@@ -279,84 +277,6 @@ def tile(rasters: DataFrame, tile_px: int) -> DataFrame:
         "crs",
         F.col("_cells").alias("cells"),
     )
-
-
-def encode_geotiff(rasters: DataFrame) -> DataFrame:
-    """GeoTIFF sink boundary (copy_esrigrid…py:259–261): encode each
-    raster row into a REAL (minimal) GeoTIFF — classic little-endian
-    TIFF, one uncompressed float64 strip, ModelPixelScale/ModelTiepoint/
-    GeoKeyDirectory georeferencing and GDAL_NODATA, written with stdlib
-    ``struct`` against the public TIFF 6.0 + GeoTIFF 1.1 specs (codec in
-    operators/geotiff.py; round-trip-tested via decode_geotiff). Output:
-    (base_name, tiff binary), one artifact per row, encoded inside
-    Arrow-batched ``mapInPandas`` — parallel per raster/tile, nothing on
-    the driver. Production COG (tiled + overviews + compression) swaps
-    the kernel for GDAL; the operator shape is unchanged."""
-    from .geotiff import encode_geotiff as _enc_one
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "base_name": pdf["base_name"],
-                    "tiff": [
-                        _enc_one(
-                            int(r["width"]), int(r["height"]),
-                            r["xllcorner"], r["yllcorner"], r["cellsize"],
-                            r["nodata_value"], r["crs"], list(r["cells"]),
-                        )
-                        for r in pdf.to_dict("records")
-                    ],
-                }
-            )
-
-    return rasters.mapInPandas(enc, "base_name string, tiff binary")
-
-
-def encode_cog(
-    rasters: DataFrame,
-    tile_px: int | None = None,
-    levels: int | None = None,
-    compress: bool = True,
-) -> DataFrame:
-    """Cloud-Optimized GeoTIFF sink boundary — the reference's
-    CLOUD_OPTIMIZED_GEOTIFF config keyword (copy_esrigrid…py:259–261)
-    honored structurally: each raster row becomes a tiled
-    (auto-sized: min(512, smallest multiple of 16 covering the image))
-    deflate-compressed GeoTIFF with a factor-2 block-mean overview
-    pyramid and all IFDs at the front of the file (codec:
-    operators/geotiff.encode_cog; layout + range reads round-trip
-    tested tile-by-tile in test_raster.py; auto-BigTIFF past 4 GB).
-
-    The overview build inside the kernel is
-    geotiff.block_mean_downsample — the per-row twin of
-    :func:`downsample_block_mean`, pinned EQUAL to it by test — so the
-    pyramid ships per-row inside Arrow-batched ``mapInPandas`` with no
-    extra shuffle (the distributed-operator alternative would groupBy
-    base_name and re-join every overview level). At 100 TB each raster
-    row encodes independently on its executor; rasters above classic
-    TIFF's 4 GB offset ceiling go through :func:`tile` first."""
-
-    from .geotiff import encode_cog as _enc_one
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "base_name": pdf["base_name"],
-                    "tiff": [
-                        _enc_one(
-                            int(r["width"]), int(r["height"]),
-                            r["xllcorner"], r["yllcorner"], r["cellsize"],
-                            r["nodata_value"], r["crs"], list(r["cells"]),
-                            tile_px=tile_px, levels=levels, compress=compress,
-                        )
-                        for r in pdf.to_dict("records")
-                    ],
-                }
-            )
-
-    return rasters.mapInPandas(enc, "base_name string, tiff binary")
 
 
 def downsample_block_mean(rasters: DataFrame, factor: int) -> DataFrame:

@@ -31,7 +31,7 @@ _JACCARD = 0.25
 
 _SQL_NORM = "lower(trim(text))"
 _SQL_TOKENS = rf"regexp_split_to_array({_SQL_NORM}, '\s+')"
-# word trigrams: mirror of functions.text.word_ngrams(text, 3) —
+# word trigrams: mirror of functions.text.word_ngrams_t(tokens(text), 3) —
 # sequence(1, greatest(n_tok-2, 1)) with concat_ws skipping the NULL
 # tail elements on short docs.
 _SQL_SHINGLES = (

@@ -201,38 +201,6 @@ def _qdot(a, b):
     )
 
 
-def _qdot_arrow():
-    """Arrow-batched numpy form of ``_qdot`` — BIT-IDENTICAL (float64
-    multiply and floor are the same IEEE ops in numpy and the JVM;
-    int64 addition is exact), but the batch runs as one vectorized
-    ``np.floor(va*vb*S).sum(axis=1)`` instead of an interpreted
-    higher-order fold per row. Use it ONLY on pair-relation hot paths
-    where the fold count is quadratic-in-cluster (q121: 1.5M pair dots,
-    measured 6.6 s -> 3.5 s at sf0.1); scan-sized paths stay on the
-    pure-JVM ``_qdot`` to keep their plans Python-free. Same sanctioned
-    Arrow-numpy shape as q54's matmul bucketing."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def qdot_np(a, b):
-        va = np.stack(a.to_numpy())
-        vb = np.stack(b.to_numpy())
-        return pd.Series(
-            np.floor(va * vb * float(_S)).astype(np.int64).sum(axis=1)
-        )
-
-    # real annotation objects, not strings: this module runs under
-    # `from __future__ import annotations`, which would stringify
-    # inline hints and break pandas_udf's signature inference
-    qdot_np.__annotations__ = {
-        "a": pd.Series,
-        "b": pd.Series,
-        "return": pd.Series,
-    }
-    return pandas_udf(qdot_np, "bigint")
-
-
 _ND_BITS = 6
 _ND_TOPK = 25
 _ND_TAU = 0.0  # cosine threshold, applied BELOW the global top-k

@@ -485,7 +485,7 @@ GROUP BY lang, log2_bucket
 )
 def q76_token_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus length-distribution report: documents per (lang,
-    floor(log2(token_count))) bucket with token totals — the
+    floor(log2(n_tokens))) bucket with token totals — the
     sequence-length histogram that sizes packing/truncation budgets
     before training.
 

@@ -291,8 +291,11 @@ def stream_to_partitioned_parquet(
         )
         q.awaitTermination()
     finally:
-        if state_partitions is not None and prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        if state_partitions is not None:
+            if prev is None:
+                spark.conf.unset("spark.sql.shuffle.partitions")
+            else:
+                spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def run_to_memory_sink(

@@ -88,6 +88,19 @@ def test_minhash_identical_docs_share_signature(spark):
     assert sigs[1] != sigs[3]
 
 
+def test_keep_sh_rejects_id_col_named_sh(spark):
+    """keep_sh=True emits the shingle array as column 'sh', so an id
+    column of that name is refused with ValueError (not an assert,
+    which python -O strips)."""
+    from geospatial_etl_pipeline_spark.operators.dedup import (
+        _signatures_from_shingles,
+    )
+
+    sh_df = spark.createDataFrame([(["a b c"],)], "sh array<string>")
+    with pytest.raises(ValueError, match="reserves the column name 'sh'"):
+        _signatures_from_shingles(sh_df, "sh", 8, keep_sh=True)
+
+
 def test_lsh_finds_near_duplicates(spark):
     base = "the quick brown fox jumps over the lazy dog again and again"
     df = spark.createDataFrame(

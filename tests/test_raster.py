@@ -6,14 +6,10 @@ import struct
 
 import pytest
 
-from geospatial_etl_pipeline_spark.operators.geotiff import (
-    decode_geotiff,
-    encode_geotiff as encode_geotiff_bytes,
-)
+from geospatial_etl_pipeline_spark.operators.geotiff import encode_cog
 from geospatial_etl_pipeline_spark.operators.raster import (
     clip_to_bbox,
     clip_to_polygon,
-    encode_geotiff,
     raster_stats,
     resample_nearest,
 )
@@ -41,6 +37,16 @@ def asc_dir(tmp_path_factory):
 @pytest.fixture(scope="module")
 def rasters(spark, asc_dir):
     return read_asc(spark, asc_dir, crs="EPSG:27200").cache()
+
+
+def _cog(row, **kw) -> bytes:
+    """geotiff.encode_cog on one collected raster row, the way
+    cli.product_files calls it."""
+    return encode_cog(
+        row["width"], row["height"], row["xllcorner"], row["yllcorner"],
+        row["cellsize"], row["nodata_value"], row["crs"], list(row["cells"]),
+        **kw,
+    )
 
 
 def test_read_asc_recursive_scan(rasters):
@@ -110,51 +116,17 @@ def test_resample_nearest(rasters):
     assert out["cells"][5:7] == [20.0, 22.0]
 
 
-def test_encode_geotiff_is_valid_tiff(rasters):
-    """The operator output is a structurally valid classic TIFF: correct
-    byte-order mark, magic 42, an IFD with ascending tags, and the strip
-    where StripOffsets says it is."""
-    small = rasters.filter("base_name = 'small'")
-    row = encode_geotiff(small).collect()[0]
-    blob = row["tiff"]
-    assert blob[:2] == b"II"
-    assert struct.unpack_from("<H", blob, 2)[0] == 42
-    (ifd_off,) = struct.unpack_from("<I", blob, 4)
-    (n_entries,) = struct.unpack_from("<H", blob, ifd_off)
-    tags = [
-        struct.unpack_from("<H", blob, ifd_off + 2 + i * 12)[0]
-        for i in range(n_entries)
-    ]
-    assert tags == sorted(tags)  # TIFF 6.0 requires ascending tag order
-    assert 256 in tags and 257 in tags and 34735 in tags  # dims + GeoKeys
-
-
-def test_encode_geotiff_roundtrip(rasters):
-    """decode(encode(raster)) recovers dims, extent, CRS, nodata, cells."""
-    small = rasters.filter("base_name = 'small'")
-    row = encode_geotiff(small).collect()[0]
-    src = rasters.filter("base_name = 'small'").collect()[0]
-    got = decode_geotiff(row["tiff"])
-    assert (got["width"], got["height"]) == (src["width"], src["height"])
-    assert got["xllcorner"] == src["xllcorner"]
-    assert got["yllcorner"] == pytest.approx(src["yllcorner"])
-    assert got["cellsize"] == src["cellsize"]
-    assert got["nodata_value"] == src["nodata_value"]
-    assert got["crs"] == "EPSG:27200"
-    assert got["model_type"] == "projected"
-    assert got["cells"] == list(src["cells"])
-
-
 def test_encode_cog_layout_is_cloud_optimized(rasters):
     """COG structural contract: tiled IFDs (multiple-of-16 tiles), an
     overview IFD flagged NewSubfileType=1, EVERY IFD serialized before
-    any tile data (the range-reader property), and full-res tile data
-    LAST (GDAL's COG ordering: zoomed-out reads touch the file front)."""
+    any tile data (the range-reader property), each IFD's tags in
+    ascending order (TIFF 6.0), and full-res tile data LAST (GDAL's COG
+    ordering: zoomed-out reads touch the file front)."""
     from geospatial_etl_pipeline_spark.operators.geotiff import cog_ifds
-    from geospatial_etl_pipeline_spark.operators.raster import encode_cog
 
     big = rasters.filter("base_name = 'grid_02_a_b_mean_monthly7'")
-    blob = encode_cog(big, tile_px=16).collect()[0]["tiff"]
+    blob = _cog(big.collect()[0], tile_px=16)
+    assert blob[:2] == b"II" and struct.unpack_from("<H", blob, 2)[0] == 42
     ifds = cog_ifds(blob)
     assert len(ifds) >= 2  # full res + >=1 overview
     assert ifds[0][254][0] == 0 and all(t[254][0] == 1 for t in ifds[1:])
@@ -168,6 +140,9 @@ def test_encode_cog_layout_is_cloud_optimized(rasters):
         (n,) = struct.unpack_from("<H", blob, pos)
         end = pos + 2 + n * 12 + 4
         assert pos < first_tile_off
+        tags = [struct.unpack_from("<H", blob, pos + 2 + i * 12)[0]
+                for i in range(n)]
+        assert tags == sorted(tags)
         (pos,) = struct.unpack_from("<I", blob, end - 4)
     # full-res tiles live AFTER every overview tile
     assert min(ifds[0][324]) > max(max(t[324]) for t in ifds[1:])
@@ -175,22 +150,26 @@ def test_encode_cog_layout_is_cloud_optimized(rasters):
 
 def test_encode_cog_roundtrip_with_overviews(rasters):
     """decode(encode_cog(raster)) recovers level 0 exactly (through the
-    deflate + tile + pad path) and each overview equals repeated
-    factor-2 block_mean_downsample output."""
+    deflate + tile + pad path), with its extent, CRS (a projected model)
+    and nodata, and each overview equals repeated factor-2
+    block_mean_downsample output."""
     from geospatial_etl_pipeline_spark.operators.geotiff import (
         block_mean_downsample,
+        cog_ifds,
         decode_cog,
     )
-    from geospatial_etl_pipeline_spark.operators.raster import encode_cog
 
     src = rasters.filter("base_name = 'small'").collect()[0]
-    blob = encode_cog(
-        rasters.filter("base_name = 'small'"), tile_px=16
-    ).collect()[0]["tiff"]
+    blob = _cog(src, tile_px=16)
     got = decode_cog(blob)
     assert (got["width"], got["height"]) == (src["width"], src["height"])
     assert got["cells"] == list(src["cells"])
+    assert got["xllcorner"] == src["xllcorner"]
+    assert got["yllcorner"] == pytest.approx(src["yllcorner"])
+    assert got["cellsize"] == src["cellsize"]
     assert got["crs"] == "EPSG:27200"
+    keys = cog_ifds(blob)[0][34735]
+    assert {keys[k]: keys[k + 3] for k in range(4, len(keys), 4)}[1024] == 1
     assert got["nodata_value"] == src["nodata_value"]
     assert len(got["overviews"]) >= 1
     w, h, cv = src["width"], src["height"], list(src["cells"])
@@ -238,11 +217,9 @@ def test_cog_range_read_single_tile(rasters):
     the file front plus the one tile's byte range — a small fraction of
     the file, never a full scan."""
     from geospatial_etl_pipeline_spark.operators.geotiff import read_cog_tile
-    from geospatial_etl_pipeline_spark.operators.raster import encode_cog
 
-    big = rasters.filter("base_name = 'grid_02_a_b_mean_monthly7'")
-    src = big.collect()[0]
-    blob = encode_cog(big, tile_px=16, compress=False).collect()[0]["tiff"]
+    src = rasters.filter("base_name = 'grid_02_a_b_mean_monthly7'").collect()[0]
+    blob = _cog(src, tile_px=16, compress=False)
     calls: list[tuple[int, int]] = []
 
     def fetch(off: int, size: int) -> bytes:
@@ -274,20 +251,14 @@ def test_encode_cog_bigtiff_roundtrip(rasters):
     the format that lifts classic TIFF's 4 GB ceiling): identical
     round-trip, overview pyramid, and fetch-callback range-read through
     the same readers; auto mode stays classic for small files."""
-    import struct as _struct
-
     from geospatial_etl_pipeline_spark.operators.geotiff import (
         decode_cog,
-        encode_cog as encode_cog_bytes,
         read_cog_tile,
     )
 
     src = rasters.filter("base_name = 'grid_02_a_b_mean_monthly7'").collect()[0]
-    args = (src["width"], src["height"], src["xllcorner"], src["yllcorner"],
-            src["cellsize"], src["nodata_value"], src["crs"],
-            list(src["cells"]))
-    big = encode_cog_bytes(*args, tile_px=16, bigtiff=True)
-    assert _struct.unpack_from("<H", big, 2)[0] == 43
+    big = _cog(src, tile_px=16, bigtiff=True)
+    assert struct.unpack_from("<H", big, 2)[0] == 43
     got = decode_cog(big)
     assert got["cells"] == list(src["cells"])
     assert got["crs"] == "EPSG:27200"
@@ -304,8 +275,8 @@ def test_encode_cog_bigtiff_roundtrip(rasters):
     assert t["cells"] == list(src["cells"])
     assert sum(s for _, s in calls) < len(big)  # never a full scan
     # auto mode keeps small artifacts classic
-    auto = encode_cog_bytes(*args, tile_px=16)
-    assert _struct.unpack_from("<H", auto, 2)[0] == 42
+    auto = _cog(src, tile_px=16)
+    assert struct.unpack_from("<H", auto, 2)[0] == 42
 
 
 def test_cog_overviews_share_full_res_top_edge():
@@ -313,10 +284,7 @@ def test_cog_overviews_share_full_res_top_edge():
     anchor at row 0, so every level's tiepoint must carry the
     FULL-RES top edge — deriving ytop from the overview's own dims
     (yll + lh·lcs) shifted odd levels one source cell north."""
-    from geospatial_etl_pipeline_spark.operators.geotiff import (
-        decode_cog,
-        encode_cog,
-    )
+    from geospatial_etl_pipeline_spark.operators.geotiff import decode_cog
 
     w, h = 11, 9  # odd height: overview is 6x5, 5*2 != 9
     cells = [float(i) for i in range(w * h)]
@@ -336,10 +304,7 @@ def test_cog_auto_tile_size_fits_small_rasters():
     """tile_px=None auto-sizes: a 10x10 grid gets one 16x16 tile (a
     sub-kilobyte artifact), not a 512x512 pad-and-deflate; large
     images cap at 512."""
-    from geospatial_etl_pipeline_spark.operators.geotiff import (
-        decode_cog,
-        encode_cog,
-    )
+    from geospatial_etl_pipeline_spark.operators.geotiff import decode_cog
 
     blob = encode_cog(10, 10, 0.0, 0.0, 1.0, -9999.0, None, [0.0] * 100)
     d = decode_cog(blob)
@@ -349,8 +314,6 @@ def test_cog_auto_tile_size_fits_small_rasters():
 
 
 def test_encode_cog_rejects_bad_tile_size(rasters):
-    from geospatial_etl_pipeline_spark.operators.geotiff import encode_cog
-
     with pytest.raises(ValueError, match="multiple of 16"):
         encode_cog(4, 4, 0.0, 0.0, 1.0, -9999.0, None, [0.0] * 16, tile_px=17)
 
@@ -422,13 +385,23 @@ def test_tile_clip_bbox_equal_whole(spark, rasters):
     assert tiled["mean_val"] == pytest.approx(whole["mean_val"])
 
 
-def test_encode_geotiff_bytes_geographic_crs():
-    blob = encode_geotiff_bytes(2, 2, 10.0, 20.0, 0.5, -1.0, "EPSG:4326",
-                                [1.0, 2.0, 3.0, 4.0])
-    got = decode_geotiff(blob)
-    assert got["model_type"] == "geographic"
+def test_encode_cog_geographic_crs():
+    """An EPSG:4xxx CRS round-trips and is written as a geographic
+    model (GTModelTypeGeoKey 1024 = 2, the code in GeographicTypeGeoKey
+    2048), not a projected one."""
+    from geospatial_etl_pipeline_spark.operators.geotiff import (
+        cog_ifds,
+        decode_cog,
+    )
+
+    blob = encode_cog(2, 2, 10.0, 20.0, 0.5, -1.0, "EPSG:4326",
+                      [1.0, 2.0, 3.0, 4.0])
+    got = decode_cog(blob)
     assert got["crs"] == "EPSG:4326"
     assert got["cells"] == [1.0, 2.0, 3.0, 4.0]
+    keys = cog_ifds(blob)[0][34735]
+    geo = {keys[k]: keys[k + 3] for k in range(4, len(keys), 4)}
+    assert geo[1024] == 2 and geo[2048] == 4326 and 3072 not in geo
     # tiepoint maps top-left: ytop = yll + h*cs = 21.0
     assert got["yllcorner"] == pytest.approx(20.0)
 

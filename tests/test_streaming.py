@@ -230,6 +230,37 @@ def test_stream_sink_replay_is_idempotent(spark, stream, tmp_path):
     assert spark.read.parquet(out).select("event_id").distinct().count() == n1
 
 
+def test_stream_sink_restores_shuffle_partitions(spark, stream, tmp_path):
+    """state_partitions pins spark.sql.shuffle.partitions for the run
+    only: afterwards the session conf reads as before, whether it was
+    unset or set."""
+    from geospatial_etl_pipeline_spark.streaming.events import (
+        stream_to_partitioned_parquet,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key, None)
+    try:
+        for i, before in enumerate([None, "7"]):
+            if before is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, before)
+            stream_to_partitioned_parquet(
+                stream.select("event_id", "event_type"),
+                str(tmp_path / f"landed{i}"),
+                ["event_type"],
+                str(tmp_path / f"ckpt{i}"),
+                state_partitions=3,
+            )
+            assert spark.conf.get(key, None) == before
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+
+
 def test_stream_static_enrichment(spark, sf_dir, stream):
     """Stream-static join ≡ the same join in batch: every event row
     carries its dim payload; unmatched keys survive (left join)."""

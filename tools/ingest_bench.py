@@ -4,8 +4,9 @@ through the incremental-dedup pipeline (fingerprint → in-stream
 first-occurrence dedup → stream-static anti probe against a corpus
 fingerprint set → exactly-once partitioned landing) and record docs/sec.
 
-This is the training-data ingestion path's perf artifact, the sibling of
-tools/stream_bench.py (events/window path). Corpus = the even doc_ids of
+This is the training-data ingestion path's perf artifact; the
+events/window stream path is measured by perfbench's catalog_stream
+workload. Corpus = the even doc_ids of
 the same table (so the probe side is non-trivial and survivors exist).
 
 Usage: python tools/ingest_bench.py [sf_dir] [out_json] [chunks] [fpt]
