@@ -15,8 +15,10 @@ close: fetch-grid ulp-canary parity-all parity-hostile parity-sf01 test bench  #
 ulp-canary:      ## interpolated-percentile allowlist + engine bit-parity probe
 	python tools/ulp_canary.py ULP_CANARY.json
 
-test:            ## full suite, no -x (the pre-commit gate)
-	python -m pytest tests/ -q
+test:            ## full suite, no -x: the Tier-1 gate of ROADMAP.md
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+	  timeout -k 10 2670 python -m pytest tests/ -q \
+	  --continue-on-collection-errors -p no:cacheprovider
 
 test-fast:       ## quick signal: catalog + loaders + plan shapes
 	python -m pytest tests/test_catalog.py tests/test_loader_schema.py \

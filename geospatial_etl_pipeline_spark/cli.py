@@ -14,16 +14,18 @@ regardless of ``--regions_layer`` — SURVEY §2k.2; here both work):
 Dataflow (DataFrame operators, not a file loop):
   recursive .asc scan → decode (sources.asc) → × regions fan-out
   (broadcast; region "99" excluded, :271–273) → clip to region polygon
-  (operators.raster) → sidecar stats → product naming via lookup dims
-  (:244–251, 292) → per-product zip + metadata JSON (operators.sinks)
-  → optional S3 URI targets (:377–406).
+  (operators.raster) → sidecar stats from the clipped row itself → product
+  naming via lookup dims (:244–251, 292) → per-product zip + metadata
+  JSON (operators.sinks) → optional S3 URI targets (:377–406). Each
+  product is decoded once and clipped once; no shuffle moves its cells.
 
 ``run`` issues several Spark jobs, not one: the products DataFrame is
 cached and counted (``--strict`` adds a grid count and a region count),
 then the zip sink, the metadata sink, the upload manifest (write plus a
 10-row sample) and the upload each run their own jobs over it.
 perfbench's etl_grids job (strict, 96 products, bucket and upload)
-issues 21 jobs in 34 stages.
+issues 17 jobs in 21 stages, 17 of which run (the others are skipped),
+counted from Spark's event log.
 
 Regions come from a local CSV ``regc_code,region_name_ascii,wkt`` (the
 reference fetches a hosted feature layer over HTTPS at import time,
@@ -58,7 +60,7 @@ from .functions.naming import (
     product_name,
     region_title,
 )
-from .operators.raster import clip_to_polygon, raster_stats
+from .operators.raster import clip_to_polygon, with_raster_stats
 from .operators.sinks import upload_prefix, write_metadata_json, write_product_zips
 from .sources.asc import asc_text, read_asc
 
@@ -92,29 +94,15 @@ def build_products(
     """rasters × regions → clipped rasters with stats and product names.
 
     Returns one row per (grid, region) product: raster struct columns +
-    n_cells/min/max/mean + product_name/region_name."""
+    n_cells/min/max/mean + product_name/region_name. A clip that masks
+    every cell keeps its row, with n_cells = 0 and null min/max/mean, so
+    strict mode counts it as a product."""
     regions = regions.filter(F.col("regc_code") != "99")  # :271–273
 
     fanout = rasters.crossJoin(F.broadcast(regions)).withColumn(
         "base_name", F.concat_ws("#", "base_name", "regc_code")
     )
-    clipped_part = clip_to_polygon(
-        fanout.filter(F.col("wkt").isNotNull()), F.col("wkt")
-    )
-    passthrough = fanout.filter(F.col("wkt").isNull()).select(
-        *clipped_part.columns
-    )
-    clipped = clipped_part.unionByName(passthrough)
-
-    # LEFT join + zero-coalesce: raster_stats drops all-NODATA rasters
-    # (its groupBy emits no row), so an inner join would silently lose a
-    # region clip that masks every cell — and strict mode would then
-    # misattribute the shortfall to unknown parameter/period codes.
-    # Fully-masked products surface with n_cells=0 and null min/max/mean.
-    stats = raster_stats(clipped)
-    with_stats = clipped.join(stats, "base_name", "left").withColumn(
-        "n_cells", F.coalesce(F.col("n_cells"), F.lit(0))
-    )
+    with_stats = with_raster_stats(clip_to_polygon(fanout, F.col("wkt")))
 
     split = F.split("base_name", "#")
     parsed = parse_base_name(F.element_at(split, 1))

@@ -3,8 +3,14 @@
 Re-expresses the reference's raster pipeline (copy_esrigrid…py:259–346)
 as composable DataFrame transformations:
 
-- ``raster_stats``: the per-raster statistics arcpy writes as sidecars
-  (:5, :315) — explode + partial-aggregable hash agg.
+- ``with_raster_stats`` and ``raster_stats``: the per-raster statistics
+  arcpy writes as sidecars (:5, :315), in two forms. ``with_raster_stats``
+  adds them to each row with JVM array expressions — the form for
+  products that are one row each (``cli.build_products``): no shuffle,
+  and every row keeps its stats, all-NODATA rows included.
+  ``raster_stats`` is the grouped form — explode + partial-aggregable
+  hash agg by ``base_name`` — for rasters split over several rows
+  (``tile``). On a one-row raster the two agree bit for bit.
 - ``clip_to_bbox``: extent clip with shrink-to-geometry
   (NO_MAINTAIN_EXTENT, :309) in pure JVM array expressions.
 - ``clip_to_polygon``: ClippingGeometry semantics (:307) — cell-center-
@@ -50,6 +56,30 @@ def raster_stats(rasters: DataFrame) -> DataFrame:
         F.max("val").alias("max_val"),
         F.avg("val").alias("mean_val"),
         F.stddev_pop("val").alias("stddev_val"),
+    )
+
+
+def with_raster_stats(rasters: DataFrame) -> DataFrame:
+    """Each raster row plus its statistics excluding NODATA cells:
+    ``n_cells``, ``min_val``, ``max_val``, ``mean_val``.
+
+    The sum folds left to right from 0.0, the order ``avg`` in
+    ``raster_stats`` takes over a one-row raster, so both forms give the
+    same bits. An all-NODATA row keeps ``n_cells`` = 0 with null
+    min/max/mean (``raster_stats`` emits no row for it)."""
+    # the valid cells are staged once, not re-filtered for each stat
+    staged = rasters.select(
+        "*", F.filter("cells", lambda v: v != F.col("nodata_value")).alias("_valid")
+    )
+    valid = F.col("_valid")
+    n = F.size(valid)
+    total = F.aggregate(valid, F.lit(0.0), lambda acc, v: acc + v)
+    return staged.select(
+        *rasters.columns,
+        n.alias("n_cells"),
+        F.array_min(valid).alias("min_val"),
+        F.array_max(valid).alias("max_val"),
+        F.when(n > 0, total / n).alias("mean_val"),
     )
 
 
@@ -136,7 +166,9 @@ def clip_to_bbox(
 def clip_to_polygon(rasters: DataFrame, wkt_col: Column | str) -> DataFrame:
     """ClippingGeometry semantics: mask cells whose centers fall outside
     the polygon to NODATA. The raster keeps its full extent and cell
-    count; it is not cropped to the polygon's bbox.
+    count; it is not cropped to the polygon's bbox. A row whose polygon
+    is null (no regions file, or a region without geometry) passes
+    through unmasked.
 
     The point-in-polygon test is an Arrow-batched pandas UDF over the
     cells array; everything around it stays columnar.
@@ -150,7 +182,11 @@ def clip_to_polygon(rasters: DataFrame, wkt_col: Column | str) -> DataFrame:
             # dict records, not itertuples: pandas mangles leading-
             # underscore field names in namedtuples.
             for row in pdf.to_dict("records"):
-                rings = parse_wkt_polygon(row["_wkt"])
+                wkt = row.pop("_wkt")
+                if wkt is None:
+                    out_rows.append(row)
+                    continue
+                rings = parse_wkt_polygon(wkt)
                 w, h, cs = row["width"], row["height"], row["cellsize"]
                 ytop = row["yllcorner"] + h * cs
                 cc, rr = np.meshgrid(np.arange(w), np.arange(h))
@@ -159,7 +195,6 @@ def clip_to_polygon(rasters: DataFrame, wkt_col: Column | str) -> DataFrame:
                 inside = points_in_polygon(xs, ys, rings)
                 cells = np.asarray(row["cells"], dtype=np.float64)
                 row["cells"] = np.where(inside, cells, row["nodata_value"]).tolist()
-                del row["_wkt"]
                 out_rows.append(row)
             yield pd.DataFrame(out_rows)
 

@@ -186,7 +186,6 @@ def write_partitioned_parquet(
     df: DataFrame,
     out_dir: str,
     partition_cols: list[str],
-    dynamic_overwrite: bool = True,
     target_file_rows: int | None = None,
 ) -> None:
     """Land results as hive-partitioned parquet — the operational sink
@@ -197,7 +196,8 @@ def write_partitioned_parquet(
       pushdown this engine asserts in test_plan_shapes).
     - dynamic partition overwrite replaces ONLY the partitions present
       in ``df`` — an idempotent daily/region backfill never truncates
-      sibling partitions (static mode, the default in Spark, would).
+      sibling partitions (static mode, the default in Spark, would). It
+      is a per-write option; the session's conf is left as it was.
     - ``target_file_rows`` bounds BOTH ends of file sizing: repartition
       by the partition columns collapses the fan-in (without it every
       upstream task writes a file into every partition it touches — the
@@ -205,16 +205,18 @@ def write_partitioned_parquet(
       makes the writer roll a new file every ``target_file_rows`` rows,
       so one-task-per-partition can't produce one giant file either.
     """
-    spark = df.sparkSession
-    if dynamic_overwrite:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     writer = df.write
     if target_file_rows:
         writer = (
             df.repartition(*partition_cols)
             .write.option("maxRecordsPerFile", int(target_file_rows))
         )
-    writer.mode("overwrite").partitionBy(*partition_cols).parquet(out_dir)
+    (
+        writer.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(out_dir)
+    )
 
 
 def compact_parquet(

@@ -58,7 +58,11 @@ _HEADER_KEYS = {
 
 
 def parse_asc_bytes(path: str, content: bytes, crs: str | None) -> dict:
-    """Decode one Esri ASCII grid into a raster-struct row dict."""
+    """Decode one Esri ASCII grid into a raster-struct row dict.
+
+    A ``nan`` cell reads as the grid's ``NODATA_value``: the cells array
+    holds no nulls, and Arrow would turn a NaN inside it into one. A
+    grid whose ``NODATA_value`` is itself NaN raises ``ValueError``."""
     text = content.decode("ascii", errors="strict")
     header: dict[str, float] = {}
     lines = text.splitlines()
@@ -74,6 +78,8 @@ def parse_asc_bytes(path: str, content: bytes, crs: str | None) -> dict:
     nrows = int(header["nrows"])
     cellsize = header["cellsize"]
     nodata = header.get("nodata_value", -9999.0)
+    if nodata != nodata:
+        raise ValueError(f"{path}: NODATA_value is NaN")
     # centers -> corners normalization (both header variants are legal)
     if "xllcenter" in header:
         xll = header["xllcenter"] - cellsize / 2.0
@@ -83,7 +89,11 @@ def parse_asc_bytes(path: str, content: bytes, crs: str | None) -> dict:
         yll = header["yllcenter"] - cellsize / 2.0
     else:
         yll = header["yllcorner"]
-    cells = [float(v) for line in lines[body_start:] for v in line.split()]
+    cells = [
+        c if c == c else nodata  # NaN -> NODATA
+        for line in lines[body_start:]
+        for c in map(float, line.split())
+    ]
     if len(cells) != ncols * nrows:
         raise ValueError(
             f"{path}: expected {ncols * nrows} cells, found {len(cells)}"

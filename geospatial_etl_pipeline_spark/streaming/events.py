@@ -243,7 +243,8 @@ def stream_to_partitioned_parquet(
 ) -> None:
     """Land a stream as hive-partitioned parquet via ``foreachBatch``,
     EXACTLY-ONCE: the layout is partitioned by (batch_id, *partition_cols)
-    and each micro-batch writes with DYNAMIC partition overwrite, so a
+    and each micro-batch writes with DYNAMIC partition overwrite (a
+    per-write option; the session conf is not touched), so a
     replay of batch N (failure after some task files committed but before
     the checkpoint advanced) overwrites exactly the batch_id=N partitions
     it had written instead of appending duplicates — checkpoint resume +
@@ -268,12 +269,10 @@ def stream_to_partitioned_parquet(
     NEW checkpoints (an existing checkpoint keeps its frozen count)."""
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
         (
             batch_df.withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id", *partition_cols)
             .parquet(out_dir)
         )

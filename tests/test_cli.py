@@ -9,7 +9,7 @@ import zipfile
 import pytest
 
 from geospatial_etl_pipeline_spark import cli
-from geospatial_etl_pipeline_spark.sources.asc import write_asc
+from geospatial_etl_pipeline_spark.sources.asc import read_asc, write_asc
 
 
 @pytest.fixture(scope="module")
@@ -84,3 +84,18 @@ def test_cli_passthrough_without_regions(spark, io_dirs):
     result = cli.run(spark, str(src), out2)
     assert result["products"] == 2  # one pseudo-region, no clip
     assert result["zips"] == 2
+
+
+def test_build_products_decodes_and_clips_once(spark, io_dirs):
+    """One pass per product: the stats come from the clipped row itself,
+    so the executed plan holds one decode and one clip ``MapInPandas``
+    (a stats self-join would repeat both on its other side)."""
+    src, _, regions = io_dirs
+    products = cli.build_products(
+        spark, read_asc(spark, str(src)), cli.load_regions(spark, str(regions))
+    )
+    plan = products._jdf.queryExecution().executedPlan().toString()
+    nodes = [ln for ln in plan.splitlines() if "MapInPandas" in ln]
+    assert len(nodes) == 2, plan
+    assert sum("decode(" in ln for ln in nodes) == 1
+    assert sum("mask(" in ln for ln in nodes) == 1

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import math
 import struct
 
 import pytest
@@ -12,6 +13,7 @@ from geospatial_etl_pipeline_spark.operators.raster import (
     clip_to_polygon,
     raster_stats,
     resample_nearest,
+    with_raster_stats,
 )
 from geospatial_etl_pipeline_spark.sources.asc import read_asc, write_asc
 
@@ -95,7 +97,14 @@ def test_clip_to_polygon_masks_outside(spark, rasters):
     # triangle covering the lower-left half (y < x): cell centers with
     # ycenter < xcenter stay, everything else -> NODATA
     tri = "POLYGON((0 0, 10 0, 10 10, 0 0))"
-    out = clip_to_polygon(big.withColumn("wkt", F.lit(tri)), "wkt").collect()[0]
+    inputs = big.withColumn("wkt", F.lit(tri)).unionByName(
+        big.withColumn("base_name", F.lit("no_polygon"))
+        .withColumn("wkt", F.lit(None).cast("string"))
+    )
+    rows = {r["base_name"]: r for r in clip_to_polygon(inputs, "wkt").collect()}
+    # a null polygon passes the raster through unmasked
+    assert rows["no_polygon"]["cells"] == [float(v) for v in range(100)]
+    out = rows["grid_02_a_b_mean_monthly7"]
     kept = [v for v in out["cells"] if v != -9999.0]
     # 45 centers strictly below the diagonal + 10 centers exactly ON the
     # diagonal (ray-cast even-odd counts these inside for this edge
@@ -105,6 +114,91 @@ def test_clip_to_polygon_masks_outside(spark, rasters):
     assert out["cells"][0] == -9999.0
     # cell (row 9, col 9): center (9.5, 0.5) inside
     assert out["cells"][99] == 99.0
+
+
+def _same(a, b) -> bool:
+    """Equal, including the sign of zero; None only matches None."""
+    if a is None or b is None:
+        return a is None and b is None
+    return a == b and math.copysign(1.0, a) == math.copysign(1.0, b)
+
+
+def test_row_stats_equal_grouped_stats(spark, rasters, tmp_path):
+    """with_raster_stats (one pass per row) equals raster_stats (explode
+    + groupBy) bit for bit, and keeps the all-NODATA rows raster_stats
+    drops with n_cells = 0 and null min/max/mean."""
+    from pyspark.sql import functions as F
+
+    d = tmp_path / "grids"
+    d.mkdir()
+    # negative values with long decimals: the mean depends on the
+    # summation order
+    write_asc(str(d / "negative.asc"), 6, 5,
+              [(i * 7919 % 113) * -0.37 + 11.3 for i in range(30)])
+    # a maximum and a minimum that are zeros of both signs
+    write_asc(str(d / "zero_max.asc"), 3, 2, [-0.0, 0.0, -1.25, 0.0, -0.0, -3.5])
+    write_asc(str(d / "zero_min.asc"), 2, 2, [-0.0, 0.0, 2.5, 1.0])
+    write_asc(str(d / "all_nodata.asc"), 3, 3, [-9999.0] * 9)
+    extra = read_asc(spark, str(d), crs="EPSG:27200")
+    polygons = spark.createDataFrame(
+        [("tri", "POLYGON((0 0, 10 0, 10 10, 0 0))"),
+         ("miss", "POLYGON((100 100, 110 100, 110 110, 100 100))"),
+         ("none", None)],
+        "region string, wkt string",
+    )
+    fanout = rasters.unionByName(extra).crossJoin(polygons).withColumn(
+        "base_name", F.concat_ws("#", "base_name", "region")
+    ).drop("region")
+    clipped = clip_to_polygon(fanout, "wkt").cache()
+    grouped = {r["base_name"]: r for r in raster_stats(clipped).collect()}
+    rows = {r["base_name"]: r for r in with_raster_stats(clipped).collect()}
+    clipped.unpersist()
+
+    assert len(rows) == 6 * 3
+    empty = {n for n in rows if n.startswith("all_nodata#") or n.endswith("#miss")}
+    assert set(grouped) == set(rows) - empty
+    for name in empty:
+        row = rows[name]
+        assert row["n_cells"] == 0
+        assert row["min_val"] is row["max_val"] is row["mean_val"] is None
+    for name, g in grouped.items():
+        row = rows[name]
+        assert row["n_cells"] == g["n_cells"] > 0, name
+        for col in ("min_val", "max_val", "mean_val"):
+            assert _same(row[col], g[col]), (name, col, row[col], g[col])
+    assert rows["negative#none"]["min_val"] < 0
+    assert rows["zero_max#none"]["max_val"] == 0.0
+    assert rows["zero_min#none"]["min_val"] == 0.0
+
+
+def test_read_asc_nan_cells_are_nodata(spark, tmp_path):
+    """A nan cell reads as NODATA: the grid decodes, clips, and its
+    stats leave that cell out. A NaN NODATA_value is refused."""
+    from pyspark.sql import functions as F
+
+    from geospatial_etl_pipeline_spark.sources.asc import asc_text, parse_asc_bytes
+
+    d = tmp_path / "nan_grid"
+    d.mkdir()
+    cells = [float(v) for v in range(1, 17)]
+    cells[5] = float("nan")
+    write_asc(str(d / "with_nan.asc"), 4, 4, cells)
+    grid = read_asc(spark, str(d))
+    row = grid.collect()[0]
+    assert row["cells"] == cells[:5] + [-9999.0] + cells[6:]
+
+    whole = "POLYGON((0 0, 4 0, 4 4, 0 4, 0 0))"
+    clipped = clip_to_polygon(grid.withColumn("wkt", F.lit(whole)), "wkt")
+    assert clipped.collect()[0]["cells"] == row["cells"]
+    s = raster_stats(clipped).collect()[0]
+    assert s["n_cells"] == 15
+    assert (s["min_val"], s["max_val"]) == (1.0, 16.0)
+    assert s["mean_val"] == pytest.approx((136 - 6) / 15)
+    assert with_raster_stats(clipped).collect()[0]["n_cells"] == 15
+
+    text = asc_text(2, 1, [1.0, 2.0], nodata=float("nan")).encode()
+    with pytest.raises(ValueError, match="grid_x.asc"):
+        parse_asc_bytes("/data/grid_x.asc", text, None)
 
 
 def test_resample_nearest(rasters):

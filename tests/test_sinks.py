@@ -209,6 +209,8 @@ def test_write_partitioned_parquet_dynamic_overwrite(spark, tmp_path):
         write_partitioned_parquet,
     )
 
+    key = "spark.sql.sources.partitionOverwriteMode"
+    mode_before = spark.conf.get(key)
     out = str(tmp_path / "part_out")
     df1 = spark.range(100).withColumn("bucket", (F.col("id") % 2).cast("int"))
     write_partitioned_parquet(df1, out, ["bucket"])
@@ -221,6 +223,8 @@ def test_write_partitioned_parquet_dynamic_overwrite(spark, tmp_path):
     assert counts == {0: 10, 1: 50}
     # partition pruning visible to the reader: filter hits one directory
     assert back.filter("bucket = 1").count() == 50
+    # dynamic overwrite is a per-write option: the session conf is untouched
+    assert spark.conf.get(key) == mode_before
 
 
 def test_write_partitioned_parquet_target_file_rows(spark, tmp_path):

@@ -218,6 +218,8 @@ def test_stream_sink_replay_is_idempotent(spark, stream, tmp_path):
         stream_to_partitioned_parquet,
     )
 
+    key = "spark.sql.sources.partitionOverwriteMode"
+    mode_before = spark.conf.get(key)
     out = str(tmp_path / "landed")
     sel = stream.select("event_id", "event_type", "value")
     stream_to_partitioned_parquet(sel, out, ["event_type"],
@@ -228,6 +230,8 @@ def test_stream_sink_replay_is_idempotent(spark, stream, tmp_path):
     n2 = spark.read.parquet(out).count()
     assert n1 == n2
     assert spark.read.parquet(out).select("event_id").distinct().count() == n1
+    # dynamic overwrite is a per-write option: the session conf is untouched
+    assert spark.conf.get(key) == mode_before
 
 
 def test_stream_sink_restores_shuffle_partitions(spark, stream, tmp_path):
