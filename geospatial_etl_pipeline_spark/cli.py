@@ -20,7 +20,8 @@ Dataflow (DataFrame operators, not a file loop):
   product is decoded once and clipped once; no shuffle moves its cells.
 
 ``run`` issues several Spark jobs, not one: the products DataFrame is
-cached and counted (``--strict`` adds a grid count and a region count),
+cached and counted (``--strict`` adds a grid count, which lists the
+files without reading them, and a region count),
 then the zip sink, the metadata sink, the upload manifest (write plus a
 10-row sample) and the upload each run their own jobs over it.
 perfbench's etl_grids job (strict, 96 products, bucket and upload)

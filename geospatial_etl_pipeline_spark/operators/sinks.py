@@ -28,27 +28,22 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 
 
-def write_product_zips(
-    files: DataFrame,
-    out_dir: str,
-    name_col: str = "base_name",
-    path_col: str = "path",
-    content_col: str = "content",
-) -> int:
+def write_product_zips(files: DataFrame, out_dir: str) -> int:
     """Bundle (base_name, [files...]) -> ``{out_dir}/{base_name}.zip``.
 
-    Input: one row per sidecar file with its bytes. Lock files are
-    excluded (copy_esrigrid…py:331–333). Files are zipped in sorted-path
-    order so archives are byte-reproducible. Returns #zips written.
+    Input: one ``(base_name, path, content)`` row per sidecar file with
+    its bytes. Lock files are excluded (copy_esrigrid…py:331–333). Files
+    are zipped in sorted-path order so archives are byte-reproducible.
+    Returns #zips written.
 
-    Scale shape: ``repartition(name_col)`` co-locates every sidecar of a
-    product on one executor; each partition then zips its products
+    Scale shape: ``repartition("base_name")`` co-locates every sidecar of
+    a product on one executor; each partition then zips its products
     locally — embarrassingly parallel, no driver involvement.
     """
     os.makedirs(out_dir, exist_ok=True)
-    filtered = files.filter(~files[path_col].endswith(".lock"))
-    staged = filtered.repartition(name_col).sortWithinPartitions(
-        name_col, path_col
+    filtered = files.filter(~files["path"].endswith(".lock"))
+    staged = filtered.repartition("base_name").sortWithinPartitions(
+        "base_name", "path"
     )
 
     def zip_partition(rows: Iterator) -> Iterator:
@@ -56,7 +51,7 @@ def write_product_zips(
         zf = None
         n = 0
         for row in rows:
-            base = row[name_col]
+            base = row["base_name"]
             if base != current:
                 if zf is not None:
                     zf.close()
@@ -66,7 +61,7 @@ def write_product_zips(
                     zipfile.ZIP_DEFLATED,
                 )
                 n += 1
-            zf.writestr(os.path.basename(row[path_col]), bytes(row[content_col]))
+            zf.writestr(os.path.basename(row["path"]), bytes(row["content"]))
         if zf is not None:
             zf.close()
         yield n
@@ -75,25 +70,20 @@ def write_product_zips(
     return sum(counts)
 
 
-def write_metadata_json(
-    docs: DataFrame,
-    out_dir: str,
-    name_col: str = "product_name",
-    json_col: str = "metadata_json",
-    indent: int = 4,
-) -> int:
-    """One ``{out_dir}/{product}.json`` per row, pretty-printed with
-    ``indent=4`` exactly like the reference (copy_esrigrid…py:496–498).
-    Returns #documents written."""
+def write_metadata_json(docs: DataFrame, out_dir: str) -> int:
+    """One ``{out_dir}/{product_name}.json`` per ``(product_name,
+    metadata_json)`` row, pretty-printed with ``indent=4`` exactly like
+    the reference (copy_esrigrid…py:496–498). Returns #documents
+    written."""
     os.makedirs(out_dir, exist_ok=True)
 
     def dump_partition(rows: Iterator) -> Iterator:
         n = 0
         for row in rows:
-            doc = json.loads(row[json_col])
-            path = os.path.join(out_dir, f"{row[name_col]}.json")
+            doc = json.loads(row["metadata_json"])
+            path = os.path.join(out_dir, f"{row['product_name']}.json")
             with open(path, "w") as f:
-                json.dump(doc, f, indent=indent)
+                json.dump(doc, f, indent=4)
             n += 1
         yield n
 
@@ -113,7 +103,6 @@ def upload_artifacts(
     spark,
     src_dir: str,
     dest_base: str,
-    suffix: str = ".zip",
     tolerate_missing: bool = True,
 ) -> dict:
     """Object-store upload through the Hadoop FileSystem API — the real
@@ -125,7 +114,9 @@ def upload_artifacts(
     test proves the path end-to-end in a sandbox with no object store:
     same calls, same copy, same overwrite semantics, different scheme.
 
-    Reference parity: ``*.lock`` artifacts are excluded (:331–333), a
+    Only the ``*.zip`` artifacts are copied; ``*.lock`` files are
+    counted as skipped. Reference parity: ``*.lock`` artifacts are
+    excluded (:331–333), a
     source directory that is absent or empty is tolerated when
     ``tolerate_missing`` (the reference's permissive mode, :77–92 —
     a pipeline stage that produced nothing must not fail the upload
@@ -159,7 +150,7 @@ def upload_artifacts(
         if name.endswith(".lock"):
             skipped_lock += 1
             continue
-        if suffix and not name.endswith(suffix):
+        if not name.endswith(".zip"):
             continue
         src = os.path.join(src_dir, name)
         ok = jvm.org.apache.hadoop.fs.FileUtil.copy(

@@ -10,6 +10,10 @@ every setting is chosen to survive a 1000-executor cluster:
 - Arrow enabled so any pandas-UDF path is vectorized batch transfer.
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle and are cluster-invariant.
+- ``spark.sql.legacy.parquet.nanosAsLong`` on, so a parquet
+  TIMESTAMP(NANOS) column reads as ``bigint`` nanos instead of failing
+  the read (``sources.tables.normalize_event_ts`` turns it into a
+  timestamp). It is session policy: no loader sets it.
 """
 
 from __future__ import annotations
@@ -26,6 +30,7 @@ def get_spark(app_name: str = "geospatial-etl-pipeline-spark") -> SparkSession:
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -41,4 +46,5 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
     """Pin the confs that affect result *values* (not speed) on a session
     we did not build — e.g. the driver's. Idempotent, value-safe only."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return spark

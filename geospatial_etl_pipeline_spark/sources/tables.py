@@ -64,7 +64,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     if name == "events":
-        return _load_events(spark, sf_dir)
+        return normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
@@ -74,7 +74,8 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     regenerations:
 
     - TIMESTAMP(NANOS): Spark's reader rejects it; with
-      ``spark.sql.legacy.parquet.nanosAsLong`` it surfaces as ``bigint``
+      ``spark.sql.legacy.parquet.nanosAsLong`` (session policy, set by
+      ``session.get_spark`` and ``tune_for_oracle``) it surfaces as ``bigint``
       nanos, which we integer-truncate to micros (integer division only:
       raw nanos exceed 2**53 and would lose precision through a double) —
       matching DuckDB's reader, so oracle comparisons see the same
@@ -91,11 +92,6 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     if dtype is not None and dtype != "timestamp":
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -32,7 +32,6 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ts`` normalizer as the batch loader (nanos-as-long, TIMESTAMP_NTZ,
     or plain TIMESTAMP all handled), so stream and batch see identical
     instants whatever encoding the current testdata uses."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     raw = (
         spark.readStream.format("parquet")

@@ -86,16 +86,26 @@ def test_cli_passthrough_without_regions(spark, io_dirs):
     assert result["zips"] == 2
 
 
-def test_build_products_decodes_and_clips_once(spark, io_dirs):
-    """One pass per product: the stats come from the clipped row itself,
-    so the executed plan holds one decode and one clip ``MapInPandas``
-    (a stats self-join would repeat both on its other side)."""
+def test_build_products_crosses_python_once(spark, io_dirs):
+    """The decode runs in the JVM and the stats come from the clipped
+    row itself, so the executed plan of ``build_products`` holds one
+    ``MapInPandas``, the clip's, and ``read_asc``'s holds none. Counting
+    the grids reads no file content."""
     src, _, regions = io_dirs
+    rasters = read_asc(spark, str(src))
+    read_plan = rasters._jdf.queryExecution().executedPlan().toString()
+    for node in ("MapInPandas", "BatchEvalPython", "ArrowEvalPython"):
+        assert node not in read_plan, read_plan
+    assert read_plan.count("decode(") == 1, read_plan
+    count_plan = (
+        rasters.groupBy().count()._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "ReadSchema: struct<>" in count_plan, count_plan
+
     products = cli.build_products(
-        spark, read_asc(spark, str(src)), cli.load_regions(spark, str(regions))
+        spark, rasters, cli.load_regions(spark, str(regions))
     )
     plan = products._jdf.queryExecution().executedPlan().toString()
     nodes = [ln for ln in plan.splitlines() if "MapInPandas" in ln]
-    assert len(nodes) == 2, plan
-    assert sum("decode(" in ln for ln in nodes) == 1
-    assert sum("mask(" in ln for ln in nodes) == 1
+    assert len(nodes) == 1, plan
+    assert "mask(" in nodes[0]

@@ -28,6 +28,21 @@ def test_events_ts_is_plain_timestamp(spark, sf):
     df.selectExpr("unix_micros(ts)").limit(1).collect()
 
 
+def test_event_loaders_leave_session_conf_unchanged(spark):
+    """A batch events load and a stream_events call write no session
+    conf: reading TIMESTAMP(NANOS) as bigint is session policy
+    (session.get_spark), not something a loader switches on."""
+    from geospatial_etl_pipeline_spark.streaming.events import stream_events
+
+    session = spark.newSession()
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before, conf_before = session.conf.get(key), session.conf.getAll
+    load_table(session, SF_SMOKE, "events").limit(1).collect()
+    stream_events(session, SF_SMOKE)
+    assert session.conf.get(key) == before
+    assert session.conf.getAll == conf_before
+
+
 def test_all_tables_load(spark):
     for name in TABLES:
         df = load_table(spark, SF_SMOKE, name)

@@ -51,7 +51,32 @@ def _cog(row, **kw) -> bytes:
     )
 
 
-def test_read_asc_recursive_scan(rasters):
+# Hand-written headers the writer never produces: (file text, expected
+# (width, height, xllcorner, yllcorner, cellsize, nodata_value), cells).
+_ASC_EDGE_CASES = {
+    "nan_cell": (
+        "ncols 2\nnrows 2\nxllcorner 0\nyllcorner 0\ncellsize 1\n"
+        "NODATA_value -1\n1 nan\nNaN 4\n",
+        (2, 2, 0.0, 0.0, 1.0, -1.0), [1.0, -1.0, -1.0, 4.0],
+    ),
+    "centre_mixed_case": (
+        "NCOLS 3\nNRows 1\nXllCenter 10.5\nyLLcenter 20.25\nCellSize 0.5\n"
+        "nodata_VALUE -99\n-0.0 3e2 1e-300\n",
+        (3, 1, 10.25, 20.0, 0.5, -99.0), [-0.0, 300.0, 1e-300],
+    ),
+    "no_nodata_no_final_newline": (
+        "ncols 2\nnrows 1\nxllcorner 1.5\nyllcorner -2\ncellsize 2\n7 -9999",
+        (2, 1, 1.5, -2.0, 2.0, -9999.0), [7.0, -9999.0],
+    ),
+    "crlf": (
+        "ncols 2\r\nnrows 2\r\nxllcorner 0\r\nyllcorner 0\r\ncellsize 1\r\n"
+        "NODATA_value -9999\r\n1 2\r\n3 4\r\n",
+        (2, 2, 0.0, 0.0, 1.0, -9999.0), [1.0, 2.0, 3.0, 4.0],
+    ),
+}
+
+
+def test_read_asc_recursive_scan(spark, rasters, tmp_path):
     rows = {r["base_name"]: r for r in rasters.collect()}
     assert set(rows) == {"grid_02_a_b_mean_monthly7", "small"}
     g = rows["grid_02_a_b_mean_monthly7"]
@@ -59,6 +84,19 @@ def test_read_asc_recursive_scan(rasters):
     assert g["cells"][0] == 0.0 and g["cells"][99] == 99.0
     assert g["crs"] == "EPSG:27200"
     assert rows["small"]["nodata_value"] == -9999.0
+
+    for name, (text, _, _) in _ASC_EDGE_CASES.items():
+        (tmp_path / f"{name}.asc").write_bytes(text.encode())
+    edge = {r["base_name"]: r for r in read_asc(spark, str(tmp_path)).collect()}
+    assert set(edge) == set(_ASC_EDGE_CASES)
+    fields = ("width", "height", "xllcorner", "yllcorner", "cellsize",
+              "nodata_value")
+    for name, (_, header, cells) in _ASC_EDGE_CASES.items():
+        row = edge[name]
+        assert row["path"] == str(tmp_path / f"{name}.asc")
+        assert tuple(row[f] for f in fields) == header, name
+        assert len(row["cells"]) == len(cells), name
+        assert all(map(_same, row["cells"], cells)), (name, row["cells"])
 
 
 def test_raster_stats_excludes_nodata(rasters):
@@ -171,12 +209,28 @@ def test_row_stats_equal_grouped_stats(spark, rasters, tmp_path):
     assert rows["zero_min#none"]["min_val"] == 0.0
 
 
+_MALFORMED_ASC = {
+    "short_body": ("ncols 2\nnrows 2\nxllcorner 0\nyllcorner 0\n"
+                   "cellsize 1\n1 2 3\n", "expected 4 cells, found 3"),
+    "nan_nodata": ("ncols 1\nnrows 1\nxllcorner 0\nyllcorner 0\n"
+                   "cellsize 1\nNODATA_value nan\n1\n", "NODATA_value is NaN"),
+    "no_ncols": ("nrows 1\nxllcorner 0\nyllcorner 0\ncellsize 1\n1\n",
+                 "header needs numeric ncols"),
+    "bad_nrows": ("ncols 1\nnrows one\nxllcorner 0\nyllcorner 0\n"
+                  "cellsize 1\n1\n", "header needs numeric ncols"),
+    "no_cellsize": ("ncols 1\nnrows 1\nxllcorner 0\nyllcorner 0\n1\n",
+                    "header needs numeric ncols"),
+    "bad_token": ("ncols 2\nnrows 1\nxllcorner 0\nyllcorner 0\n"
+                  "cellsize 1\n1 2x\n", "a cell is not a number"),
+}
+
+
 def test_read_asc_nan_cells_are_nodata(spark, tmp_path):
     """A nan cell reads as NODATA: the grid decodes, clips, and its
-    stats leave that cell out. A NaN NODATA_value is refused."""
+    stats leave that cell out. A malformed grid fails the job with its
+    file name in the message, whether ANSI mode is on or off."""
+    from pyspark.errors import SparkRuntimeException
     from pyspark.sql import functions as F
-
-    from geospatial_etl_pipeline_spark.sources.asc import asc_text, parse_asc_bytes
 
     d = tmp_path / "nan_grid"
     d.mkdir()
@@ -196,9 +250,18 @@ def test_read_asc_nan_cells_are_nodata(spark, tmp_path):
     assert s["mean_val"] == pytest.approx((136 - 6) / 15)
     assert with_raster_stats(clipped).collect()[0]["n_cells"] == 15
 
-    text = asc_text(2, 1, [1.0, 2.0], nodata=float("nan")).encode()
-    with pytest.raises(ValueError, match="grid_x.asc"):
-        parse_asc_bytes("/data/grid_x.asc", text, None)
+    non_ansi = spark.newSession()
+    non_ansi.conf.set("spark.sql.ansi.enabled", "false")
+    cases = [(spark, name, text, msg)
+             for name, (text, msg) in _MALFORMED_ASC.items()]
+    cases.append((non_ansi, "bad_token_non_ansi", *_MALFORMED_ASC["bad_token"]))
+    for session, name, text, msg in cases:
+        d = tmp_path / name
+        d.mkdir()
+        (d / f"{name}.asc").write_text(text)
+        with pytest.raises(SparkRuntimeException,
+                           match=f"{name}.asc: {msg}"):
+            read_asc(session, str(d)).collect()
 
 
 def test_resample_nearest(rasters):
