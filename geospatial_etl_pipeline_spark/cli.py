@@ -15,18 +15,19 @@ Dataflow (DataFrame operators, not a file loop):
   recursive .asc scan → decode (sources.asc) → × regions fan-out
   (broadcast; region "99" excluded, :271–273) → clip to region polygon
   (operators.raster) → sidecar stats from the clipped row itself → product
-  naming via lookup dims (:244–251, 292) → per-product zip + metadata
+  naming via map lookups (:244–251, 292) → per-product zip + metadata
   JSON (operators.sinks) → optional S3 URI targets (:377–406). Each
-  product is decoded once and clipped once; no shuffle moves its cells.
+  product is one row from the fan-out to its zip, carrying its region
+  and its name: it is decoded once and clipped once, and no shuffle
+  moves its cells.
 
-``run`` issues several Spark jobs, not one: the products DataFrame is
-cached and counted (``--strict`` adds a grid count, which lists the
-files without reading them, and a region count),
-then the zip sink, the metadata sink, the upload manifest (write plus a
-10-row sample) and the upload each run their own jobs over it.
-perfbench's etl_grids job (strict, 96 products, bucket and upload)
-issues 17 jobs in 21 stages, 17 of which run (the others are skipped),
-counted from Spark's event log.
+``run`` issues several Spark jobs, not one: one aggregate fills the
+products cache and counts the products with an unknown code, then the
+zip sink, the metadata sink and the upload manifest (write plus a
+10-row sample) each run their own job over it; the upload itself is a
+driver-side file copy. One strict ``run`` with a bucket and an upload
+issues 9 Spark jobs (counted under a job group, ``test_cli``), on
+perfbench's 96-product etl_grids job as on the 4-product test fixture.
 
 Regions come from a local CSV ``regc_code,region_name_ascii,wkt`` (the
 reference fetches a hosted feature layer over HTTPS at import time,
@@ -37,8 +38,8 @@ file the grids pass through unclipped under a single "New Zealand"
 pseudo-region.
 
 Unknown parameter/period codes: the reference raises KeyError
-(:248, 251); here unmatched inventory is dropped by the inner dim join
-and counted (permissive default), or fails fast with ``--strict``.
+(:248, 251); here such a product gets a null name, and is dropped
+(permissive default) or fails the run with ``--strict``.
 """
 
 from __future__ import annotations
@@ -57,6 +58,7 @@ from .functions.naming import (
     START_DATE,
     STOP_DATE,
     dim_df,
+    lookup,
     parse_base_name,
     product_name,
     region_title,
@@ -94,55 +96,37 @@ def build_products(
 ) -> DataFrame:
     """rasters × regions → clipped rasters with stats and product names.
 
-    Returns one row per (grid, region) product: raster struct columns +
-    n_cells/min/max/mean + product_name/region_name. A clip that masks
-    every cell keeps its row, with n_cells = 0 and null min/max/mean, so
-    strict mode counts it as a product."""
+    Returns one row per (grid, region) product: the grid's raster
+    columns, its region's ``regc_code``/``region_name_ascii``/``wkt``,
+    n_cells/min/max/mean and ``product_name``. The region rides on the
+    product's own row from the fan-out through the clip, so nothing is
+    split back out or joined again. A clip that masks every cell keeps
+    its row, with n_cells = 0 and null min/max/mean, so strict mode
+    counts it as a product. ``product_name`` is null when the grid's
+    parameter or period code is unknown, a too-short filename included
+    (the reference raises KeyError, :248, 251)."""
     regions = regions.filter(F.col("regc_code") != "99")  # :271–273
-
-    fanout = rasters.crossJoin(F.broadcast(regions)).withColumn(
-        "base_name", F.concat_ws("#", "base_name", "regc_code")
-    )
+    fanout = rasters.crossJoin(F.broadcast(regions))
     with_stats = with_raster_stats(clip_to_polygon(fanout, F.col("wkt")))
 
-    split = F.split("base_name", "#")
-    parsed = parse_base_name(F.element_at(split, 1))
-    named = with_stats.select(
-        "*",
-        F.element_at(split, 1).alias("grid_name"),
-        F.element_at(split, 2).alias("regc_code2"),
-        *[c.alias(n) for n, c in parsed.items()],
-    )
-    pdim = dim_df(spark, PARAMETER, "parameter_code", "parameter_name")
-    mdim = dim_df(spark, MONTH_SEASON, "period_key", "period_name")
-    named = (
-        named.join(F.broadcast(pdim), "parameter_code")
-        .join(F.broadcast(mdim), "period_key")
-        .join(
-            F.broadcast(
-                regions.select(
-                    F.col("regc_code").alias("regc_code2"),
-                    "region_name_ascii",
-                )
-            ),
-            "regc_code2",
-        )
-    )
-    return named.select(
-        "*",
+    parsed = parse_base_name(F.col("base_name"))
+    parameter = lookup(PARAMETER, parsed["parameter_code"])
+    period = lookup(MONTH_SEASON, parsed["period_key"])
+    name = F.when(
+        parameter.isNotNull() & period.isNotNull(),
         F.concat_ws(
             "_",
-            product_name(
-                F.col("parameter_name"), F.col("statistic"), F.col("period_name")
-            ),
+            product_name(parameter, parsed["statistic"], period),
             region_title(F.col("region_name_ascii")),
-        ).alias("product_name"),
+        ),
     )
+    return with_stats.select("*", name.alias("product_name"))
 
 
 def product_files(products: DataFrame) -> DataFrame:
-    """(base_name=product, path, content) rows: the clipped .asc grid and
-    its stats sidecar — the zip sink's input shape."""
+    """(base_name=product, files) rows, one per product: ``files`` holds
+    the COG, the clipped .asc grid and its stats sidecar as (path,
+    content) structs — the zip sink's input shape."""
 
     from .operators.geotiff import encode_cog as geotiff_bytes
 
@@ -175,22 +159,16 @@ def product_files(products: DataFrame) -> DataFrame:
                     },
                     indent=4,
                 )
-                out.append(
-                    {"base_name": name, "path": f"{name}.tif",
-                     "content": tif}
-                )
-                out.append(
-                    {"base_name": name, "path": f"{name}.asc",
-                     "content": grid.encode()}
-                )
-                out.append(
-                    {"base_name": name, "path": f"{name}.stats.json",
-                     "content": stats.encode()}
-                )
+                out.append({"base_name": name, "files": [
+                    {"path": f"{name}.tif", "content": tif},
+                    {"path": f"{name}.asc", "content": grid.encode()},
+                    {"path": f"{name}.stats.json", "content": stats.encode()},
+                ]})
             yield pd.DataFrame(out)
 
     return products.mapInPandas(
-        encode, "base_name string, path string, content binary"
+        encode,
+        "base_name string, files array<struct<path:string, content:binary>>",
     )
 
 
@@ -252,17 +230,20 @@ def run(
     manifest), matching a dry run."""
     rasters = read_asc(spark, file_folder, crs=crs)
     regions = load_regions(spark, regions_csv, regions_url)
-    products = build_products(spark, rasters, regions).cache()
+    cached = build_products(spark, rasters, regions).cache()
 
-    n_products = products.count()
-    if strict:
-        n_grids = rasters.count()
-        n_regions = regions.filter(F.col("regc_code") != "99").count()
-        if n_products != n_grids * n_regions:
-            raise ValueError(
-                f"strict mode: {n_grids * n_regions - n_products} grid×region "
-                "products dropped by unknown parameter/period codes"
-            )
+    # one aggregate fills the cache and counts the unnamed products
+    n_rows, n_dropped = cached.select(
+        F.count(F.lit(1)), F.count_if(F.col("product_name").isNull())
+    ).first()
+    if strict and n_dropped:
+        cached.unpersist()
+        raise ValueError(
+            f"strict mode: {n_dropped} grid×region "
+            "products dropped by unknown parameter/period codes"
+        )
+    products = cached.filter(F.col("product_name").isNotNull())
+    n_products = n_rows - n_dropped
 
     zip_dir = output_folder_zipped or os.path.join(output_folder, "zips")
     n_zips = write_product_zips(product_files(products), zip_dir)
@@ -296,7 +277,7 @@ def run(
         from .operators.sinks import upload_artifacts
 
         upload_result = upload_artifacts(spark, zip_dir, upload_fs_base)
-    products.unpersist()
+    cached.unpersist()
     return {
         "products": n_products,
         "zips": n_zips,

@@ -21,7 +21,9 @@ Naming semantics re-expressed as Spark columns:
 - region code ``"99"`` is skipped entirely (copy_esrigrid…py:271–273)
 
 Lookup probes in the reference raise KeyError on miss; the engine's
-equivalent is an inner broadcast join (drops misses) — SURVEY §2c note.
+``lookup`` returns NULL instead, so a product with an unknown code gets a
+NULL name that ``cli.run`` counts and drops (or fails on, ``--strict``)
+— SURVEY §2c note.
 """
 
 from __future__ import annotations
@@ -81,14 +83,26 @@ def dim_df(spark: SparkSession, d: dict[str, str], key: str, value: str) -> Data
     return literal_df(spark, sorted(d.items()), [key, value])
 
 
+def lookup(d: dict[str, str], key: Column) -> Column:
+    """``d[key]`` as a column, NULL for a key ``d`` lacks (or a NULL key):
+    ``try_element_at`` over a ``map(...)`` literal, one SQL expression, so
+    a lookup costs no join and no broadcast."""
+    from ..plans._util import sql_literal
+
+    pairs = ", ".join(
+        f"{sql_literal(k)}, {sql_literal(v)}" for k, v in sorted(d.items())
+    )
+    return F.try_element_at(F.expr(f"map({pairs})"), key)
+
+
 def parse_base_name(base: Column) -> dict[str, Column]:
     """Positional filename-schema parse (copy_esrigrid…py:244–251).
 
     try_element_at: a malformed (too-short) filename parses to NULL
-    fields and is dropped by the downstream inner dimension join — the
-    permissive-mode decision of SURVEY §2k.6 (the reference crashes
-    with IndexError/KeyError instead). ANSI element_at would throw on
-    the whole batch."""
+    fields, which ``lookup`` maps to a NULL name — the permissive-mode
+    decision of SURVEY §2k.6 (the reference crashes with
+    IndexError/KeyError instead). ANSI element_at would throw on the
+    whole batch."""
     parts = F.split(base, "_")
     return {
         "parameter_code": F.try_element_at(parts, F.lit(2)),

@@ -32,7 +32,6 @@ def connected_components(
     dst: str = "dst",
     node_col: str = "node",
     max_rounds: int = 25,
-    mode: str = "minlabel",
 ) -> DataFrame:
     """(node, component): component = MIN node id reachable from node
     (deterministic canonical labels; singletons label themselves).
@@ -41,30 +40,9 @@ def connected_components(
     symmetrized here); ``nodes`` supplies the full vertex set so
     isolated nodes appear in the output.
 
-    ``mode``:
-
-    - ``"minlabel"`` (default): one-hop label propagation — converges
-      in O(diameter) rounds. Right for near-dup graphs (dense clusters,
-      diameter 3–6) where the extra per-round join below costs more
-      than it saves.
-    - ``"doubling"``: each round ALSO pointer-jumps every label through
-      the label table (component := min(component, label(component)) —
-      q232/transitive_closure's doubling idea applied to labels), so
-      label information travels 2^r hops after r rounds and a
-      diameter-L chain converges in O(log L) rounds instead of L. Right
-      for adversarial chain/path-shaped graphs (q248-style forget
-      sweeps) where min-label would hit the round cap. Identical output
-      by construction: both modes stop at the same fixpoint (labels
-      constant across every edge ⇒ uniform per component ⇒ the
-      component minimum), property-tested equal in
-      tests/test_operators.py.
-
-    Raises RuntimeError if not converged within ``max_rounds`` (under
-    ``minlabel`` a chain longer than max_rounds — switch mode or raise
-    the cap; ``doubling`` needs ~log2(diameter) + 2).
+    Raises RuntimeError if not converged within ``max_rounds``: a chain
+    longer than ``max_rounds`` needs a higher cap.
     """
-    if mode not in ("minlabel", "doubling"):
-        raise ValueError(f"unknown mode {mode!r}: minlabel | doubling")
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # Materialize the (symmetrized) edge list ONCE before the loop:
     # ``edges`` may sit on an arbitrarily expensive upstream DAG (for
@@ -118,30 +96,6 @@ def connected_components(
                 F.max("_old").alias("_old"),
             )
         )
-        if mode == "doubling":
-            # pointer jump: component := min(component, label(component)).
-            # Every component value is itself an edge-endpoint node id
-            # (labels start as self and only ever adopt other endpoint
-            # ids via min), so the self-join hits; left+coalesce guards
-            # the invariant anyway. One labels-sized exchange per round
-            # buys O(log diameter) total rounds.
-            jump = new_labels.select(
-                F.col("node").alias("j_node"),
-                F.col("component").alias("j_comp"),
-            )
-            new_labels = (
-                new_labels.join(
-                    jump, new_labels["component"] == jump["j_node"], "left"
-                )
-                .select(
-                    "node",
-                    F.least(
-                        F.col("component"),
-                        F.coalesce(F.col("j_comp"), F.col("component")),
-                    ).alias("component"),
-                    "_old",
-                )
-            )
         # cut lineage every round; LAZY + the convergence count below
         # materializes the blocks in the same job (r13, the
         # transitive_closure fusion — checkpointing happens at the RDD
@@ -210,7 +164,6 @@ def transitive_closure(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 20,
-    rounds: int | None = None,
 ) -> DataFrame:
     """All reachability pairs (org, cur): cur strictly downstream of
     org along directed ``edges``. Pointer doubling — each round
@@ -225,54 +178,28 @@ def transitive_closure(
     memory — for functional graphs (out-degree ≤ 1, e.g. D8 flow) it
     is exactly Σ path lengths. Each round localCheckpoints: the
     join's lineage would otherwise double every iteration too.
-
-    ``rounds``: run exactly that many composition rounds with NO
-    convergence counting — the bounded-HORIZON form (rounds=r yields
-    all paths of length ≤ 2^r; rounds=1 is the two-hop relation). Use
-    it when the horizon IS the semantics. As a perf lever it usually
-    loses: it skips one tiny count job per round but keeps composing
-    after convergence, and late rounds self-join the full closure —
-    measured on q232, the structural ≤101-path bound says 7 rounds
-    while the actual drainage closes in 1, making fixed-7 ~2× slower
-    than adaptive. An understated round count silently truncates.
     """
-    # one loop body for both modes — the composition step must never
-    # fork between the adaptive and fixed-rounds paths
-    adaptive = rounds is None
-    # r13 (guide §1.2 "remove passes", VERDICT r12 item 3): in adaptive
-    # mode the convergence count doubles as the checkpoint
-    # materializer — localCheckpoint(eager=False) marks the RDD and the
-    # count() that follows SYNCHRONOUSLY computes it (storing full rows:
-    # checkpointing happens at the RDD layer, below the count's column
-    # pruning), so each round costs ONE job where eager=True + count()
-    # cost two.  No consumer race: the count is the only action until
-    # the blocks exist.  Fixed-rounds mode has no count, so it keeps the
-    # EAGER checkpoint — lazy there would let the next round's self-join
-    # sides race the materialization and duplicate the compose work.
-    # Measured (q232 solo, min-of-4, interleaved ×2, sf-invariant
-    # grid): FLAT — 3.04/3.12 s fused vs 3.20/2.85 s split; the counts
-    # this removes ran on in-memory checkpoint blocks (~50 ms each).
-    # Kept for the halved per-round job count: the job boundary is the
-    # cost term that grows with scheduler latency on a real cluster,
-    # and the fusion costs nothing here.
+    # the convergence count doubles as the checkpoint materializer:
+    # localCheckpoint(eager=False) marks the RDD and the count() that
+    # follows computes it (storing full rows: checkpointing happens at
+    # the RDD layer, below the count's column pruning), so each round
+    # costs ONE job where eager=True + count() cost two. No consumer
+    # race: the count is the only action until the blocks exist.
     r = edges.select(
         F.col(src).alias("org"), F.col(dst).alias("cur")
-    ).distinct().localCheckpoint(eager=not adaptive)
-    n = r.count() if adaptive else None
-    for _ in range(max_rounds if adaptive else rounds):
+    ).distinct().localCheckpoint(eager=False)
+    n = r.count()
+    for _ in range(max_rounds):
         hop = (
             r.alias("a")
             .join(r.alias("b"), F.col("a.cur") == F.col("b.org"))
             .select(F.col("a.org").alias("org"), F.col("b.cur").alias("cur"))
         )
-        r = r.unionByName(hop).distinct().localCheckpoint(eager=not adaptive)
-        if adaptive:
-            new_n = r.count()
-            if new_n == n:
-                return r
-            n = new_n
-    if adaptive:
-        raise RuntimeError(
-            f"transitive_closure did not converge in {max_rounds} rounds"
-        )
-    return r
+        r = r.unionByName(hop).distinct().localCheckpoint(eager=False)
+        new_n = r.count()
+        if new_n == n:
+            return r
+        n = new_n
+    raise RuntimeError(
+        f"transitive_closure did not converge in {max_rounds} rounds"
+    )

@@ -40,7 +40,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.geometry import parse_wkt_polygon, points_in_polygon
-from ..sources.asc import RASTER_SCHEMA
 
 
 def raster_stats(rasters: DataFrame) -> DataFrame:
@@ -170,6 +169,11 @@ def clip_to_polygon(rasters: DataFrame, wkt_col: Column | str) -> DataFrame:
     is null (no regions file, or a region without geometry) passes
     through unmasked.
 
+    Every row keeps the caller's columns, with only ``cells`` rewritten,
+    so identity carried beside the raster (a region's code and name in
+    ``cli.build_products``) rides through the clip on the product's own
+    row.
+
     The point-in-polygon test is an Arrow-batched pandas UDF over the
     cells array; everything around it stays columnar.
     """
@@ -198,8 +202,7 @@ def clip_to_polygon(rasters: DataFrame, wkt_col: Column | str) -> DataFrame:
                 out_rows.append(row)
             yield pd.DataFrame(out_rows)
 
-    masked = with_poly.mapInPandas(mask, RASTER_SCHEMA)
-    return masked
+    return with_poly.mapInPandas(mask, rasters.schema)
 
 
 def resample_nearest(rasters: DataFrame, factor: int) -> DataFrame:

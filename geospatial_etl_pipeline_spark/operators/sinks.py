@@ -2,10 +2,11 @@
 
 Re-expresses copy_esrigrid…py's output stages as Spark sinks:
 
-- ``write_product_zips``: bundle every sidecar file sharing a product
-  basename into one zip, excluding ``*.lock`` (:315–346). Runs as
-  ``foreachPartition`` so each executor zips its own products in
-  parallel — the reference zips serially on one machine.
+- ``write_product_zips``: bundle a product's sidecar files into one zip,
+  excluding ``*.lock`` (:315–346). Each product is one row, zipped in
+  the task that holds it, so executors zip their own products in
+  parallel with no shuffle — the reference zips serially on one
+  machine.
 - ``write_metadata_json``: one pretty-printed JSON metadata document per
   product (:496–498, ``indent=4`` preserved).
 - ``upload_prefix``: the S3 destination URI builder (:377–406). Real
@@ -29,45 +30,31 @@ from pyspark.sql import DataFrame
 
 
 def write_product_zips(files: DataFrame, out_dir: str) -> int:
-    """Bundle (base_name, [files...]) -> ``{out_dir}/{base_name}.zip``.
+    """One ``{out_dir}/{base_name}.zip`` per ``(base_name, files)`` row,
+    ``files`` being ``array<struct<path, content>>``: a product and the
+    bytes of each of its sidecar files. Lock files are excluded
+    (copy_esrigrid…py:331–333). Members are zipped in sorted-path order
+    under their base names. Returns #zips written.
 
-    Input: one ``(base_name, path, content)`` row per sidecar file with
-    its bytes. Lock files are excluded (copy_esrigrid…py:331–333). Files
-    are zipped in sorted-path order so archives are byte-reproducible.
-    Returns #zips written.
-
-    Scale shape: ``repartition("base_name")`` co-locates every sidecar of
-    a product on one executor; each partition then zips its products
-    locally — embarrassingly parallel, no driver involvement.
-    """
+    Each row is zipped in the task that holds it: no shuffle, no driver
+    involvement, embarrassingly parallel."""
     os.makedirs(out_dir, exist_ok=True)
-    filtered = files.filter(~files["path"].endswith(".lock"))
-    staged = filtered.repartition("base_name").sortWithinPartitions(
-        "base_name", "path"
-    )
 
     def zip_partition(rows: Iterator) -> Iterator:
-        current = None
-        zf = None
         n = 0
         for row in rows:
-            base = row["base_name"]
-            if base != current:
-                if zf is not None:
-                    zf.close()
-                current = base
-                zf = zipfile.ZipFile(
-                    os.path.join(out_dir, f"{base}.zip"), "w",
-                    zipfile.ZIP_DEFLATED,
-                )
-                n += 1
-            zf.writestr(os.path.basename(row["path"]), bytes(row["content"]))
-        if zf is not None:
-            zf.close()
+            members = sorted(
+                (f for f in row["files"] if not f["path"].endswith(".lock")),
+                key=lambda f: f["path"],
+            )
+            path = os.path.join(out_dir, f"{row['base_name']}.zip")
+            with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
+                for f in members:
+                    zf.writestr(os.path.basename(f["path"]), bytes(f["content"]))
+            n += 1
         yield n
 
-    counts = staged.rdd.mapPartitions(zip_partition).collect()
-    return sum(counts)
+    return sum(files.rdd.mapPartitions(zip_partition).collect())
 
 
 def write_metadata_json(docs: DataFrame, out_dir: str) -> int:

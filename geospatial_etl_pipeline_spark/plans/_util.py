@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -125,28 +127,42 @@ def temb_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fan_out(temb(spark, sf_dir))
 
 
+def sql_literal(v: str | int | float) -> str:
+    """SQL text of a constant, typed and non-nullable as ``F.lit`` types
+    it: a str is a STRING (``\\`` and ``'`` escaped), an int an INT, or
+    a BIGINT outside the INT range, and a finite float a DOUBLE (the
+    ``D`` suffix: ``CAST(... AS DOUBLE)`` would make the column
+    nullable). A non-finite float raises ``ValueError``, any other type
+    ``TypeError``."""
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, bool):
+        raise TypeError(f"no SQL literal for {type(v).__name__}: {v!r}")
+    if isinstance(v, int):
+        return str(v) if -(2**31) <= v < 2**31 else f"{v}L"
+    if isinstance(v, float):
+        if not math.isfinite(v):
+            raise ValueError(f"no SQL literal for a non-finite float: {v!r}")
+        return f"{v!r}D"
+    raise TypeError(f"no SQL literal for {type(v).__name__}: {v!r}")
+
+
 def literal_df(spark: SparkSession, rows: list[tuple], cols: list[str]) -> DataFrame:
     """Broadcast-sized DataFrame from literal rows as a PURE-JVM plan.
 
     ``spark.createDataFrame(list)`` routes through a Python RDD
     (``applySchemaToPythonRDD``): every action that touches it launches
-    Python workers just to emit a dozen constant rows — measured as
-    multi-second nondeterministic stalls when several such dims appear
-    in one query (Python worker pool contention). ``range(1) +
-    explode(array(struct(lit...)))`` keeps the constants inside the JVM
-    plan: no Python, no RDD, constant-folded by Catalyst, and eligible
-    for broadcast like any other relation."""
-    arr = F.array(
-        *[
-            F.struct(*[F.lit(v).alias(c) for v, c in zip(row, cols)])
-            for row in rows
-        ]
+    Python workers just to emit a dozen constant rows. Here the rows are
+    one SQL expression, ``inline(array(named_struct(...), ...))`` over
+    ``range(1)``: no Python, no RDD, constant-folded by Catalyst, and one
+    py4j call to build, where a ``Column`` per value cost several."""
+    structs = ", ".join(
+        "named_struct("
+        + ", ".join(f"{sql_literal(c)}, {sql_literal(v)}" for v, c in zip(row, cols))
+        + ")"
+        for row in rows
     )
-    return (
-        spark.range(1)
-        .select(F.explode(arr).alias("_s"))
-        .select(*[F.col(f"_s.{c}").alias(c) for c in cols])
-    )
+    return spark.range(1).selectExpr(f"inline(array({structs}))")
 
 
 def dsum(col: Column | str) -> Column:

@@ -792,12 +792,9 @@ def q232_d8_flow_accumulation(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("j") * _W + F.col("i")).cast("bigint").alias("src"),
         F.col("tcell").alias("dst"),
     )
-    # adaptive doubling with convergence counts: the structural bound
-    # (val strictly decreases => path <= 101 => 7 rounds) is a worst
-    # case, but THIS drainage closes in 1 round — fixed-round mode
-    # would pay 6 pointless full-closure self-joins (measured 2x
-    # slower); the count check costs one tiny job per round and stops
-    # at the truth
+    # the structural bound (val strictly decreases => path <= 101 =>
+    # 7 rounds) is a worst case, but THIS drainage closes in 1 round:
+    # the closure's convergence count stops it there
     accum = transitive_closure(edges).groupBy(
         F.col("cur").alias("cell")
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n_up"))

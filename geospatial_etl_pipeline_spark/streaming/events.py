@@ -238,7 +238,6 @@ def stream_to_partitioned_parquet(
     out_dir: str,
     partition_cols: list[str],
     checkpoint_dir: str,
-    state_partitions: int | None = None,
 ) -> None:
     """Land a stream as hive-partitioned parquet via ``foreachBatch``,
     EXACTLY-ONCE: the layout is partitioned by (batch_id, *partition_cols)
@@ -252,20 +251,8 @@ def stream_to_partitioned_parquet(
     at-least-once (ADVICE r1). Readers still get partition pruning on
     ``partition_cols``; drop/ignore the leading ``batch_id`` column.
 
-    ``state_partitions`` (r13, measured): the stateful-operator
-    partition count is FROZEN into the checkpoint by the first batch —
-    it defaults to ``spark.sql.shuffle.partitions``, i.e. to a
-    CORE-count-shaped number, while the right size tracks STATE KEY
-    volume.  Every state partition pays a per-batch commit (delta file
-    create + fsync); profiled on the tumbling-count pipeline the 32
-    default commits cost 14–17 s of summed commitTimeMs per batch for
-    ≤ 13 rows of live state, and 8 partitions cut triggerExecution
-    ~2× (1.3 → 0.7 s/batch).  For watermark-bounded aggregations the
-    key space is O(windows-in-horizon × group cardinality) — tens of
-    keys at ANY corpus scale — so a small explicit count is the
-    scale-correct setting, not a local-mode constant.  Leave ``None``
-    for session default (unchanged behavior); the knob only applies to
-    NEW checkpoints (an existing checkpoint keeps its frozen count)."""
+    A stateful stream's checkpoint freezes its state partition count at
+    ``spark.sql.shuffle.partitions`` as of the first batch."""
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -276,24 +263,13 @@ def stream_to_partitioned_parquet(
             .parquet(out_dir)
         )
 
-    spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream_df.writeStream.foreachBatch(land)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if state_partitions is not None:
-            if prev is None:
-                spark.conf.unset("spark.sql.shuffle.partitions")
-            else:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q = (
+        stream_df.writeStream.foreachBatch(land)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
 
 def run_to_memory_sink(

@@ -109,3 +109,68 @@ def test_build_products_crosses_python_once(spark, io_dirs):
     nodes = [ln for ln in plan.splitlines() if "MapInPandas" in ln]
     assert len(nodes) == 1, plan
     assert "mask(" in nodes[0]
+    # the regions' broadcast for the fan-out is the only exchange: the
+    # region rides on its product's row and the names come from map
+    # lookups, not joins
+    assert plan.count("BroadcastExchange") == 1, plan
+
+
+def test_cli_run_job_count(spark, io_dirs, tmp_path):
+    """One strict ``cli.run`` with a bucket and an upload issues 9 Spark
+    jobs: the regions CSV's header and its broadcast, three that fill
+    the products cache and count it (adaptive execution runs the cache,
+    the partial and the final aggregate as jobs of their own), the zips,
+    the metadata documents, and the upload manifest and its sample."""
+    src, _, regions = io_dirs
+    sc = spark.sparkContext
+    sc.setJobGroup("test_cli_run_job_count", "one cli.run")
+    try:
+        cli.run(
+            spark, str(src), str(tmp_path / "out"),
+            regions_csv=str(regions), bucket_name="climate-bucket",
+            strict=True, upload_fs_base=f"file://{tmp_path / 'uploaded'}",
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("test_cli_run_job_count")
+    assert len(jobs) == 9, sorted(jobs)
+
+
+@pytest.fixture(scope="module")
+def unknown_codes_dir(tmp_path_factory):
+    """A valid grid beside a grid of unknown parameter (98), one of
+    unknown period (monthly13) and a filename too short to parse."""
+    src = tmp_path_factory.mktemp("unknown_in")
+    cells = [float(v % 7) for v in range(16)]
+    for stem in ("vcsn_01_x_y_mean_monthly2", "vcsn_98_x_y_mean_annual",
+                 "vcsn_02_x_y_mean_monthly13", "short"):
+        write_asc(str(src / f"{stem}.asc"), 4, 4, cells)
+    regions = src / "regions.csv"
+    regions.write_text(
+        "regc_code,region_name_ascii,wkt\n"
+        '01,Northland Region,"POLYGON((0 0, 4 0, 4 2, 0 2, 0 0))"\n'
+        '09,Wellington Region,"POLYGON((1 1, 3 1, 3 4, 1 4, 1 1))"\n'
+    )
+    return src, regions
+
+
+def test_cli_permissive_drops_unknown_codes(spark, unknown_codes_dir, tmp_path):
+    src, regions = unknown_codes_dir
+    out = tmp_path / "out"
+    result = cli.run(spark, str(src), str(out), regions_csv=str(regions),
+                     bucket_name="climate-bucket")
+    want = {f"Wet-Days-GT-1mm_mean_1991-2020_February_{r}"
+            for r in ("Northland", "Wellington")}
+    assert result["products"] == result["zips"] == 2
+    assert result["metadata_docs"] == result["n_upload_targets"] == 2
+    assert {z[: -len(".zip")] for z in os.listdir(out / "zips")} == want
+    assert {d[: -len(".json")] for d in os.listdir(out)
+            if d.endswith(".json")} == want
+
+
+def test_cli_strict_raises_on_unknown_codes(spark, unknown_codes_dir, tmp_path):
+    src, regions = unknown_codes_dir
+    with pytest.raises(ValueError, match="6 grid×region products dropped"):
+        cli.run(spark, str(src), str(tmp_path / "out"),
+                regions_csv=str(regions), strict=True)

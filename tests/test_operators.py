@@ -289,20 +289,11 @@ def test_connected_components_random_graphs(spark):
             for r in connected_components(e_df, n_df).collect()
         }
         assert got == want, f"trial {trial}"
-        # doubling mode: identical fixpoint, property-tested per graph
-        got_d = {
-            r["node"]: r["component"]
-            for r in connected_components(e_df, n_df, mode="doubling").collect()
-        }
-        assert got_d == want, f"trial {trial} (doubling)"
 
 
-def test_connected_components_doubling_beats_diameter(spark):
-    """A 60-node chain has diameter 59: min-label needs 59 rounds (so
-    it must FAIL a 12-round cap), while pointer doubling moves label
-    information 2^r hops by round r and converges well inside the same
-    cap — the q248-style adversarial-chain case the doubling mode
-    exists for."""
+def test_connected_components_raises_when_not_converged(spark):
+    """A 60-node chain has diameter 59: min-label needs 59 rounds, so a
+    12-round cap fails loudly instead of returning partial labels."""
     import pytest as _pytest
 
     from geospatial_etl_pipeline_spark.operators.graph import (
@@ -316,13 +307,6 @@ def test_connected_components_doubling_beats_diameter(spark):
     n_df = spark.createDataFrame([(i,) for i in range(n)], ["node"])
     with _pytest.raises(RuntimeError, match="did not converge"):
         connected_components(e_df, n_df, max_rounds=12)
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(
-            e_df, n_df, max_rounds=12, mode="doubling"
-        ).collect()
-    }
-    assert got == {i: 0 for i in range(n)}
 
 
 def test_spatial_bin_join_equals_quadratic(spark):
@@ -652,31 +636,3 @@ def test_transitive_closure_chain_tree_and_cycle(spark):
     cyc = spark.createDataFrame([(1, 2), (2, 1)], ["src", "dst"])
     got = {(r.org, r.cur) for r in transitive_closure(cyc).collect()}
     assert got == {(1, 2), (2, 1), (1, 1), (2, 2)}
-
-
-def test_transitive_closure_fixed_rounds_horizon(spark):
-    """rounds=r is the bounded-horizon form: all paths of length
-    <= 2^r, no convergence counting. On the chain 1->2->3->4->5,
-    rounds=1 yields exactly the <=2-hop pairs; rounds=3 the full
-    closure (2^3 >= diameter 4)."""
-    from geospatial_etl_pipeline_spark.operators.graph import (
-        transitive_closure,
-    )
-
-    chain = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5)], ["src", "dst"]
-    )
-    two_hop = {
-        (r.org, r.cur)
-        for r in transitive_closure(chain, rounds=1).collect()
-    }
-    assert two_hop == {
-        (1, 2), (2, 3), (3, 4), (4, 5), (1, 3), (2, 4), (3, 5)
-    }
-    full = {
-        (r.org, r.cur)
-        for r in transitive_closure(chain, rounds=3).collect()
-    }
-    assert full == {
-        (a, b) for a in range(1, 6) for b in range(a + 1, 6)
-    }

@@ -1121,3 +1121,45 @@ def test_r8_new_query_plan_budgets(spark):
         p = plan_text(catalog.QUERIES[name].fn(spark, SF))
         assert n_shuffles(p) <= budget, (name, n_shuffles(p))
         assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, name
+
+
+def test_literal_df_schema_matches_column_literals(spark):
+    """``literal_df`` is one SQL expression, typed as the ``F.lit``
+    builder it replaced typed each value: str → string, int → int or,
+    outside the int range, bigint, float → double, and every column
+    non-nullable. Quotes and backslashes survive; other types raise."""
+    import math
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import (
+        DoubleType, IntegerType, LongType, StringType, StructField, StructType,
+    )
+
+    from geospatial_etl_pipeline_spark.functions.naming import lookup
+    from geospatial_etl_pipeline_spark.plans._util import literal_df, sql_literal
+
+    rows = [
+        ("a'b", -1, 2**31, 1e-05),
+        ("c\\d\né", 2**31 - 1, -(2**31) - 1, -0.0),
+        ("", -(2**31), 5, 1e300),
+    ]
+    df = literal_df(spark, rows, ["s", "i", "l", "f"])
+    assert df.schema == StructType([
+        StructField("s", StringType(), False),
+        StructField("i", IntegerType(), False),
+        StructField("l", LongType(), False),
+        StructField("f", DoubleType(), False),
+    ])
+    got = [tuple(r) for r in df.collect()]
+    assert got == rows
+    assert math.copysign(1.0, got[1][3]) == -1.0
+
+    for bad in (True, None, b"x"):
+        with pytest.raises(TypeError):
+            sql_literal(bad)
+    with pytest.raises(ValueError):
+        sql_literal(float("nan"))
+
+    keys = spark.createDataFrame([("k'1",), ("k2",), (None,)], "k string")
+    names = keys.select(lookup({"k'1": "one", "k3": "three"}, F.col("k")))
+    assert [r[0] for r in names.collect()] == ["one", None, None]

@@ -12,32 +12,32 @@ from geospatial_etl_pipeline_spark.operators.sinks import (
 )
 
 
+_FILES = "base_name string, files array<struct<path:string, content:binary>>"
+
+
 def test_write_product_zips(spark, tmp_path):
     rows = [
-        ("prod_a", "/in/prod_a.asc", b"grid-a"),
-        ("prod_a", "/in/prod_a.prj", b"proj-a"),
-        ("prod_a", "/in/prod_a.lock", b"LOCK"),  # excluded
-        ("prod_b", "/in/prod_b.asc", b"grid-b"),
+        ("prod_a", [("/in/prod_a.prj", b"proj-a"),
+                    ("/in/prod_a.lock", b"LOCK"),  # excluded
+                    ("/in/prod_a.asc", b"grid-a")]),
+        ("prod_b", [("/in/prod_b.asc", b"grid-b")]),
     ]
-    df = spark.createDataFrame(rows, ["base_name", "path", "content"])
+    df = spark.createDataFrame(rows, _FILES)
     n = write_product_zips(df, str(tmp_path / "zips"))
     assert n == 2
     za = zipfile.ZipFile(tmp_path / "zips" / "prod_a.zip")
-    assert sorted(za.namelist()) == ["prod_a.asc", "prod_a.prj"]
+    # members in sorted-path order, lock file left out
+    assert za.namelist() == ["prod_a.asc", "prod_a.prj"]
     assert za.read("prod_a.asc") == b"grid-a"
     zb = zipfile.ZipFile(tmp_path / "zips" / "prod_b.zip")
     assert zb.namelist() == ["prod_b.asc"]
 
 
 def test_write_product_zips_idempotent(spark, tmp_path):
-    df = spark.createDataFrame(
-        [("p", "/x/p.asc", b"v1")], ["base_name", "path", "content"]
-    )
+    df = spark.createDataFrame([("p", [("/x/p.asc", b"v1")])], _FILES)
     out = str(tmp_path / "zips2")
     assert write_product_zips(df, out) == 1
-    df2 = spark.createDataFrame(
-        [("p", "/x/p.asc", b"v2")], ["base_name", "path", "content"]
-    )
+    df2 = spark.createDataFrame([("p", [("/x/p.asc", b"v2")])], _FILES)
     assert write_product_zips(df2, out) == 1  # overwrite, not append
     assert zipfile.ZipFile(f"{out}/p.zip").read("p.asc") == b"v2"
 

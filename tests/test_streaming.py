@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import hashlib
+
 import pytest
 
 from geospatial_etl_pipeline_spark.plans import catalog
@@ -234,35 +236,35 @@ def test_stream_sink_replay_is_idempotent(spark, stream, tmp_path):
     assert spark.conf.get(key) == mode_before
 
 
-def test_stream_sink_restores_shuffle_partitions(spark, stream, tmp_path):
-    """state_partitions pins spark.sql.shuffle.partitions for the run
-    only: afterwards the session conf reads as before, whether it was
-    unset or set."""
+def test_stream_sink_leaves_session_unchanged(spark, sf_dir, stream, tmp_path):
+    """An events load, a partitioned parquet write and a stream run on
+    one session leave its conf as it was, and a catalog query's result
+    hash the same before and after."""
+    from geospatial_etl_pipeline_spark.operators.sinks import (
+        write_partitioned_parquet,
+    )
+    from geospatial_etl_pipeline_spark.sources.tables import load_table
     from geospatial_etl_pipeline_spark.streaming.events import (
         stream_to_partitioned_parquet,
     )
 
-    key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(key, None)
-    try:
-        for i, before in enumerate([None, "7"]):
-            if before is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, before)
-            stream_to_partitioned_parquet(
-                stream.select("event_id", "event_type"),
-                str(tmp_path / f"landed{i}"),
-                ["event_type"],
-                str(tmp_path / f"ckpt{i}"),
-                state_partitions=3,
-            )
-            assert spark.conf.get(key, None) == before
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
+    query = catalog.QUERIES["q60_tumbling_window_counts"].fn
+
+    def result_hash() -> str:
+        rows = sorted(repr(tuple(r)) for r in query(spark, sf_dir).collect())
+        return hashlib.sha256("\n".join(rows).encode()).hexdigest()
+
+    conf_before, hash_before = spark.conf.getAll, result_hash()
+    events = load_table(spark, sf_dir, "events").select("event_id", "event_type")
+    write_partitioned_parquet(events, str(tmp_path / "batch"), ["event_type"])
+    stream_to_partitioned_parquet(
+        stream.select("event_id", "event_type"),
+        str(tmp_path / "landed"),
+        ["event_type"],
+        str(tmp_path / "ckpt"),
+    )
+    assert spark.conf.getAll == conf_before
+    assert result_hash() == hash_before
 
 
 def test_stream_static_enrichment(spark, sf_dir, stream):
