@@ -20,10 +20,11 @@ test:            ## full suite, no -x: the Tier-1 gate of ROADMAP.md
 	  timeout -k 10 2670 python -m pytest tests/ -q \
 	  --continue-on-collection-errors -p no:cacheprovider
 
-test-fast:       ## quick signal: catalog + loaders + plan shapes + the paper's own job + streams
+test-fast:       ## quick signal: catalog + loaders + plan shapes + the paper's own job + streams + the clip's kernels
 	python -m pytest tests/test_catalog.py tests/test_loader_schema.py \
 	  tests/test_plan_shapes.py tests/test_raster.py tests/test_cli.py \
-	  tests/test_sinks.py tests/test_streaming.py -q
+	  tests/test_sinks.py tests/test_streaming.py \
+	  tests/test_geometry_property.py -q
 
 parity:          ## driver-style oracle gate at sf0.01 (what the driver runs)
 	GEOETL_TEST_SF_DIR=/root/testdata/sf0.01 \

@@ -13,21 +13,32 @@ regardless of ``--regions_layer`` — SURVEY §2k.2; here both work):
 
 Dataflow (DataFrame operators, not a file loop):
   recursive .asc scan → decode (sources.asc) → × regions fan-out
-  (broadcast; region "99" excluded, :271–273) → clip to region polygon
-  (operators.raster) → sidecar stats from the clipped row itself → product
-  naming via map lookups (:244–251, 292) → per-product zip + metadata
-  JSON (operators.sinks) → optional S3 URI targets (:377–406). Each
-  product is one row from the fan-out to its zip, carrying its region
-  and its name: it is decoded once and clipped once, and no shuffle
-  moves its cells.
+  (broadcast; region "99" excluded, :271–273) → crop to the region
+  polygon's cell window and mask the cells outside it (operators.raster,
+  NO_MAINTAIN_EXTENT, :309) → sidecar stats from the clipped row itself
+  → product naming via map lookups (:244–251, 292) → per-product zip +
+  metadata JSON (operators.sinks) → optional S3 URI targets (:377–406).
+  Each product is one row from the fan-out to its zip, carrying its
+  region and its name: it is clipped once, and no shuffle moves its
+  cells. Each grid is decoded twice: once for its cells, and once more
+  in the scan the clip takes its masks' georeference from.
 
-``run`` issues several Spark jobs, not one: one aggregate fills the
-products cache and counts the products with an unknown code, then the
-zip sink, the metadata sink and the upload manifest (write plus a
-10-row sample) each run their own job over it; the upload itself is a
-driver-side file copy. One strict ``run`` with a bucket and an upload
-issues 9 Spark jobs (counted under a job group, ``test_cli``), on
-perfbench's 96-product etl_grids job as on the 4-product test fixture.
+``run`` issues several Spark jobs, not one. Three build the clip's
+masks: a second regions broadcast for the fan-out the masks are taken
+from, the distinct of its (georeference, polygon) pairs, and the masks'
+broadcast. One aggregate fills the products cache and counts the
+products with an unknown code. Then the zip sink, the metadata sink and
+the upload manifest (write plus a 10-row sample) each run their own job
+over it; the upload itself is a driver-side file copy. One strict
+``run`` with a bucket and an upload issues 12 Spark jobs (counted
+under a job group, ``test_cli``), on perfbench's 96-product etl_grids
+job as on the 4-product test fixture.
+
+A region whose polygon misses a grid still makes a product, counted in
+strict mode: the clip leaves it 0×0, so its zip holds a 0×0 ``.asc``, a
+0×0 ``.tif`` and stats with ``n_cells`` 0 and null min/max/mean, and its
+footprint is a point. ``operators.geotiff.decode_cog`` reads such a
+``.tif``; other TIFF readers may reject a zero-size image.
 
 Regions come from a local CSV ``regc_code,region_name_ascii,wkt`` (the
 reference fetches a hosted feature layer over HTTPS at import time,
@@ -150,14 +161,14 @@ def product_files(products: DataFrame) -> DataFrame:
                     row["xllcorner"], row["yllcorner"], row["cellsize"],
                     row["nodata_value"], row["crs"], list(row["cells"]),
                 )
+                # pandas reads a null stat as NaN: write it as null
+                stat = {
+                    k: None if pd.isna(row[c]) else row[c]
+                    for k, c in (("min", "min_val"), ("max", "max_val"),
+                                 ("mean", "mean_val"))
+                }
                 stats = json.dumps(
-                    {
-                        "n_cells": int(row["n_cells"]),
-                        "min": row["min_val"],
-                        "max": row["max_val"],
-                        "mean": row["mean_val"],
-                    },
-                    indent=4,
+                    {"n_cells": int(row["n_cells"]), **stat}, indent=4
                 )
                 out.append({"base_name": name, "files": [
                     {"path": f"{name}.tif", "content": tif},

@@ -121,6 +121,58 @@ def points_in_polygon(
     return acc
 
 
+def window_mask(
+    width: int, height: int, xll: float, yll: float, cellsize: float,
+    rings: list[np.ndarray],
+) -> tuple[int, int, int, int, np.ndarray]:
+    """The cell window of a grid that the polygon can cover, and the
+    even-odd inside-mask of the cell centres in that window.
+
+    Returns ``(c0, r0, nw, nh, mask)``: the window's first column and
+    row (row 0 is the grid's top row), its width and height, and a
+    row-major boolean mask of ``nw * nh`` cells. The window holds the
+    cells whose centres lie in the polygon's closed envelope
+    ``xmin <= x <= xmax``, ``ymin <= y <= ymax`` (widened to a crossing
+    that rounds past the vertices' x range), so it drops no cell that
+    ``points_in_polygon`` keeps, a centre on a horizontal bottom edge
+    included. A polygon that misses the grid gives the empty window
+    ``(0, 0, 0, 0)``.
+
+    The mask is a scanline fill: for each window row, the crossings
+    ``xint`` of every edge of every ring, computed as in
+    ``points_in_ring``, are sorted, and a centre is inside when an odd
+    number of them lie to its right. It equals ``points_in_polygon`` over
+    the same centres exactly, at O(E log E + nw log E) per row for E
+    edges instead of O(nw * E)."""
+    pts = np.vstack(rings)
+    ytop = yll + height * cellsize
+    # the centres points_in_polygon tests over the full grid
+    xs = xll + (np.arange(width) + 0.5) * cellsize
+    ys = ytop - (np.arange(height) + 0.5) * cellsize
+    # ys descends: skip the rows above ymax, keep those down to ymin
+    r0 = int(np.count_nonzero(ys > pts[:, 1].max()))
+    r1 = int(np.count_nonzero(ys >= pts[:, 1].min()))
+    x1, y1 = np.vstack([ring[:-1] for ring in rings]).T
+    x2, y2 = np.vstack([ring[1:] for ring in rings]).T
+    xints = []
+    for y in ys[r0:r1]:
+        crosses = (y1 > y) != (y2 > y)
+        a1, b1, a2, b2 = x1[crosses], y1[crosses], x2[crosses], y2[crosses]
+        xints.append(np.sort((a2 - a1) * (y - b1) / (b2 - b1) + a1))
+    # a crossing can round an ulp past the vertices' x range: widen to it
+    lo = min([pts[:, 0].min()] + [xi[0] for xi in xints if len(xi)])
+    hi = max([pts[:, 0].max()] + [xi[-1] for xi in xints if len(xi)])
+    c0 = int(np.searchsorted(xs, lo, side="left"))
+    c1 = int(np.searchsorted(xs, hi, side="right"))
+    if c1 <= c0 or r1 <= r0:
+        return 0, 0, 0, 0, np.zeros(0, dtype=bool)
+    wx = xs[c0:c1]
+    mask = np.empty((r1 - r0, c1 - c0), dtype=bool)
+    for i, xint in enumerate(xints):
+        mask[i] = (len(xint) - np.searchsorted(xint, wx, side="right")) % 2 == 1
+    return c0, r0, c1 - c0, r1 - r0, mask.ravel()
+
+
 # --------------------------------------------------------------------------
 # Projections
 # --------------------------------------------------------------------------

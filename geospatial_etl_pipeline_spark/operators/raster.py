@@ -13,9 +13,12 @@ as composable DataFrame transformations:
   (``tile``). On a one-row raster the two agree bit for bit.
 - ``clip_to_bbox``: extent clip with shrink-to-geometry
   (NO_MAINTAIN_EXTENT, :309) in pure JVM array expressions.
-- ``clip_to_polygon``: ClippingGeometry semantics (:307) — cell-center-
-  in-polygon masking to NODATA (the engine's defined clip contract,
-  SURVEY §7 hard-part 1) via an Arrow-batched pandas UDF.
+- ``clip_to_polygon``: ClippingGeometry semantics (:307) with
+  NO_MAINTAIN_EXTENT (:309) — crop to the polygon's cell window, then
+  mask cells whose centres fall outside it to NODATA (the engine's
+  defined clip contract, SURVEY §7 hard-part 1). The window and its mask
+  are built once per distinct (georeference, polygon) pair; the crop and
+  the mask are JVM array expressions.
 - ``resample_nearest``: cellSize="MINOF" resampling analogue (:300) in
   JVM expressions (nearest-neighbor decimation/replication).
 
@@ -34,12 +37,18 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    IntegerType,
+    StructField,
+    StructType,
+)
 
-from ..functions.geometry import parse_wkt_polygon, points_in_polygon
+from ..functions.geometry import parse_wkt_polygon, window_mask
 
 
 def raster_stats(rasters: DataFrame) -> DataFrame:
@@ -162,47 +171,85 @@ def clip_to_bbox(
     )
 
 
+_GEOREF = ("width", "height", "xllcorner", "yllcorner", "cellsize")
+
+
 def clip_to_polygon(rasters: DataFrame, wkt_col: Column | str) -> DataFrame:
-    """ClippingGeometry semantics: mask cells whose centers fall outside
-    the polygon to NODATA. The raster keeps its full extent and cell
-    count; it is not cropped to the polygon's bbox. A row whose polygon
-    is null (no regions file, or a region without geometry) passes
-    through unmasked.
+    """ClippingGeometry + NO_MAINTAIN_EXTENT (:303–310): crop each raster
+    to its polygon's cell window and mask the window's cells whose
+    centres fall outside the polygon to NODATA.
 
-    Every row keeps the caller's columns, with only ``cells`` rewritten,
-    so identity carried beside the raster (a region's code and name in
-    ``cli.build_products``) rides through the clip on the product's own
-    row.
+    The window is the cells whose centres lie in the polygon's closed
+    envelope (``functions.geometry.window_mask``): no cell the polygon
+    keeps falls outside it. ``width``, ``height``, ``xllcorner``,
+    ``yllcorner`` and ``cells`` are rewritten to the window; every other
+    column the caller passes rides through unchanged, so identity carried
+    beside the raster (a region's code and name in
+    ``cli.build_products``) stays on the product's own row.
 
-    The point-in-polygon test is an Arrow-batched pandas UDF over the
-    cells array; everything around it stays columnar.
+    One Python kernel builds each mask, once per distinct (georeference,
+    polygon) pair rather than once per row: a series of grids on one
+    georeference shares its masks. A broadcast join attaches each pair's
+    window and mask to its rows, and the crop and the mask run as JVM
+    array expressions, so no row crosses into Python.
+
+    A row whose polygon is null (no regions file, or a region without
+    geometry) passes through unmasked at full extent. A polygon that
+    misses the grid gives a 0×0 raster with no cells, at the grid's
+    top-left corner.
     """
-    wkt = _col(wkt_col)
-    with_poly = rasters.withColumn("_wkt", wkt)
+    staged = rasters.withColumn("_wkt", _col(wkt_col))
+    pairs = (
+        staged.select(*_GEOREF, "_wkt").filter(F.col("_wkt").isNotNull()).distinct()
+    )
 
-    def mask(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def window_masks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out_rows = []
-            # dict records, not itertuples: pandas mangles leading-
-            # underscore field names in namedtuples.
-            for row in pdf.to_dict("records"):
-                wkt = row.pop("_wkt")
-                if wkt is None:
-                    out_rows.append(row)
-                    continue
-                rings = parse_wkt_polygon(wkt)
-                w, h, cs = row["width"], row["height"], row["cellsize"]
-                ytop = row["yllcorner"] + h * cs
-                cc, rr = np.meshgrid(np.arange(w), np.arange(h))
-                xs = row["xllcorner"] + (cc.ravel() + 0.5) * cs
-                ys = ytop - (rr.ravel() + 0.5) * cs
-                inside = points_in_polygon(xs, ys, rings)
-                cells = np.asarray(row["cells"], dtype=np.float64)
-                row["cells"] = np.where(inside, cells, row["nodata_value"]).tolist()
-                out_rows.append(row)
-            yield pd.DataFrame(out_rows)
+            windows = [
+                window_mask(w, h, x, y, cs, parse_wkt_polygon(wkt))
+                for w, h, x, y, cs, wkt in zip(*(pdf[c] for c in (*_GEOREF, "_wkt")))
+            ]
+            out = pdf.copy()
+            for i, name in enumerate(("_c0", "_r0", "_nw", "_nh", "_mask")):
+                out[name] = [win[i] for win in windows]
+            yield out
 
-    return with_poly.mapInPandas(mask, rasters.schema)
+    schema = StructType(
+        pairs.schema.fields
+        + [StructField(c, IntegerType()) for c in ("_c0", "_r0", "_nw", "_nh")]
+        + [StructField("_mask", ArrayType(BooleanType()))]
+    )
+    masks = pairs.mapInPandas(window_masks, schema)
+    joined = staged.join(F.broadcast(masks), [*_GEOREF, "_wkt"], "left")
+
+    # A row without a mask (a null polygon) has null window columns, so
+    # each coalesce below falls back to the row's own value.
+    w, cs, nw = F.col("width"), F.col("cellsize"), F.col("_nw")
+    cells = F.transform(
+        "_mask",
+        lambda inside, k: F.when(
+            inside,
+            F.element_at(
+                "cells",
+                ((F.col("_r0") + (k / nw).cast("int")) * w
+                 + F.col("_c0") + k % nw + 1).cast("int"),
+            ),
+        ).otherwise(F.col("nodata_value")),
+    )
+    # Build the cells BEFORE width/height/... are aliased: the lambdas
+    # would otherwise bind to the new values (lateral column aliases).
+    cropped = joined.select("*", F.coalesce(cells, "cells").alias("_cells"))
+    ytop = F.col("yllcorner") + F.col("height") * cs
+    rewritten = {
+        "width": F.coalesce(nw, w),
+        "height": F.coalesce("_nh", "height"),
+        "xllcorner": F.coalesce(F.col("xllcorner") + F.col("_c0") * cs, "xllcorner"),
+        "yllcorner": F.coalesce(ytop - (F.col("_r0") + F.col("_nh")) * cs, "yllcorner"),
+        "cells": F.col("_cells"),
+    }
+    return cropped.select(
+        *[rewritten[c].alias(c) if c in rewritten else c for c in rasters.columns]
+    )
 
 
 def resample_nearest(rasters: DataFrame, factor: int) -> DataFrame:

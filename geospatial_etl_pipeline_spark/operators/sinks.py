@@ -29,12 +29,23 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 
 
+def _member(path: str) -> zipfile.ZipInfo:
+    """A deflated zip member under ``path``'s base name with a fixed
+    timestamp, so the same bytes in make the same zip out. Permissions
+    are those ``writestr`` gives a member named by a string."""
+    info = zipfile.ZipInfo(os.path.basename(path), date_time=(1980, 1, 1, 0, 0, 0))
+    info.compress_type = zipfile.ZIP_DEFLATED
+    info.external_attr = 0o600 << 16
+    return info
+
+
 def write_product_zips(files: DataFrame, out_dir: str) -> int:
     """One ``{out_dir}/{base_name}.zip`` per ``(base_name, files)`` row,
     ``files`` being ``array<struct<path, content>>``: a product and the
     bytes of each of its sidecar files. Lock files are excluded
     (copy_esrigrid…py:331–333). Members are zipped in sorted-path order
-    under their base names. Returns #zips written.
+    under their base names, deflated, with a fixed timestamp: two writes
+    of the same rows give byte-identical zips. Returns #zips written.
 
     Each row is zipped in the task that holds it: no shuffle, no driver
     involvement, embarrassingly parallel."""
@@ -48,9 +59,9 @@ def write_product_zips(files: DataFrame, out_dir: str) -> int:
                 key=lambda f: f["path"],
             )
             path = os.path.join(out_dir, f"{row['base_name']}.zip")
-            with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
+            with zipfile.ZipFile(path, "w") as zf:
                 for f in members:
-                    zf.writestr(os.path.basename(f["path"]), bytes(f["content"]))
+                    zf.writestr(_member(f["path"]), bytes(f["content"]))
             n += 1
         yield n
 

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import zipfile
 
 import pytest
@@ -64,6 +65,17 @@ def test_cli_end_to_end(spark, io_dirs):
         assert len(tif["overviews"]) >= 1
         assert all(o["reduced_resolution"] for o in tif["overviews"])
 
+    # the clip crops to the polygon's window (NO_MAINTAIN_EXTENT): the
+    # Northland polygon spans the grid's width and y 0-6 of its 0-10
+    northland = next(z[: -len(".zip")] for z in zips if z.endswith("_Northland.zip"))
+    with zipfile.ZipFile(out / "zips" / f"{northland}.zip") as zf:
+        tif = decode_cog(zf.read(f"{northland}.tif"))
+    assert (tif["width"], tif["height"]) == (10, 6)
+    doc = json.loads((out / f"{northland}.json").read_text())
+    ring = doc["geojson"]["coordinates"][0]
+    assert {y for _, y in ring} == {0.0, 6.0}
+    assert {x for x, _ in ring} == {0.0, 10.0}
+
     docs = sorted(p for p in os.listdir(out) if p.endswith(".json"))
     assert len(docs) == 4
     meta = json.loads((out / docs[0]).read_text())
@@ -108,19 +120,26 @@ def test_build_products_crosses_python_once(spark, io_dirs):
     plan = products._jdf.queryExecution().executedPlan().toString()
     nodes = [ln for ln in plan.splitlines() if "MapInPandas" in ln]
     assert len(nodes) == 1, plan
-    assert "mask(" in nodes[0]
-    # the regions' broadcast for the fan-out is the only exchange: the
+    # the clip's mask kernel, fed the distinct (georeference, polygon)
+    # pairs: no product's cells reach it
+    assert "window_masks(" in nodes[0], nodes[0]
+    assert not re.search(r"\bcells#", nodes[0]), nodes[0]
+    # three broadcasts: the regions for the fan-out; the regions again
+    # for the pairs' fan-out, which reads only the polygons and so is
+    # not reused; and the masks, which join back onto the products. The
     # region rides on its product's row and the names come from map
-    # lookups, not joins
-    assert plan.count("BroadcastExchange") == 1, plan
+    # lookups, not joins.
+    assert plan.count("BroadcastExchange") == 3, plan
 
 
 def test_cli_run_job_count(spark, io_dirs, tmp_path):
-    """One strict ``cli.run`` with a bucket and an upload issues 9 Spark
-    jobs: the regions CSV's header and its broadcast, three that fill
-    the products cache and count it (adaptive execution runs the cache,
-    the partial and the final aggregate as jobs of their own), the zips,
-    the metadata documents, and the upload manifest and its sample."""
+    """One strict ``cli.run`` with a bucket and an upload issues 12 Spark
+    jobs: the regions CSV's header and its broadcast, three for the
+    clip's masks (the regions' broadcast for the pairs' fan-out, the
+    pairs' distinct and the masks' broadcast), three that fill the
+    products cache and count it (adaptive execution runs the cache, the
+    partial and the final aggregate as jobs of their own), the zips, the
+    metadata documents, and the upload manifest and its sample."""
     src, _, regions = io_dirs
     sc = spark.sparkContext
     sc.setJobGroup("test_cli_run_job_count", "one cli.run")
@@ -134,7 +153,7 @@ def test_cli_run_job_count(spark, io_dirs, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup("test_cli_run_job_count")
-    assert len(jobs) == 9, sorted(jobs)
+    assert len(jobs) == 12, sorted(jobs)
 
 
 @pytest.fixture(scope="module")
@@ -174,3 +193,35 @@ def test_cli_strict_raises_on_unknown_codes(spark, unknown_codes_dir, tmp_path):
     with pytest.raises(ValueError, match="6 grid×region products dropped"):
         cli.run(spark, str(src), str(tmp_path / "out"),
                 regions_csv=str(regions), strict=True)
+
+
+def test_cli_region_that_misses_the_grid_ships_a_0x0_product(spark, tmp_path):
+    """A region whose polygon misses the grid still makes a product: a
+    0×0 .asc and a 0×0 .tif, with n_cells = 0 and null min/max/mean, and
+    strict mode counts it."""
+    from geospatial_etl_pipeline_spark.operators.geotiff import decode_cog
+
+    src, out = tmp_path / "in", tmp_path / "out"
+    src.mkdir()
+    write_asc(str(src / "vcsn_01_x_y_mean_monthly2.asc"), 4, 4,
+              [float(v) for v in range(16)])
+    regions = src / "regions.csv"
+    regions.write_text(
+        "regc_code,region_name_ascii,wkt\n"
+        '01,Northland Region,"POLYGON((0 0, 4 0, 4 2, 0 2, 0 0))"\n'
+        '09,Wellington Region,"POLYGON((40 40, 44 40, 44 44, 40 40))"\n'
+    )
+    result = cli.run(spark, str(src), str(out), regions_csv=str(regions),
+                     strict=True)
+    assert result["products"] == result["zips"] == result["metadata_docs"] == 2
+
+    name = "Wet-Days-GT-1mm_mean_1991-2020_February_Wellington"
+    with zipfile.ZipFile(out / "zips" / f"{name}.zip") as zf:
+        assert sorted(zf.namelist()) == [
+            f"{name}.asc", f"{name}.stats.json", f"{name}.tif"]
+        stats = json.loads(zf.read(f"{name}.stats.json"))
+        assert stats == {"n_cells": 0, "min": None, "max": None, "mean": None}
+        asc = zf.read(f"{name}.asc").decode()
+        tif = decode_cog(zf.read(f"{name}.tif"))
+    assert asc.startswith("ncols 0\nnrows 0\n")
+    assert (tif["width"], tif["height"], list(tif["cells"])) == (0, 0, [])

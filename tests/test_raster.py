@@ -154,6 +154,98 @@ def test_clip_to_polygon_masks_outside(spark, rasters):
     assert out["cells"][99] == 99.0
 
 
+def test_clip_to_polygon_crops_to_the_window(spark, rasters):
+    """The clip shrinks each raster to its polygon's cell window
+    (NO_MAINTAIN_EXTENT, :309) and masks the window's outside cells; a
+    polygon that misses the grid gives a 0×0 raster with no cells."""
+    big = rasters.filter("base_name = 'grid_02_a_b_mean_monthly7'")
+    polygons = spark.createDataFrame(
+        [("bottom", "POLYGON((0.5 0.5, 5 0.5, 5 5, 0.5 5, 0.5 0.5))"),
+         ("tri", "POLYGON((2 2, 8 2, 2 8, 2 2))"),
+         ("miss", "POLYGON((100 100, 110 100, 110 110, 100 100))"),
+         ("none", None)],
+        "region string, wkt string",
+    )
+    out = clip_to_polygon(big.crossJoin(polygons), "wkt")
+    assert out.columns == big.columns + ["region", "wkt"]
+    rows = {r["region"]: r for r in out.collect()}
+    geo = ("width", "height", "xllcorner", "yllcorner")
+
+    # centres on the bottom edge y = 0.5 are inside: rows 5..9 stay
+    bottom = rows["bottom"]
+    assert tuple(bottom[k] for k in geo) == (5, 5, 0.0, 0.0)
+    assert bottom["cells"] == [float(r * 10 + c) for r in range(5, 10) for c in range(5)]
+    # centres (c + 0.5, 9.5 - r) in the 6×6 window at (2, 2): inside
+    # strictly below the hypotenuse x + y = 10, i.e. c < r
+    tri = rows["tri"]
+    assert tuple(tri[k] for k in geo) == (6, 6, 2.0, 2.0)
+    assert tri["cells"] == [float(r * 10 + c) if c < r else -9999.0
+                            for r in range(2, 8) for c in range(2, 8)]
+    miss = rows["miss"]
+    assert tuple(miss[k] for k in geo) == (0, 0, 0.0, 10.0)
+    assert miss["cells"] == []
+    # a null polygon passes through unmasked at full extent
+    none = rows["none"]
+    assert tuple(none[k] for k in geo) == (10, 10, 0.0, 0.0)
+    assert none["cells"] == [float(v) for v in range(100)]
+
+
+def _plan_metrics(df) -> list[tuple[str, dict]]:
+    """(node name, SQL metrics) of ``df``'s executed plan in pre-order,
+    through the query stages of adaptive execution."""
+    out = []
+
+    def walk(node):
+        ms = node.metrics()
+        keys = ms.keySet().iterator()
+        metrics = {}
+        while keys.hasNext():
+            k = keys.next()
+            metrics[k] = ms.apply(k).value()
+        out.append((node.nodeName(), metrics))
+        if node.nodeName().endswith("QueryStage"):
+            walk(node.plan())
+        children = node.children().iterator()
+        while children.hasNext():
+            walk(children.next())
+
+    plan = df._jdf.queryExecution().executedPlan()
+    walk(plan.executedPlan() if plan.nodeName() == "AdaptiveSparkPlan" else plan)
+    return out
+
+
+def test_clip_to_polygon_builds_one_mask_per_distinct_pair(spark, tmp_path):
+    """3 grids on one georeference × 2 regions are 6 rows but 2 distinct
+    (georeference, polygon) pairs: the mask kernel is fed 2 rows, and the
+    masks reach all 6."""
+    for i in range(3):
+        write_asc(str(tmp_path / f"g{i}.asc"), 10, 10, [float(v + i) for v in range(100)])
+    polygons = spark.createDataFrame(
+        [("a", "POLYGON((0.5 0.5, 5 0.5, 5 5, 0.5 5, 0.5 0.5))"),
+         ("b", "POLYGON((2 2, 8 2, 2 8, 2 2))")],
+        "region string, wkt string",
+    )
+    out = clip_to_polygon(read_asc(spark, str(tmp_path)).crossJoin(polygons), "wkt")
+    rows = out.collect()
+    assert len(rows) == 6
+    for r in rows:
+        i = int(r["base_name"][1:])
+        if r["region"] == "a":
+            want = [float(r_ * 10 + c + i) for r_ in range(5, 10) for c in range(5)]
+        else:
+            want = [float(r_ * 10 + c + i) if c < r_ else -9999.0
+                    for r_ in range(2, 8) for c in range(2, 8)]
+        assert r["cells"] == want, (r["base_name"], r["region"])
+
+    nodes = _plan_metrics(out)
+    at = [i for i, (name, _) in enumerate(nodes) if name == "MapInPandas"]
+    assert len(at) == 1, nodes
+    assert nodes[at[0]][1]["pythonNumRowsReceived"] == 2
+    # the distinct aggregate under the kernel: the rows the kernel is fed
+    fed = next(m["numOutputRows"] for _, m in nodes[at[0] + 1:] if "numOutputRows" in m)
+    assert fed == 2, nodes
+
+
 def _same(a, b) -> bool:
     """Equal, including the sign of zero; None only matches None."""
     if a is None or b is None:

@@ -42,6 +42,25 @@ def test_write_product_zips_idempotent(spark, tmp_path):
     assert zipfile.ZipFile(f"{out}/p.zip").read("p.asc") == b"v2"
 
 
+def test_write_product_zips_reproducible(spark, tmp_path):
+    """Two writes of the same rows give byte-identical zips: members
+    carry a fixed timestamp, not the time of the write."""
+    import time
+
+    rows = [("p", [("/x/p.asc", b"grid " * 50), ("/x/p.tif", bytes(range(256)))])]
+    out_a, out_b = str(tmp_path / "a"), str(tmp_path / "b")
+    assert write_product_zips(spark.createDataFrame(rows, _FILES), out_a) == 1
+    time.sleep(2.1)  # past the 2 s resolution of a zip's DOS time field
+    assert write_product_zips(spark.createDataFrame(rows, _FILES), out_b) == 1
+    a = (tmp_path / "a" / "p.zip").read_bytes()
+    assert a == (tmp_path / "b" / "p.zip").read_bytes()
+    with zipfile.ZipFile(tmp_path / "a" / "p.zip") as zf:
+        for info in zf.infolist():
+            assert info.compress_type == zipfile.ZIP_DEFLATED
+            assert info.date_time == (1980, 1, 1, 0, 0, 0)
+            assert info.external_attr == 0o600 << 16
+
+
 def test_write_metadata_json_pretty(spark, tmp_path):
     df = spark.createDataFrame(
         [("prod_a", json.dumps({"src": "x", "metadata": {"title": "prod_a"}}))],
