@@ -16,23 +16,28 @@ Dataflow (DataFrame operators, not a file loop):
   (broadcast; region "99" excluded, :271–273) → crop to the region
   polygon's cell window and mask the cells outside it (operators.raster,
   NO_MAINTAIN_EXTENT, :309) → sidecar stats from the clipped row itself
-  → product naming via map lookups (:244–251, 292) → per-product zip +
-  metadata JSON (operators.sinks) → optional S3 URI targets (:377–406).
-  Each product is one row from the fan-out to its zip, carrying its
-  region and its name: it is clipped once, and no shuffle moves its
-  cells. Each grid is decoded twice: once for its cells, and once more
-  in the scan the clip takes its masks' georeference from.
+  → product naming via map lookups (:244–251, 292) → one kernel per
+  product row that encodes the .asc, the COG and the stats, writes the
+  zip and the metadata JSON (operators.sinks) and returns its S3 URI
+  target (:377–406) → upload manifest → optional upload. Each product
+  is one row from the fan-out to its zip, carrying its region and its
+  name: it is clipped once, crosses into Python once, and no shuffle
+  moves its cells. Each grid is decoded twice: once for its cells, and
+  once more in the scan the clip takes its masks' georeference from.
 
-``run`` issues several Spark jobs, not one. Three build the clip's
+``run`` issues a short sequence of Spark jobs. Strict mode first
+collects the grids whose file name has an unknown code: one job that
+reads the file listing, not the files, and raises before any output is
+written. Then one action runs the whole pipeline: the upload manifest's
+parquet write with a bucket, a collect of the kernel's rows without
+one. Under it run the regions' broadcast and three jobs for the clip's
 masks: a second regions broadcast for the fan-out the masks are taken
 from, the distinct of its (georeference, polygon) pairs, and the masks'
-broadcast. One aggregate fills the products cache and counts the
-products with an unknown code. Then the zip sink, the metadata sink and
-the upload manifest (write plus a 10-row sample) each run their own job
-over it; the upload itself is a driver-side file copy. One strict
-``run`` with a bucket and an upload issues 12 Spark jobs (counted
-under a job group, ``test_cli``), on perfbench's 96-product etl_grids
-job as on the 4-product test fixture.
+broadcast. The counts and the 10-row sample are read back from the
+written manifest. The upload itself is a driver-side file copy, one
+thread per core. One strict ``run`` with a bucket and an upload issues
+7 Spark jobs (counted under a job group, ``test_cli``), on perfbench's
+96-product etl_grids job as on the 4-product test fixture.
 
 A region whose polygon misses a grid still makes a product, counted in
 strict mode: the clip leaves it 0×0, so its zip holds a 0×0 ``.asc``, a
@@ -40,7 +45,8 @@ strict mode: the clip leaves it 0×0, so its zip holds a 0×0 ``.asc``, a
 footprint is a point. ``operators.geotiff.decode_cog`` reads such a
 ``.tif``; other TIFF readers may reject a zero-size image.
 
-Regions come from a local CSV ``regc_code,region_name_ascii,wkt`` (the
+Regions come from a local CSV whose header is exactly
+``regc_code,region_name_ascii,wkt``, in that order and in any case (the
 reference fetches a hosted feature layer over HTTPS at import time,
 :184–187 — a network dependency this container doesn't have; the CSV
 carries identical fields to the cursor's
@@ -60,7 +66,8 @@ import json
 import os
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.naming import (
@@ -74,9 +81,18 @@ from .functions.naming import (
     product_name,
     region_title,
 )
+from .operators.geotiff import encode_cog
 from .operators.raster import clip_to_polygon, with_raster_stats
-from .operators.sinks import upload_prefix, write_metadata_json, write_product_zips
+from .operators.sinks import (
+    upload_artifacts,
+    upload_prefix,
+    write_document,
+    write_zip,
+)
 from .sources.asc import asc_text, read_asc
+
+
+_REGIONS_SCHEMA = "regc_code string, region_name_ascii string, wkt string"
 
 
 def load_regions(
@@ -86,7 +102,12 @@ def load_regions(
 ) -> DataFrame:
     """(regc_code, region_name_ascii, wkt) — hosted feature service
     (REF:184–187, via sources.feature_service), CSV, or pass-through
-    default, in that priority order."""
+    default, in that priority order.
+
+    The CSV is read with this fixed schema, so loading it runs no Spark
+    job. Its header must name exactly these three columns, in this
+    order; case does not matter. A header in another order, or with a
+    column more or less, fails the first job that reads the file."""
     if regions_url is not None:
         from .sources.feature_service import read_feature_service
 
@@ -96,9 +117,35 @@ def load_regions(
             spark, {"00": "New Zealand"}, "regc_code", "region_name_ascii"
         ).withColumn("wkt", F.lit(None).cast("string"))
     return (
-        spark.read.option("header", "true")
+        spark.read.schema(_REGIONS_SCHEMA)
+        .option("header", "true")
+        .option("enforceSchema", "false")
         .csv(regions_csv)
-        .select("regc_code", "region_name_ascii", "wkt")
+    )
+
+
+def _real_regions(regions: DataFrame) -> DataFrame:
+    """The regions a product is made for: all but "99" (:271–273)."""
+    return regions.filter(F.col("regc_code") != "99")
+
+
+def _decoded_names() -> tuple[dict[str, Column], Column, Column]:
+    """``base_name``'s parsed parts, with its parameter and period names:
+    a name is null when its code is unknown, a too-short filename
+    included (the reference raises KeyError, :248, 251)."""
+    parsed = parse_base_name(F.col("base_name"))
+    parameter = lookup(PARAMETER, parsed["parameter_code"])
+    period = lookup(MONTH_SEASON, parsed["period_key"])
+    return parsed, parameter, period
+
+
+def unknown_code_grids(rasters: DataFrame) -> DataFrame:
+    """The ``base_name`` of each grid whose file name carries an unknown
+    parameter or period code: exactly the grids whose products get a
+    null ``product_name``. It reads the file listing, not the files."""
+    _, parameter, period = _decoded_names()
+    return rasters.select("base_name").filter(
+        parameter.isNull() | period.isNull()
     )
 
 
@@ -114,15 +161,11 @@ def build_products(
     split back out or joined again. A clip that masks every cell keeps
     its row, with n_cells = 0 and null min/max/mean, so strict mode
     counts it as a product. ``product_name`` is null when the grid's
-    parameter or period code is unknown, a too-short filename included
-    (the reference raises KeyError, :248, 251)."""
-    regions = regions.filter(F.col("regc_code") != "99")  # :271–273
-    fanout = rasters.crossJoin(F.broadcast(regions))
+    parameter or period code is unknown (``unknown_code_grids``)."""
+    fanout = rasters.crossJoin(F.broadcast(_real_regions(regions)))
     with_stats = with_raster_stats(clip_to_polygon(fanout, F.col("wkt")))
 
-    parsed = parse_base_name(F.col("base_name"))
-    parameter = lookup(PARAMETER, parsed["parameter_code"])
-    period = lookup(MONTH_SEASON, parsed["period_key"])
+    parsed, parameter, period = _decoded_names()
     name = F.when(
         parameter.isNotNull() & period.isNotNull(),
         F.concat_ws(
@@ -134,60 +177,72 @@ def build_products(
     return with_stats.select("*", name.alias("product_name"))
 
 
+# the columns of a product row that its zip and its document are made from
+_PRODUCT_COLUMNS = (
+    "product_name", "width", "height", "xllcorner", "yllcorner", "cellsize",
+    "nodata_value", "crs", "cells", "n_cells", "min_val", "max_val", "mean_val",
+)
+
+
+def _product_members(row: dict) -> list[tuple[str, bytes]]:
+    """(path, content) of one product's zip members: its COG, its
+    clipped .asc grid and its stats sidecar. ``row`` is one record of a
+    pandas batch of product rows."""
+    name = row["product_name"]
+    cells = list(row["cells"])
+    grid = asc_text(
+        row["width"], row["height"], cells,
+        row["xllcorner"], row["yllcorner"], row["cellsize"],
+        row["nodata_value"],
+    )
+    # the reference's core conversion (:259–261): a REAL Cloud-Optimized
+    # GeoTIFF — tiled + deflate + overview pyramid (operators/geotiff.py),
+    # openable downstream
+    tif = encode_cog(
+        int(row["width"]), int(row["height"]),
+        row["xllcorner"], row["yllcorner"], row["cellsize"],
+        row["nodata_value"], row["crs"], cells,
+    )
+    # pandas reads a null stat as NaN: write it as null
+    stat = {
+        k: None if pd.isna(row[c]) else row[c]
+        for k, c in (("min", "min_val"), ("max", "max_val"), ("mean", "mean_val"))
+    }
+    stats = json.dumps({"n_cells": int(row["n_cells"]), **stat}, indent=4)
+    return [
+        (f"{name}.tif", tif),
+        (f"{name}.asc", grid.encode()),
+        (f"{name}.stats.json", stats.encode()),
+    ]
+
+
 def product_files(products: DataFrame) -> DataFrame:
     """(base_name=product, files) rows, one per product: ``files`` holds
-    the COG, the clipped .asc grid and its stats sidecar as (path,
-    content) structs — the zip sink's input shape."""
+    ``_product_members`` as (path, content) structs — the input shape of
+    ``sinks.write_product_zips``. ``run`` does not use it: its kernel
+    writes the same members straight into each zip."""
 
-    from .operators.geotiff import encode_cog as geotiff_bytes
+    def encode(batches: Iterator) -> Iterator:
+        for pdf in batches:
+            yield pd.DataFrame([
+                {"base_name": row["product_name"], "files": [
+                    {"path": p, "content": c} for p, c in _product_members(row)
+                ]}
+                for row in pdf.to_dict("records")
+            ])
 
-    def encode(rows: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in rows:
-            out = []
-            for row in pdf.to_dict("records"):
-                name = row["product_name"]
-                grid = asc_text(
-                    row["width"], row["height"], list(row["cells"]),
-                    row["xllcorner"], row["yllcorner"], row["cellsize"],
-                    row["nodata_value"],
-                )
-                # the reference's core conversion (:259–261): a REAL
-                # Cloud-Optimized GeoTIFF — tiled + deflate + overview
-                # pyramid (operators/geotiff.py), openable downstream
-                tif = geotiff_bytes(
-                    int(row["width"]), int(row["height"]),
-                    row["xllcorner"], row["yllcorner"], row["cellsize"],
-                    row["nodata_value"], row["crs"], list(row["cells"]),
-                )
-                # pandas reads a null stat as NaN: write it as null
-                stat = {
-                    k: None if pd.isna(row[c]) else row[c]
-                    for k, c in (("min", "min_val"), ("max", "max_val"),
-                                 ("mean", "mean_val"))
-                }
-                stats = json.dumps(
-                    {"n_cells": int(row["n_cells"]), **stat}, indent=4
-                )
-                out.append({"base_name": name, "files": [
-                    {"path": f"{name}.tif", "content": tif},
-                    {"path": f"{name}.asc", "content": grid.encode()},
-                    {"path": f"{name}.stats.json", "content": stats.encode()},
-                ]})
-            yield pd.DataFrame(out)
-
-    return products.mapInPandas(
+    return products.select(*_PRODUCT_COLUMNS).mapInPandas(
         encode,
         "base_name string, files array<struct<path:string, content:binary>>",
     )
 
 
-def product_metadata(products: DataFrame) -> DataFrame:
-    """(product_name, metadata_json): the nested ``$date`` document of
-    :409–502, with the footprint as the clipped extent polygon in the
-    grid's CRS (the reference reprojects to WGS84 through arcpy's NTv2
-    path, :434–439 — documented tolerance, see functions/geometry)."""
+def _metadata_json() -> Column:
+    """A product row's metadata document as JSON text: the title, the
+    clipped extent polygon as GeoJSON in the grid's CRS (the reference
+    reprojects to WGS84 through arcpy's NTv2 path, :434–439 — documented
+    tolerance, see functions/geometry), the climatology window's
+    ``$date`` bounds and the run's ``updatedAt``."""
     xmin, ymin = F.col("xllcorner"), F.col("yllcorner")
     xmax = xmin + F.col("width") * F.col("cellsize")
     ymax = ymin + F.col("height") * F.col("cellsize")
@@ -213,9 +268,44 @@ def product_metadata(products: DataFrame) -> DataFrame:
         ).alias("updatedAt"),
         F.col("crs").alias("footprint_crs"),
     )
+    return F.to_json(doc)
+
+
+def product_metadata(products: DataFrame) -> DataFrame:
+    """(product_name, metadata_json) rows, one per product: the flat
+    ``$date`` document of ``_metadata_json`` — the input shape of
+    ``sinks.write_metadata_json``. ``run`` does not use it: its kernel
+    writes each product's document from the same column."""
     return products.select(
-        "product_name", F.to_json(doc).alias("metadata_json")
+        "product_name", _metadata_json().alias("metadata_json")
     )
+
+
+def _package_products(
+    products: DataFrame, zip_dir: str, doc_dir: str, upload_base: str | None
+) -> DataFrame:
+    """The one kernel that packages each named product: per row it
+    builds the ``_product_members``, writes ``{zip_dir}/{name}.zip`` and
+    ``{doc_dir}/{name}.json`` (``sinks.write_zip``/``write_document``),
+    and returns one ``upload_target`` row: ``{upload_base}{name}.zip``,
+    or null without a base. Lazy: the caller's one action writes the
+    files, and a second action over the result would write them again."""
+    os.makedirs(zip_dir, exist_ok=True)
+    os.makedirs(doc_dir, exist_ok=True)
+
+    def package(batches: Iterator) -> Iterator:
+        for pdf in batches:
+            targets = []
+            for row in pdf.to_dict("records"):
+                name = row["product_name"]
+                write_zip(os.path.join(zip_dir, f"{name}.zip"), _product_members(row))
+                write_document(os.path.join(doc_dir, f"{name}.json"), row["metadata_json"])
+                targets.append(f"{upload_base}{name}.zip" if upload_base else None)
+            yield pd.DataFrame({"upload_target": pd.Series(targets, dtype=object)})
+
+    return products.select(
+        *_PRODUCT_COLUMNS, _metadata_json().alias("metadata_json")
+    ).mapInPandas(package, "upload_target string")
 
 
 def run(
@@ -241,60 +331,48 @@ def run(
     manifest), matching a dry run."""
     rasters = read_asc(spark, file_folder, crs=crs)
     regions = load_regions(spark, regions_csv, regions_url)
-    cached = build_products(spark, rasters, regions).cache()
-
-    # one aggregate fills the cache and counts the unnamed products
-    n_rows, n_dropped = cached.select(
-        F.count(F.lit(1)), F.count_if(F.col("product_name").isNull())
-    ).first()
-    if strict and n_dropped:
-        cached.unpersist()
-        raise ValueError(
-            f"strict mode: {n_dropped} grid×region "
-            "products dropped by unknown parameter/period codes"
-        )
-    products = cached.filter(F.col("product_name").isNotNull())
-    n_products = n_rows - n_dropped
+    if strict:
+        # decided from the file listing, before any output is written
+        bad = unknown_code_grids(rasters).collect()
+        if bad:
+            n_dropped = len(bad) * _real_regions(regions).count()
+            raise ValueError(
+                f"strict mode: {n_dropped} grid×region "
+                "products dropped by unknown parameter/period codes"
+            )
+    products = build_products(spark, rasters, regions).filter(
+        F.col("product_name").isNotNull()
+    )
 
     zip_dir = output_folder_zipped or os.path.join(output_folder, "zips")
-    n_zips = write_product_zips(product_files(products), zip_dir)
-    n_docs = write_metadata_json(
-        product_metadata(products), output_folder
-    )
+    base = upload_prefix(bucket_name, s3prefix, "") if bucket_name else None
+    written = _package_products(products, zip_dir, output_folder, base)
     uploads: list[str] = []
-    n_uploads = 0
     if bucket_name:
         # the filesystem IS the uploader on a cluster (s3a committer):
-        # the target URI is a COLUMN (stays distributed — no collect of
-        # every product name to the driver), and the full manifest lands
-        # beside the zips as parquet. The result dict carries a bounded
-        # sample for logging (permissive like :77–92).
-        base = upload_prefix(bucket_name, s3prefix, "")
-        targets = products.select(
-            F.concat(
-                F.lit(base), F.col("product_name"), F.lit(".zip")
-            ).alias("upload_target")
-        )
-        targets.write.mode("overwrite").parquet(
-            os.path.join(output_folder, "_upload_manifest")
-        )
-        n_uploads = n_products
-        uploads = [
+        # the full manifest lands beside the documents as parquet, and
+        # writing it is the action that runs the kernel. The counts and
+        # a bounded sample for logging (permissive like :77–92) are read
+        # back from it: one short string per product.
+        manifest = os.path.join(output_folder, "_upload_manifest")
+        written.write.mode("overwrite").parquet(manifest)
+        targets = sorted(
             r["upload_target"]
-            for r in targets.orderBy("upload_target").limit(10).collect()
-        ]
+            for r in spark.read.schema(written.schema).parquet(manifest).collect()
+        )
+        n_products = len(targets)
+        uploads = targets[:10]
+    else:
+        n_products = len(written.collect())
     upload_result = None
     if upload_fs_base:
-        from .operators.sinks import upload_artifacts
-
         upload_result = upload_artifacts(spark, zip_dir, upload_fs_base)
-    cached.unpersist()
     return {
         "products": n_products,
-        "zips": n_zips,
-        "metadata_docs": n_docs,
+        "zips": n_products,
+        "metadata_docs": n_products,
         "upload_targets": uploads,
-        "n_upload_targets": n_uploads,
+        "n_upload_targets": n_products if bucket_name else 0,
         "uploaded": upload_result["uploaded"] if upload_result else [],
     }
 
@@ -307,7 +385,8 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("-o", "--output_folder", required=True)
     ap.add_argument("--output_folder_zipped", default=None)
     ap.add_argument("-r", "--regions_file", default=None,
-                    help="CSV: regc_code,region_name_ascii,wkt")
+                    help="CSV whose header is exactly regc_code,"
+                         "region_name_ascii,wkt, in that order (any case)")
     ap.add_argument("--regions_url", default=None,
                     help="ArcGIS REST feature-layer URL (REF:184-187); "
                          "takes precedence over --regions_file")

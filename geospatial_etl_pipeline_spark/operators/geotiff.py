@@ -22,8 +22,8 @@ re-ingesting our own artifacts; ``read_cog_tile`` takes a
 the one tile's byte range — the range-read property is pinned by test,
 not just claimed.
 
-Scale note: the codec is a per-row kernel — ``cli.product_files`` calls
-``encode_cog`` once per product row inside Arrow-batched
+Scale note: the codec is a per-row kernel — ``cli.run``'s packaging
+kernel calls ``encode_cog`` once per product row inside Arrow-batched
 ``mapInPandas``, so encoding parallelizes per raster and never touches
 the driver. Classic TIFF's 32-bit offsets cap one artifact at 4 GB;
 ``encode_cog`` auto-switches to BigTIFF (magic 43, 8-byte offsets,

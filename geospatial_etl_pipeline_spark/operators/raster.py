@@ -23,7 +23,7 @@ as composable DataFrame transformations:
   JVM expressions (nearest-neighbor decimation/replication).
 
 The GeoTIFF sink (:259–261) is not a DataFrame operator here:
-``cli.product_files`` calls the per-row COG codec
+``cli.run``'s one packaging kernel calls the per-row COG codec
 ``operators.geotiff.encode_cog`` for each product.
 
 Scale: one row per raster keeps lineage columnar; a 10k×10k float grid

@@ -2,18 +2,21 @@
 
 Re-expresses copy_esrigrid…py's output stages as Spark sinks:
 
-- ``write_product_zips``: bundle a product's sidecar files into one zip,
-  excluding ``*.lock`` (:315–346). Each product is one row, zipped in
-  the task that holds it, so executors zip their own products in
-  parallel with no shuffle — the reference zips serially on one
-  machine.
-- ``write_metadata_json``: one pretty-printed JSON metadata document per
-  product (:496–498, ``indent=4`` preserved).
-- ``upload_prefix``: the S3 destination URI builder (:377–406). Real
-  uploads just target ``s3a://`` paths — on a cluster the Hadoop S3A
-  committer ships the bytes; no boto3-style per-file upload loop exists
-  because the filesystem IS the uploader. The permissive-mode flag
-  mirrors the reference's missing-boto3 tolerance (:77–92).
+- ``write_zip``: bundle one product's sidecar files into one zip,
+  excluding ``*.lock`` (:315–346), and ``write_document``: one
+  pretty-printed JSON metadata document (:496–498, ``indent=4``
+  preserved). These are per-product writers: ``cli.run``'s one kernel
+  calls both for each product row, in the task that holds it, so
+  executors package their own products in parallel with no shuffle —
+  the reference packages serially on one machine.
+- ``write_product_zips`` and ``write_metadata_json``: the same two
+  writers over a DataFrame of ``(base_name, files)`` or
+  ``(product_name, metadata_json)`` rows, one Spark job each.
+- ``upload_prefix``: the S3 destination URI builder (:377–406).
+- ``upload_artifacts``: copies the zips through the Hadoop FileSystem
+  API (on a cluster the S3A connector ships the bytes), concurrently,
+  one thread per core. Its permissive-mode flag mirrors the
+  reference's missing-boto3 tolerance (:77–92).
 
 Idempotence: outputs are path-keyed and overwritten (the reference sets
 ``arcpy.env.overwriteOutput=True``, :98), so task retries are safe.
@@ -24,7 +27,8 @@ from __future__ import annotations
 import json
 import os
 import zipfile
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
 
@@ -39,29 +43,38 @@ def _member(path: str) -> zipfile.ZipInfo:
     return info
 
 
+def write_zip(path: str, files: Iterable[tuple[str, bytes]]) -> None:
+    """Write one product's zip at ``path`` from ``(path, content)`` pairs:
+    lock files excluded (copy_esrigrid…py:331–333), members in sorted-path
+    order under their base names, deflated, with a fixed timestamp, so two
+    writes of the same pairs give byte-identical zips. An existing zip is
+    overwritten."""
+    members = sorted(
+        ((p, c) for p, c in files if not p.endswith(".lock")), key=lambda f: f[0]
+    )
+    with zipfile.ZipFile(path, "w") as zf:
+        for member, content in members:
+            zf.writestr(_member(member), bytes(content))
+
+
+def write_document(path: str, metadata_json: str) -> None:
+    """Write one metadata document at ``path``, pretty-printed with
+    ``indent=4`` exactly like the reference (copy_esrigrid…py:496–498)."""
+    with open(path, "w") as f:
+        json.dump(json.loads(metadata_json), f, indent=4)
+
+
 def write_product_zips(files: DataFrame, out_dir: str) -> int:
     """One ``{out_dir}/{base_name}.zip`` per ``(base_name, files)`` row,
     ``files`` being ``array<struct<path, content>>``: a product and the
-    bytes of each of its sidecar files. Lock files are excluded
-    (copy_esrigrid…py:331–333). Members are zipped in sorted-path order
-    under their base names, deflated, with a fixed timestamp: two writes
-    of the same rows give byte-identical zips. Returns #zips written.
-
-    Each row is zipped in the task that holds it: no shuffle, no driver
-    involvement, embarrassingly parallel."""
+    bytes of each of its sidecar files, zipped by ``write_zip`` in the
+    task that holds the row. Returns #zips written."""
     os.makedirs(out_dir, exist_ok=True)
 
     def zip_partition(rows: Iterator) -> Iterator:
         n = 0
         for row in rows:
-            members = sorted(
-                (f for f in row["files"] if not f["path"].endswith(".lock")),
-                key=lambda f: f["path"],
-            )
-            path = os.path.join(out_dir, f"{row['base_name']}.zip")
-            with zipfile.ZipFile(path, "w") as zf:
-                for f in members:
-                    zf.writestr(_member(f["path"]), bytes(f["content"]))
+            write_zip(os.path.join(out_dir, f"{row['base_name']}.zip"), row["files"])
             n += 1
         yield n
 
@@ -70,18 +83,17 @@ def write_product_zips(files: DataFrame, out_dir: str) -> int:
 
 def write_metadata_json(docs: DataFrame, out_dir: str) -> int:
     """One ``{out_dir}/{product_name}.json`` per ``(product_name,
-    metadata_json)`` row, pretty-printed with ``indent=4`` exactly like
-    the reference (copy_esrigrid…py:496–498). Returns #documents
-    written."""
+    metadata_json)`` row, written by ``write_document``. Returns
+    #documents written."""
     os.makedirs(out_dir, exist_ok=True)
 
     def dump_partition(rows: Iterator) -> Iterator:
         n = 0
         for row in rows:
-            doc = json.loads(row["metadata_json"])
-            path = os.path.join(out_dir, f"{row['product_name']}.json")
-            with open(path, "w") as f:
-                json.dump(doc, f, indent=4)
+            write_document(
+                os.path.join(out_dir, f"{row['product_name']}.json"),
+                row["metadata_json"],
+            )
             n += 1
         yield n
 
@@ -120,15 +132,17 @@ def upload_artifacts(
     a pipeline stage that produced nothing must not fail the upload
     stage), and existing destination objects are overwritten (:98).
 
-    Scale note: the per-file loop runs on the driver — correct for the
-    reference's hundreds-of-zips workload (the bytes stream JVM-side;
-    Python only orchestrates). At thousands of artifacts, land the
-    artifacts directly on the destination filesystem instead
-    (write_partitioned_parquet/df.write straight to s3a) — uploading
-    after the fact is the reference's shape, not the 100 TB one, and
-    the docstrings on the parquet sinks say so.
+    Scale note: the copies run on the driver, concurrently, on a pool
+    of ``defaultParallelism`` threads (one per core; py4j gives each
+    Python thread its own JVM thread, and the bytes stream JVM-side).
+    That suits the reference's hundreds-of-zips workload. At thousands
+    of artifacts, land the artifacts directly on the destination
+    filesystem instead (write_partitioned_parquet/df.write straight to
+    s3a) — uploading after the fact is the reference's shape, not the
+    100 TB one, and the docstrings on the parquet sinks say so.
 
-    Returns {"uploaded": [names], "skipped_lock": n, "dest_base": uri}.
+    Returns {"uploaded": [names], "skipped_lock": n, "dest_base": uri},
+    ``uploaded`` in sorted order.
     """
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
@@ -142,14 +156,9 @@ def upload_artifacts(
             return {"uploaded": [], "skipped_lock": 0, "dest_base": dest_base}
         raise FileNotFoundError(src_dir)
     dst_fs.mkdirs(hpath(dest_base))
-    uploaded: list[str] = []
-    skipped_lock = 0
-    for name in sorted(os.listdir(src_dir)):
-        if name.endswith(".lock"):
-            skipped_lock += 1
-            continue
-        if not name.endswith(".zip"):
-            continue
+    listing = sorted(os.listdir(src_dir))
+
+    def copy(name: str) -> str:
         src = os.path.join(src_dir, name)
         ok = jvm.org.apache.hadoop.fs.FileUtil.copy(
             local_fs, hpath(src), dst_fs, hpath(f"{dest_base}/{name}"),
@@ -163,10 +172,15 @@ def upload_artifacts(
             # a destination that silently rejected the write — that
             # would be success-shaped data loss (review finding)
             raise IOError(f"copy failed for {src} -> {dest_base}/{name}")
-        uploaded.append(name)
+        return name
+
+    workers = spark.sparkContext.defaultParallelism
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        # map yields in input order and re-raises a copy's exception
+        uploaded = list(pool.map(copy, [n for n in listing if n.endswith(".zip")]))
     return {
         "uploaded": uploaded,
-        "skipped_lock": skipped_lock,
+        "skipped_lock": sum(n.endswith(".lock") for n in listing),
         "dest_base": dest_base,
     }
 

@@ -88,6 +88,13 @@ def test_cli_end_to_end(spark, io_dirs):
     assert result["upload_targets"][0].startswith(
         "s3a://climate-bucket/products/"
     )
+    # the counts are read back from the written manifest; Spark logs
+    # that "_upload_manifest" is a hidden path, but its rows are read
+    assert result["n_upload_targets"] == len(result["upload_targets"]) == 4
+    assert sorted(result["upload_targets"]) == result["upload_targets"]
+    manifest = spark.read.parquet(str(out / "_upload_manifest"))
+    assert manifest.columns == ["upload_target"]
+    assert manifest.count() == 4
 
 
 def test_cli_passthrough_without_regions(spark, io_dirs):
@@ -133,13 +140,14 @@ def test_build_products_crosses_python_once(spark, io_dirs):
 
 
 def test_cli_run_job_count(spark, io_dirs, tmp_path):
-    """One strict ``cli.run`` with a bucket and an upload issues 12 Spark
-    jobs: the regions CSV's header and its broadcast, three for the
-    clip's masks (the regions' broadcast for the pairs' fan-out, the
-    pairs' distinct and the masks' broadcast), three that fill the
-    products cache and count it (adaptive execution runs the cache, the
-    partial and the final aggregate as jobs of their own), the zips, the
-    metadata documents, and the upload manifest and its sample."""
+    """One strict ``cli.run`` with a bucket and an upload issues 7 Spark
+    jobs: the strict check's collect of the grids with an unknown code
+    (it reads the file listing only), the regions' broadcast for the
+    fan-out, three for the clip's masks (the regions' broadcast for the
+    pairs' fan-out, the pairs' distinct and the masks' broadcast), the
+    upload manifest's write, which runs the one kernel that writes every
+    zip and document, and the manifest's read-back for the counts and
+    the sample. Reading the regions CSV with its schema runs no job."""
     src, _, regions = io_dirs
     sc = spark.sparkContext
     sc.setJobGroup("test_cli_run_job_count", "one cli.run")
@@ -153,7 +161,41 @@ def test_cli_run_job_count(spark, io_dirs, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup("test_cli_run_job_count")
-    assert len(jobs) == 12, sorted(jobs)
+    assert len(jobs) == 7, sorted(jobs)
+
+
+def test_cli_kernel_matches_the_wrappers(spark, io_dirs, tmp_path):
+    """``cli.run``'s one kernel writes the same zips, byte for byte, as
+    ``write_product_zips(product_files(...))``, and the same documents,
+    apart from ``updatedAt``, as ``write_metadata_json(product_metadata
+    (...))``: the two paths share their per-product writers."""
+    from geospatial_etl_pipeline_spark.operators.sinks import (
+        write_metadata_json,
+        write_product_zips,
+    )
+
+    src, _, regions = io_dirs
+    out, staged = tmp_path / "run", tmp_path / "staged"
+    cli.run(spark, str(src), str(out), regions_csv=str(regions),
+            crs="EPSG:2193", strict=True)
+    products = cli.build_products(
+        spark, read_asc(spark, str(src), crs="EPSG:2193"),
+        cli.load_regions(spark, str(regions)),
+    )
+    assert write_product_zips(cli.product_files(products), str(staged / "zips")) == 4
+    assert write_metadata_json(cli.product_metadata(products), str(staged)) == 4
+
+    zips = sorted(os.listdir(out / "zips"))
+    assert zips == sorted(os.listdir(staged / "zips")) and len(zips) == 4
+    for z in zips:
+        assert (out / "zips" / z).read_bytes() == (staged / "zips" / z).read_bytes()
+    docs = sorted(p for p in os.listdir(out) if p.endswith(".json"))
+    assert docs == sorted(p for p in os.listdir(staged) if p.endswith(".json"))
+    updated = re.compile(r'"updatedAt": \{\s*"\$date": "[^"]+"\s*\}')
+    for d in docs:
+        got, want = (out / d).read_text(), (staged / d).read_text()
+        assert updated.search(got) and updated.search(want)
+        assert updated.sub("", got) == updated.sub("", want)
 
 
 @pytest.fixture(scope="module")
@@ -189,10 +231,58 @@ def test_cli_permissive_drops_unknown_codes(spark, unknown_codes_dir, tmp_path):
 
 
 def test_cli_strict_raises_on_unknown_codes(spark, unknown_codes_dir, tmp_path):
+    """Strict mode raises before any output is written, from a check
+    that reads the grids' paths and no file content."""
     src, regions = unknown_codes_dir
+    out = tmp_path / "out"
     with pytest.raises(ValueError, match="6 grid×region products dropped"):
-        cli.run(spark, str(src), str(tmp_path / "out"),
-                regions_csv=str(regions), strict=True)
+        cli.run(spark, str(src), str(out), regions_csv=str(regions),
+                strict=True, bucket_name="climate-bucket")
+    written = [f for _, _, files in os.walk(tmp_path) for f in files]
+    assert not [f for f in written if f.endswith((".zip", ".json"))], written
+
+    check = cli.unknown_code_grids(read_asc(spark, str(src)))
+    plan = check._jdf.queryExecution().executedPlan().toString()
+    assert "ReadSchema: struct<path:string>" in plan, plan
+    assert sorted(r["base_name"] for r in check.collect()) == [
+        "short", "vcsn_02_x_y_mean_monthly13", "vcsn_98_x_y_mean_annual"]
+
+
+def _regions_csv(path, header: str, row: str):
+    path.write_text(f"{header}\n{row}\n")
+    return str(path)
+
+
+def test_load_regions_reads_the_csv_by_its_schema(spark, tmp_path):
+    """The regions CSV is read with a fixed schema: loading it runs no
+    Spark job, a header whose names differ only in case loads, and a
+    header in another column order or with another column count fails
+    the read."""
+    ring = '"POLYGON((0 0, 4 0, 4 2, 0 2, 0 0))"'
+    sc = spark.sparkContext
+    sc.setJobGroup("test_load_regions", "load_regions")
+    try:
+        regions = cli.load_regions(spark, _regions_csv(
+            tmp_path / "case.csv", "REGC_code,Region_Name_ASCII,WKT",
+            f"01,Northland Region,{ring}"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("test_load_regions") == []
+    assert [tuple(r) for r in regions.collect()] == [
+        ("01", "Northland Region", ring.strip('"'))]
+
+    reordered = cli.load_regions(spark, _regions_csv(
+        tmp_path / "order.csv", "region_name_ascii,regc_code,wkt",
+        f"Northland Region,01,{ring}"))
+    with pytest.raises(Exception, match="CSV header does not conform to the schema"):
+        reordered.collect()
+    extra = cli.load_regions(spark, _regions_csv(
+        tmp_path / "extra.csv", "regc_code,region_name_ascii,wkt,area",
+        f"01,Northland Region,{ring},8.0"))
+    with pytest.raises(Exception, match="Number of column in CSV header is "
+                       "not equal to number of fields in the schema"):
+        extra.collect()
 
 
 def test_cli_region_that_misses_the_grid_ships_a_0x0_product(spark, tmp_path):

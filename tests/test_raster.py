@@ -43,7 +43,7 @@ def rasters(spark, asc_dir):
 
 def _cog(row, **kw) -> bytes:
     """geotiff.encode_cog on one collected raster row, the way
-    cli.product_files calls it."""
+    cli._product_members calls it."""
     return encode_cog(
         row["width"], row["height"], row["xllcorner"], row["yllcorner"],
         row["cellsize"], row["nodata_value"], row["crs"], list(row["cells"]),

@@ -127,6 +127,40 @@ def test_upload_artifacts_hadoop_fs_contract(spark, tmp_path):
         )
 
 
+def test_upload_artifacts_failed_copy_raises(spark, tmp_path):
+    """The copies run concurrently, and one that fails still fails the
+    upload. Hadoop copies a file onto an existing directory INTO that
+    directory, so the destination's ``b.zip`` is made a non-empty
+    directory that holds a non-empty directory ``b.zip``: no file can be
+    written there. Once it is gone, a rerun uploads both zips, in sorted
+    order."""
+    import shutil
+
+    import pytest as _pytest
+    from py4j.protocol import Py4JJavaError
+
+    from geospatial_etl_pipeline_spark.operators.sinks import (
+        upload_artifacts,
+    )
+
+    src = tmp_path / "zips"
+    src.mkdir()
+    for name in ("b.zip", "a.zip"):
+        (src / name).write_bytes(name.encode())
+    dest_dir = tmp_path / "bucket"
+    blocker = dest_dir / "b.zip" / "b.zip"
+    blocker.mkdir(parents=True)
+    (blocker / "x").write_bytes(b"x")
+
+    with _pytest.raises(Py4JJavaError, match="b.zip"):
+        upload_artifacts(spark, str(src), f"file://{dest_dir}")
+
+    shutil.rmtree(dest_dir / "b.zip")
+    result = upload_artifacts(spark, str(src), f"file://{dest_dir}")
+    assert result["uploaded"] == ["a.zip", "b.zip"]
+    assert (dest_dir / "b.zip").read_bytes() == b"b.zip"
+
+
 def test_upload_artifacts_unresolvable_dest_raises(spark, tmp_path):
     """The permissive mode must never extend to the DESTINATION: a dest
     filesystem that cannot be constructed — here the s3a scheme with no
