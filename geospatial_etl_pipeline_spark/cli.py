@@ -239,10 +239,12 @@ def product_files(products: DataFrame) -> DataFrame:
 
 def _metadata_json() -> Column:
     """A product row's metadata document as JSON text: the title, the
-    clipped extent polygon as GeoJSON in the grid's CRS (the reference
-    reprojects to WGS84 through arcpy's NTv2 path, :434–439 — documented
-    tolerance, see functions/geometry), the climatology window's
-    ``$date`` bounds and the run's ``updatedAt``."""
+    clipped extent's envelope → polygon ring (REF:438) encoded as GeoJSON
+    (:451), the climatology window's ``$date`` bounds and the run's
+    ``updatedAt``. The footprint is in the grid's CRS, named by
+    ``footprint_crs``; nothing is reprojected, so no reprojection
+    tolerance applies. The reference reprojects it to WGS84 (:434–439);
+    ROADMAP item 2 holds that step."""
     xmin, ymin = F.col("xllcorner"), F.col("yllcorner")
     xmax = xmin + F.col("width") * F.col("cellsize")
     ymax = ymin + F.col("height") * F.col("cellsize")

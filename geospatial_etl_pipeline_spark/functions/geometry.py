@@ -1,14 +1,16 @@
 """Pure-Python geometry primitives (no Sedona/shapely in this image).
 
-Covers the reference's geometry surface (SURVEY §2i): WKT/GeoJSON
-encode-decode, envelope, envelope→polygon, point dumps, point-in-polygon
-(the clip predicate), and coordinate reprojection (Web Mercator + the
-reference's Transverse Mercator output CRS, copy_esrigrid…py:298–302).
+Covers the part of the reference's geometry surface (SURVEY §2i) that
+runs outside Spark expressions, as plain functions on numpy arrays:
 
-Two layers:
-- plain functions on numpy arrays (unit-testable, vectorized)
-- pandas UDF wrappers for DataFrame use (Arrow-batched — the sanctioned
-  slow path for semantics Spark expressions can't reach)
+- WKT polygon decode (``parse_wkt_polygon``) and the clip's cell window
+  with its scanline point-in-polygon mask (``window_mask``), which
+  ``operators.raster.clip_to_polygon`` builds once per distinct
+  (georeference, polygon) pair;
+- even-odd point-in-polygon (``points_in_polygon``), the reference
+  predicate the clip's mask is tested against;
+- the Transverse Mercator forward to the reference's output CRS,
+  NZTM2000 (copy_esrigrid…py:298–302).
 
 Reprojection note: the reference requests an NTv2 grid-shift datum
 transformation (New_Zealand_1949_To_NZGD_2000_3_NTv2). The NZTM2000
@@ -16,7 +18,8 @@ projection is the standard Transverse Mercator forward (Krüger series,
 GRS80); the NZGD1949 datum shift is a pluggable hook (functions/datum.py:
 NTv2 .gsb parser + bilinear shift when a grid is supplied, published
 3-parameter geocentric fallback within a pinned tolerance otherwise —
-SURVEY §7 hard-part 2).
+SURVEY §7 hard-part 2). No pipeline output is reprojected yet: the
+footprint ``cli.run`` writes stays in the grid's CRS (``cli._metadata_json``).
 """
 
 from __future__ import annotations
@@ -25,9 +28,6 @@ import math
 import re
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, DoubleType, StringType
 
 # --------------------------------------------------------------------------
 # WKT / rings
@@ -52,49 +52,6 @@ def parse_wkt_polygon(wkt: str) -> list[np.ndarray]:
     if not rings:
         raise ValueError(f"empty WKT POLYGON: {wkt[:60]!r}")
     return rings
-
-
-def polygon_wkt(rings: list[np.ndarray]) -> str:
-    parts = ", ".join(
-        "(" + ", ".join(f"{x:.10g} {y:.10g}" for x, y in ring) + ")"
-        for ring in rings
-    )
-    return f"POLYGON({parts})"
-
-
-def envelope(rings: list[np.ndarray]) -> tuple[float, float, float, float]:
-    """(xmin, ymin, xmax, ymax) — arcpy `geometry.extent` equivalent."""
-    pts = np.vstack(rings)
-    return (
-        float(pts[:, 0].min()), float(pts[:, 1].min()),
-        float(pts[:, 0].max()), float(pts[:, 1].max()),
-    )
-
-
-def envelope_polygon(xmin: float, ymin: float, xmax: float, ymax: float) -> np.ndarray:
-    """extent.polygon (copy_esrigrid…py:438): closed CCW ring."""
-    return np.asarray(
-        [(xmin, ymin), (xmax, ymin), (xmax, ymax), (xmin, ymax), (xmin, ymin)],
-        dtype=np.float64,
-    )
-
-
-def geojson_polygon(rings: list[np.ndarray]) -> str:
-    """GeoJSON encode (copy_esrigrid…py:451): {"type":"Polygon",...}."""
-    import json
-
-    return json.dumps(
-        {
-            "type": "Polygon",
-            "coordinates": [[[float(x), float(y)] for x, y in r] for r in rings],
-        },
-        separators=(",", ":"),
-    )
-
-
-def shoelace_area(ring: np.ndarray) -> float:
-    x, y = ring[:, 0], ring[:, 1]
-    return 0.5 * float(np.sum(x[:-1] * y[1:] - x[1:] * y[:-1]))
 
 
 def points_in_ring(xs: np.ndarray, ys: np.ndarray, ring: np.ndarray) -> np.ndarray:
@@ -216,7 +173,7 @@ def _tm_forward(
         eta += aj * np.cos(2 * j * xi_p) * np.sinh(2 * j * eta_p)
     easting = fe + k0 * A * eta
     northing = fn + k0 * A * xi
-    # lat0 = 0 for both NZTM and web-TM uses here; meridian arc at lat0=0 is 0.
+    # lat0 = 0 for NZTM; the meridian arc at lat0 = 0 is 0.
     return easting, northing
 
 
@@ -237,58 +194,3 @@ def lonlat_to_nztm(
     if datum_shift is not None:
         lon, lat = datum_shift(lon, lat)
     return _tm_forward(lon, lat, **NZTM)
-
-
-def lonlat_to_webmercator(
-    lon: np.ndarray, lat: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """EPSG:4326 -> EPSG:3857."""
-    lon = np.asarray(lon, dtype=np.float64)
-    lat = np.asarray(lat, dtype=np.float64)
-    x = _GRS80_A * np.radians(lon)
-    y = _GRS80_A * np.arctanh(np.sin(np.radians(lat)))
-    return x, y
-
-
-# --------------------------------------------------------------------------
-# pandas-UDF wrappers (Arrow-batched)
-# --------------------------------------------------------------------------
-
-
-@F.pandas_udf(BooleanType())
-def st_contains_wkt(wkt: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
-    """True where point (x,y) falls inside the WKT polygon. Vectorized
-    per distinct polygon within each Arrow batch."""
-    out = np.zeros(len(x), dtype=bool)
-    xs = x.to_numpy(dtype=np.float64)
-    ys = y.to_numpy(dtype=np.float64)
-    for poly, idx in wkt.groupby(wkt, sort=False).groups.items():
-        rings = parse_wkt_polygon(poly)
-        ii = np.asarray(idx)
-        out[ii] = points_in_polygon(xs[ii], ys[ii], rings)
-    return pd.Series(out)
-
-
-@F.pandas_udf(StringType())
-def st_envelope_wkt(wkt: pd.Series) -> pd.Series:
-    def env(p: str) -> str:
-        e = envelope(parse_wkt_polygon(p))
-        return polygon_wkt([envelope_polygon(*e)])
-
-    return wkt.map(env)
-
-
-@F.pandas_udf(StringType())
-def st_asgeojson(wkt: pd.Series) -> pd.Series:
-    return wkt.map(lambda p: geojson_polygon(parse_wkt_polygon(p)))
-
-
-@F.pandas_udf(DoubleType())
-def st_area(wkt: pd.Series) -> pd.Series:
-    def area(p: str) -> float:
-        rings = parse_wkt_polygon(p)
-        return abs(shoelace_area(rings[0])) - sum(
-            abs(shoelace_area(r)) for r in rings[1:]
-        )
-
-    return wkt.map(area)

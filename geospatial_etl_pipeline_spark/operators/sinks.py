@@ -130,7 +130,8 @@ def upload_artifacts(
     source directory that is absent or empty is tolerated when
     ``tolerate_missing`` (the reference's permissive mode, :77–92 —
     a pipeline stage that produced nothing must not fail the upload
-    stage), and existing destination objects are overwritten (:98).
+    stage), and existing destination objects are overwritten (:98). A
+    destination name that a directory holds fails the upload.
 
     Scale note: the copies run on the driver, concurrently, on a pool
     of ``defaultParallelism`` threads (one per core; py4j gives each
@@ -160,8 +161,9 @@ def upload_artifacts(
 
     def copy(name: str) -> str:
         src = os.path.join(src_dir, name)
+        dst = hpath(f"{dest_base}/{name}")
         ok = jvm.org.apache.hadoop.fs.FileUtil.copy(
-            local_fs, hpath(src), dst_fs, hpath(f"{dest_base}/{name}"),
+            local_fs, hpath(src), dst_fs, dst,
             False,  # keep the source
             True,   # overwrite (arcpy.env.overwriteOutput=True, REF:98)
             conf,
@@ -172,6 +174,10 @@ def upload_artifacts(
             # a destination that silently rejected the write — that
             # would be success-shaped data loss (review finding)
             raise IOError(f"copy failed for {src} -> {dest_base}/{name}")
+        if not dst_fs.getFileStatus(dst).isFile():
+            # Hadoop copies a file onto an existing directory INTO that
+            # directory and reports success: the name still holds no zip
+            raise IOError(f"{dest_base}/{name} is a directory, not the uploaded zip")
         return name
 
     workers = spark.sparkContext.defaultParallelism

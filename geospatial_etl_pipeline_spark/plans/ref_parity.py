@@ -1,13 +1,15 @@
 """Reference-parity queries: the arcpy pipeline's semantics, Spark-first.
 
 These re-express the reference's dataflow spine (SURVEY §2a–§2h [REF]
-rows) over driver testdata: positional filename parsing, broadcast
-lookup-dim joins, region-title rewrites, the rasters×regions fan-out,
-file-inventory grouping, and the nested ``$date`` metadata document.
+rows) over driver testdata: positional filename parsing, name lookups
+(as broadcast dimension joins in q70/q71, as ``naming.lookup`` map
+expressions in q72/q75), region-title rewrites, the rasters×regions
+fan-out, file-inventory grouping, and the nested ``$date`` metadata
+document. q74 runs the pipeline spine itself, ``cli.build_products``.
 
 The inventory is synthesized deterministically from ``part`` (the
 testdata has no .asc files); the *operators* — split/element_at parsing,
-dim joins, concat naming — are exactly the reference's semantics with
+lookups, concat naming — are exactly the reference's semantics with
 citations in functions/naming.py.
 """
 
@@ -22,11 +24,12 @@ from ..functions.naming import (
     REGION,
     REGION_NAME_ASCII,
     dim_df,
+    lookup,
     parse_base_name,
     product_name,
     region_title,
 )
-from ._util import fan_out, t
+from ._util import fan_out, literal_df, sql_literal, t
 from .catalog import register
 
 _PARAM_CODES = sorted(PARAMETER)  # 16
@@ -64,33 +67,39 @@ JOIN (VALUES {_SQL_PERIOD_IDX}) AS pk(idx, period_key) ON pk.idx = p_partkey % 1
 
 def _inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = t(spark, sf_dir, "part")
-    pc = dim_df(
-        spark,
-        {str(i): c for i, c in enumerate(_PARAM_CODES)},
-        "idx_s",
-        "code",
-    ).select(F.col("idx_s").cast("int").alias("idx"), "code")
-    pk = dim_df(
-        spark,
-        {str(i): k for i, k in enumerate(_PERIOD_KEYS)},
-        "idx_s",
-        "period_key",
-    ).select(F.col("idx_s").cast("int").alias("idx"), "period_key")
+    codes = F.expr(f"array({', '.join(map(sql_literal, _PARAM_CODES))})")
+    keys = F.expr(f"array({', '.join(map(sql_literal, _PERIOD_KEYS))})")
+    ci, ki = F.col("p_partkey") % 16, F.col("p_partkey") % 17
     stat = (
         F.when(F.col("p_size") % 3 == 0, "mean")
         .when(F.col("p_size") % 3 == 1, "max")
         .otherwise("min")
     )
-    return (
-        p.join(F.broadcast(pc), (F.col("p_partkey") % 16) == pc.idx)
-        .join(F.broadcast(pk), (F.col("p_partkey") % 17) == pk.idx)
-        .select(
-            "p_partkey",
-            F.concat_ws(
-                "_", F.lit("vcsn"), F.col("code"), F.lit("a"), F.lit("b"),
-                stat, F.col("period_key"),
-            ).alias("base_name"),
-        )
+    # a null or negative index matches no row of the oracle's index
+    # tables, so its part is dropped here too
+    return p.filter((ci >= 0) & (ki >= 0)).select(
+        "p_partkey",
+        F.concat_ws(
+            "_", F.lit("vcsn"), F.element_at(codes, (ci + 1).cast("int")),
+            F.lit("a"), F.lit("b"), stat,
+            F.element_at(keys, (ki + 1).cast("int")),
+        ).alias("base_name"),
+    )
+
+
+def _named_products(inv: DataFrame) -> DataFrame:
+    """``inv``'s grids with their product, parameter and period names
+    (copy_esrigrid…py:244–251), by ``naming.lookup``. A grid with an
+    unknown code is dropped, as the oracle's inner joins drop it."""
+    parsed = parse_base_name(F.col("base_name"))
+    parameter = lookup(PARAMETER, parsed["parameter_code"])
+    period = lookup(MONTH_SEASON, parsed["period_key"])
+    return inv.filter(parameter.isNotNull() & period.isNotNull()).select(
+        "p_partkey",
+        product_name(parameter, parsed["statistic"], period).alias("product_name"),
+        parameter.alias("parameter_name"),
+        period.alias("period_name"),
+        parsed["statistic"].alias("statistic"),
     )
 
 
@@ -237,27 +246,12 @@ def q72_metadata_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-file testdata it ran as ONE task; fan_out (r12, guide §2.5)
     spreads the ~320 k-document string assembly across the session and
     is a no-op once the input scan carries real splits."""
-    inv = fan_out(_inventory(spark, sf_dir))
-    parsed = parse_base_name(F.col("base_name"))
-    pn = dim_df(spark, PARAMETER, "parameter_code", "parameter_name")
-    mn = dim_df(spark, MONTH_SEASON, "period_key", "period_name")
-    prod = (
-        inv.select("p_partkey", "base_name", *[c.alias(n) for n, c in parsed.items()])
-        .join(F.broadcast(pn), ["parameter_code"])
-        .join(F.broadcast(mn), ["period_key"])
-        .select(
-            "p_partkey",
-            product_name(
-                F.col("parameter_name"), F.col("statistic"), F.col("period_name")
-            ).alias("product_name"),
-            "parameter_name",
-            "period_name",
-            "statistic",
-            (F.col("p_partkey") % 100).cast("int").alias("xmin"),
-            (F.col("p_partkey") % 50).cast("int").alias("ymin"),
-            (F.col("p_partkey") % 100 + 10).cast("int").alias("xmax"),
-            (F.col("p_partkey") % 50 + 5).cast("int").alias("ymax"),
-        )
+    prod = _named_products(fan_out(_inventory(spark, sf_dir))).select(
+        "*",
+        (F.col("p_partkey") % 100).cast("int").alias("xmin"),
+        (F.col("p_partkey") % 50).cast("int").alias("ymin"),
+        (F.col("p_partkey") % 100 + 10).cast("int").alias("xmax"),
+        (F.col("p_partkey") % 50 + 5).cast("int").alias("ymax"),
     )
     reg = dim_df(spark, REGION, "regc_code", "region_name").filter(
         F.col("regc_code") != "99"
@@ -390,31 +384,14 @@ GROUP BY output_name, parameter, period, prod.statistic, region
 )
 def q75_ref_product_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship REF-parity dataflow's RELATIONAL CORE, hash-checked:
-    positional parse → lookup-dim joins → product naming
+    positional parse → name lookups → product naming
     (copy_esrigrid…py:244–251) → products × regions fan-out (:229–270,
     output naming ``{{product}}_{{region}}``, :292) → per-output source
     counts. This is q74 minus the file-based raster decode/clip (which
-    stays rows-only + pytest-covered by construction): the naming, dim
-    joins, skip-99 predicate, fan-out, and inventory grouping are now
+    stays rows-only + pytest-covered by construction): the naming,
+    lookups, skip-99 predicate, fan-out, and inventory grouping are now
     under the external hash gate (VERDICT r1 'What's wrong' #7)."""
-    inv = _inventory(spark, sf_dir)
-    parsed = parse_base_name(F.col("base_name"))
-    pn = dim_df(spark, PARAMETER, "parameter_code", "parameter_name")
-    mn = dim_df(spark, MONTH_SEASON, "period_key", "period_name")
-    prod = (
-        inv.select("p_partkey", "base_name", *[c.alias(n) for n, c in parsed.items()])
-        .join(F.broadcast(pn), ["parameter_code"])
-        .join(F.broadcast(mn), ["period_key"])
-        .select(
-            "p_partkey",
-            product_name(
-                F.col("parameter_name"), F.col("statistic"), F.col("period_name")
-            ).alias("product_name"),
-            "parameter_name",
-            "period_name",
-            "statistic",
-        )
-    )
+    prod = _named_products(_inventory(spark, sf_dir))
     reg = dim_df(spark, REGION, "regc_code", "region_name").filter(
         F.col("regc_code") != "99"
     )
@@ -439,91 +416,57 @@ def q75_ref_product_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=None,  # file-based raster pipeline -> driver rows-only check
 )
 def q74_ref_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's WHOLE dataflow spine as one lazy plan
-    (copy_esrigrid…py:225–373): synthesize deterministic .asc grids,
-    recursive-scan + decode them (sources.asc), fan out rasters×regions
-    (:229–270), clip each raster to each region polygon
-    (operators.raster.clip_to_polygon), compute the sidecar statistics
-    (:315–339), and compose output names via the lookup dims
-    (:244–251, 292: ``{product}_{region}``). Rows-only check: the
-    pipeline is file-based, outside the SQL oracle's reach."""
+    """The reference's WHOLE dataflow spine (copy_esrigrid…py:225–373)
+    as ``cli.build_products`` runs it, over a fixture of three
+    deterministic .asc grids and three triangular regions: recursive
+    scan + decode (sources.asc), rasters × regions fan-out (:229–270),
+    clip to each region polygon, sidecar statistics (:315–339) and
+    output names ``{product}_{region}`` (:244–251, 292). Rows-only
+    check: the pipeline is file-based, outside the SQL oracle's reach.
+
+    Each call writes every grid of the fixture under a temporary name
+    and renames it into place, so a run that died mid-write, or one
+    running beside it, leaves no partial fixture behind."""
     import os
     import tempfile
 
-    from ..operators.raster import clip_to_polygon, raster_stats
+    from ..cli import build_products
     from ..sources.asc import read_asc, write_asc
 
     base_dir = os.path.join(tempfile.gettempdir(), "geoetl_ref_e2e_fixture")
-    if not os.path.isdir(base_dir):
-        os.makedirs(base_dir, exist_ok=True)
-        for i, (param, period) in enumerate(
-            [("00", "monthly1"), ("02", "annual"), ("09", "seasonal3")]
-        ):
-            cells = [
-                float((r * 7 + c * 3 + i) % 50)
-                for r in range(20)
-                for c in range(20)
-            ]
-            write_asc(
-                os.path.join(base_dir, f"vcsn_{param}_a_b_mean_{period}.asc"),
-                20, 20, cells,
-            )
+    os.makedirs(base_dir, exist_ok=True)
+    for i, (param, period) in enumerate(
+        [("00", "monthly1"), ("02", "annual"), ("09", "seasonal3")]
+    ):
+        cells = [
+            float((r * 7 + c * 3 + i) % 50) for r in range(20) for c in range(20)
+        ]
+        path = os.path.join(base_dir, f"vcsn_{param}_a_b_mean_{period}.asc")
+        tmp = f"{path}.{os.getpid()}.tmp"
+        write_asc(tmp, 20, 20, cells)
+        os.replace(tmp, path)
 
+    # deterministic triangular "council" footprints in grid space; the
+    # dashed REGION names are their own titles (naming.region_title)
+    triangles = {
+        "01": "POLYGON((1 0, 20 0, 20 6, 1 0))",
+        "09": "POLYGON((2 0, 20 0, 20 14, 2 0))",
+        "13": "POLYGON((6 0, 20 0, 20 7, 6 0))",
+    }
+    regions = literal_df(
+        spark,
+        [(c, REGION[c], REGION[c], wkt) for c, wkt in triangles.items()],
+        ["regc_code", "region_name", "region_name_ascii", "wkt"],
+    )
     rasters = read_asc(spark, base_dir, crs="EPSG:27200")
-    parsed = parse_base_name(F.col("base_name"))
-    naming = rasters.select(
-        F.col("base_name").alias("grid_name"),
-        *[c.alias(n) for n, c in parsed.items()],
-    )
-
-    regions = (
-        dim_df(spark, REGION, "regc_code", "region_name")
-        .filter(F.col("regc_code").isin("01", "09", "13"))
-        .select(
-            "regc_code",
-            "region_name",
-            # deterministic triangular "council" footprint in grid space
-            F.format_string(
-                "POLYGON((%d 0, 20 0, 20 %d, %d 0))",
-                F.col("regc_code").cast("int") % 7,
-                F.col("regc_code").cast("int") % 11 + 5,
-                F.col("regc_code").cast("int") % 7,
-            ).alias("wkt"),
-        )
-    )
-
-    # rasters × regions fan-out; region identity rides inside base_name
-    # (the reference names outputs `{product}_{region}.tif`, :292)
-    fanout = (
-        rasters.crossJoin(F.broadcast(regions))
-        .withColumn(
-            "base_name", F.concat_ws("#", "base_name", "region_name")
-        )
-        .drop("regc_code", "region_name")
-    )
-    clipped = clip_to_polygon(fanout, F.col("wkt"))
-    stats = raster_stats(clipped).select(
-        F.element_at(F.split("base_name", "#"), 1).alias("grid_name"),
-        F.element_at(F.split("base_name", "#"), 2).alias("region_name"),
-        "n_cells", "min_val", "max_val", "mean_val",
-    )
-
-    pn = dim_df(spark, PARAMETER, "parameter_code", "parameter_name")
-    mn = dim_df(spark, MONTH_SEASON, "period_key", "period_name")
     return (
-        stats.join(naming, "grid_name")
-        .join(F.broadcast(pn), ["parameter_code"])
-        .join(F.broadcast(mn), ["period_key"])
+        build_products(spark, rasters, regions)
+        .filter(F.col("product_name").isNotNull())
         .select(
-            "grid_name",
-            F.concat_ws(
-                "_",
-                product_name(
-                    F.col("parameter_name"), F.col("statistic"),
-                    F.col("period_name"),
-                ),
-                F.col("region_name"),
-            ).alias("output_name"),
-            "region_name", "n_cells", "min_val", "max_val", "mean_val",
+            F.col("base_name").alias("grid_name"),
+            F.col("product_name").alias("output_name"),
+            "region_name",
+            F.col("n_cells").cast("bigint"),
+            "min_val", "max_val", "mean_val",
         )
     )

@@ -18,13 +18,13 @@ def test_oracle_twins_resolve():
 
 def test_no_oracle_set_is_documented():
     """Every rows-only entry is either inherently un-SQL-able (q29
-    sketches, q74 side-effecting e2e) or twinned to a hash-checked
+    sketches, q74 file-based raster pipeline) or twinned to a hash-checked
     companion. New no-oracle entries must join one of those lists."""
     inherent = {
         "q29_sketch_aggregates",   # engine-specific sketches — but bounded:
                                    # in-plan *_within_bound columns vs exact
                                    # twins, asserted two scales below
-        "q74_ref_pipeline_e2e",    # side-effecting sink
+        "q74_ref_pipeline_e2e",    # file-based raster pipeline
         "q114_kmeans_clusters",    # iterative float algorithm (invariants
                                    # + determinism asserted in test_operators)
     }

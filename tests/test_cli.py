@@ -315,3 +315,67 @@ def test_cli_region_that_misses_the_grid_ships_a_0x0_product(spark, tmp_path):
         tif = decode_cog(zf.read(f"{name}.tif"))
     assert asc.startswith("ncols 0\nnrows 0\n")
     assert (tif["width"], tif["height"], list(tif["cells"])) == (0, 0, [])
+
+
+# q74 runs the pipeline spine (``build_products``) over its own fixture of
+# three 20×20 grids and three triangle regions; it has no oracle, so its
+# rows are pinned here, floats compared with ==.
+Q74_SCHEMA = (
+    "struct<grid_name:string,output_name:string,region_name:string,"
+    "n_cells:bigint,min_val:double,max_val:double,mean_val:double>"
+)
+Q74_ROWS = [
+    ("vcsn_00_a_b_mean_monthly1",
+     "Total-Rainfall_mean_1991-2020_January_Canterbury",
+     "Canterbury", 49, 0.0, 49.0, 16.612244897959183),
+    ("vcsn_00_a_b_mean_monthly1",
+     "Total-Rainfall_mean_1991-2020_January_Northland",
+     "Northland", 57, 0.0, 49.0, 19.07017543859649),
+    ("vcsn_00_a_b_mean_monthly1",
+     "Total-Rainfall_mean_1991-2020_January_Wellington",
+     "Wellington", 127, 0.0, 49.0, 25.062992125984252),
+    ("vcsn_02_a_b_mean_annual",
+     "Mean-Air-Temperature_mean_1991-2020_Annual_Canterbury",
+     "Canterbury", 49, 0.0, 49.0, 16.591836734693878),
+    ("vcsn_02_a_b_mean_annual",
+     "Mean-Air-Temperature_mean_1991-2020_Annual_Northland",
+     "Northland", 57, 0.0, 49.0, 19.19298245614035),
+    ("vcsn_02_a_b_mean_annual",
+     "Mean-Air-Temperature_mean_1991-2020_Annual_Wellington",
+     "Wellington", 127, 0.0, 49.0, 24.881889763779526),
+    ("vcsn_09_a_b_mean_seasonal3",
+     "Total-Sunshine_mean_1991-2020_Winter_Canterbury",
+     "Canterbury", 49, 0.0, 42.0, 16.571428571428573),
+    ("vcsn_09_a_b_mean_seasonal3",
+     "Total-Sunshine_mean_1991-2020_Winter_Northland",
+     "Northland", 57, 0.0, 49.0, 18.43859649122807),
+    ("vcsn_09_a_b_mean_seasonal3",
+     "Total-Sunshine_mean_1991-2020_Winter_Wellington",
+     "Wellington", 127, 0.0, 49.0, 24.700787401574804),
+]
+
+
+def _q74(spark):
+    from geospatial_etl_pipeline_spark.plans import catalog
+
+    catalog.load_all_plans()
+    return catalog.QUERIES["q74_ref_pipeline_e2e"].fn(spark, "")
+
+
+def test_q74_rows_are_pinned(spark):
+    df = _q74(spark)
+    assert df.schema.simpleString() == Q74_SCHEMA
+    assert sorted(tuple(r) for r in df.collect()) == Q74_ROWS
+
+
+def test_q74_rewrites_a_partial_fixture(spark, tmp_path, monkeypatch):
+    """A run that died after writing one of q74's three grids leaves a
+    partial fixture directory; the next run still sees all three grids."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    fixture = tmp_path / "geoetl_ref_e2e_fixture"
+    fixture.mkdir()
+    write_asc(str(fixture / "vcsn_00_a_b_mean_monthly1.asc"), 20, 20,
+              [float((r * 7 + c * 3) % 50) for r in range(20) for c in range(20)])
+    assert sorted(tuple(r) for r in _q74(spark).collect()) == Q74_ROWS

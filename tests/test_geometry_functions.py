@@ -1,22 +1,15 @@
-"""Unit tests: pure-Python geometry primitives + pandas-UDF wrappers."""
+"""Unit tests: the clip's WKT parser, its reference point-in-polygon
+predicate, the NZTM projection and the NTv2 datum hook."""
 
 from __future__ import annotations
-
-import json
 
 import numpy as np
 import pytest
 
 from geospatial_etl_pipeline_spark.functions.geometry import (
-    envelope,
-    envelope_polygon,
-    geojson_polygon,
     lonlat_to_nztm,
-    lonlat_to_webmercator,
     parse_wkt_polygon,
     points_in_polygon,
-    polygon_wkt,
-    shoelace_area,
 )
 
 SQUARE = "POLYGON((0 0, 4 0, 4 4, 0 4, 0 0))"
@@ -26,29 +19,7 @@ WITH_HOLE = "POLYGON((0 0, 10 0, 10 10, 0 10, 0 0), (4 4, 6 4, 6 6, 4 6, 4 4))"
 def test_wkt_roundtrip():
     rings = parse_wkt_polygon(SQUARE)
     assert len(rings) == 1 and rings[0].shape == (5, 2)
-    assert polygon_wkt(rings) == "POLYGON((0 0, 4 0, 4 4, 0 4, 0 0))"
-
-
-def test_envelope_and_polygon():
-    rings = parse_wkt_polygon("POLYGON((1 2, 5 2, 3 7, 1 2))")
-    assert envelope(rings) == (1.0, 2.0, 5.0, 7.0)
-    ring = envelope_polygon(1, 2, 5, 7)
-    assert ring[0].tolist() == [1, 2] and ring[2].tolist() == [5, 7]
-    assert (ring[0] == ring[-1]).all()
-
-
-def test_geojson_polygon_shape():
-    doc = json.loads(geojson_polygon(parse_wkt_polygon(SQUARE)))
-    assert doc["type"] == "Polygon"
-    assert doc["coordinates"][0][0] == [0.0, 0.0]
-    assert len(doc["coordinates"][0]) == 5
-
-
-def test_area_with_hole():
-    rings = parse_wkt_polygon(WITH_HOLE)
-    outer = abs(shoelace_area(rings[0]))
-    hole = abs(shoelace_area(rings[1]))
-    assert outer == 100.0 and hole == 4.0
+    assert rings[0].tolist() == [[0, 0], [4, 0], [4, 4], [0, 4], [0, 0]]
 
 
 def test_points_in_polygon_even_odd():
@@ -68,41 +39,6 @@ def test_nztm_known_point():
     e, n = lonlat_to_nztm(np.array([174.7772]), np.array([-41.2889]))
     assert e[0] == pytest.approx(1_748_813.84, abs=0.01)
     assert n[0] == pytest.approx(5_427_648.31, abs=0.01)
-
-
-def test_webmercator_known_point():
-    x, y = lonlat_to_webmercator(np.array([180.0]), np.array([0.0]))
-    assert x[0] == pytest.approx(20037508.34, rel=1e-6)
-    assert y[0] == pytest.approx(0.0, abs=1e-6)
-
-
-def test_spark_udfs(spark):
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [(1, 2.0, 2.0), (2, 5.0, 5.0), (3, 11.0, 1.0)], ["id", "x", "y"]
-    ).withColumn("wkt", F.lit(WITH_HOLE))
-    from geospatial_etl_pipeline_spark.functions.geometry import (
-        st_area,
-        st_asgeojson,
-        st_contains_wkt,
-        st_envelope_wkt,
-    )
-
-    rows = df.select(
-        "id",
-        st_contains_wkt("wkt", "x", "y").alias("inside"),
-        st_envelope_wkt("wkt").alias("env"),
-        st_area("wkt").alias("area"),
-        st_asgeojson("wkt").alias("gj"),
-    ).collect()
-    by_id = {r["id"]: r for r in rows}
-    assert by_id[1]["inside"] is True
-    assert by_id[2]["inside"] is False  # inside the hole
-    assert by_id[3]["inside"] is False
-    assert by_id[1]["area"] == 96.0
-    assert by_id[1]["env"].startswith("POLYGON((0 0, 10 0")
-    assert json.loads(by_id[1]["gj"])["type"] == "Polygon"
 
 
 # --------------------------------------------------------------------------

@@ -161,6 +161,27 @@ def test_upload_artifacts_failed_copy_raises(spark, tmp_path):
     assert (dest_dir / "b.zip").read_bytes() == b"b.zip"
 
 
+def test_upload_artifacts_directory_at_the_name_raises(spark, tmp_path):
+    """Hadoop copies a file onto an existing empty directory INTO it and
+    reports success, so ``dest/b.zip/`` would end up holding the zip
+    while ``dest/b.zip`` is no zip: the upload raises and names it."""
+    import pytest as _pytest
+
+    from geospatial_etl_pipeline_spark.operators.sinks import (
+        upload_artifacts,
+    )
+
+    src = tmp_path / "zips"
+    src.mkdir()
+    for name in ("a.zip", "b.zip"):
+        (src / name).write_bytes(name.encode())
+    dest_dir = tmp_path / "bucket"
+    (dest_dir / "b.zip").mkdir(parents=True)
+
+    with _pytest.raises(IOError, match="b.zip"):
+        upload_artifacts(spark, str(src), f"file://{dest_dir}")
+
+
 def test_upload_artifacts_unresolvable_dest_raises(spark, tmp_path):
     """The permissive mode must never extend to the DESTINATION: a dest
     filesystem that cannot be constructed — here the s3a scheme with no
