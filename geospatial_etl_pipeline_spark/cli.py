@@ -21,23 +21,26 @@ Dataflow (DataFrame operators, not a file loop):
   zip and the metadata JSON (operators.sinks) and returns its S3 URI
   target (:377–406) → upload manifest → optional upload. Each product
   is one row from the fan-out to its zip, carrying its region and its
-  name: it is clipped once, crosses into Python once, and no shuffle
-  moves its cells. Each grid is decoded twice: once for its cells, and
-  once more in the scan the clip takes its masks' georeference from.
+  name, and no shuffle moves its cells. Each grid is scanned and decoded
+  once. Each product crosses into Python twice, in one task: the clip
+  kernel, then the packaging kernel, with the stats taken in the JVM
+  between them.
 
-``run`` issues a short sequence of Spark jobs. Strict mode first
-collects the grids whose file name has an unknown code: one job that
-reads the file listing, not the files, and raises before any output is
-written. Then one action runs the whole pipeline: the upload manifest's
-parquet write with a bucket, a collect of the kernel's rows without
-one. Under it run the regions' broadcast and three jobs for the clip's
-masks: a second regions broadcast for the fan-out the masks are taken
-from, the distinct of its (georeference, polygon) pairs, and the masks'
-broadcast. The counts and the 10-row sample are read back from the
-written manifest. The upload itself is a driver-side file copy, one
-thread per core. One strict ``run`` with a bucket and an upload issues
-7 Spark jobs (counted under a job group, ``test_cli``), on perfbench's
-96-product etl_grids job as on the 4-product test fixture.
+``run`` issues a short sequence of Spark jobs. One strict ``run`` with
+a bucket and an upload issues 4 (counted under a job group,
+``test_cli``), on perfbench's 96-product etl_grids job as on the
+4-product test fixture:
+
+1. strict mode's collect of the grids whose file name has an unknown
+   code. It reads the file listing, not the files, and raises before
+   any output is written;
+2. the regions' broadcast for the fan-out;
+3. the upload manifest's parquet write, the one action that runs the
+   whole pipeline: the clip, the stats and the packaging kernel, in
+   one stage (without a bucket, a collect of the kernel's rows);
+4. the manifest's read-back for the counts and the 10-row sample.
+
+The upload itself is a driver-side file copy, one thread per core.
 
 A region whose polygon misses a grid still makes a product, counted in
 strict mode: the clip leaves it 0×0, so its zip holds a 0×0 ``.asc``, a
@@ -237,40 +240,34 @@ def product_files(products: DataFrame) -> DataFrame:
     )
 
 
-def _metadata_json() -> Column:
-    """A product row's metadata document as JSON text: the title, the
-    clipped extent's envelope → polygon ring (REF:438) encoded as GeoJSON
-    (:451), the climatology window's ``$date`` bounds and the run's
-    ``updatedAt``. The footprint is in the grid's CRS, named by
+def _metadata_json() -> str:
+    """SQL for a product row's metadata document as JSON text: the title,
+    the clipped extent's envelope → polygon ring (REF:438) encoded as
+    GeoJSON (:451), the climatology window's ``$date`` bounds and the
+    run's ``updatedAt``. The footprint is in the grid's CRS, named by
     ``footprint_crs``; nothing is reprojected, so no reprojection
     tolerance applies. The reference reprojects it to WGS84 (:434–439);
-    ROADMAP item 2 holds that step."""
-    xmin, ymin = F.col("xllcorner"), F.col("yllcorner")
-    xmax = xmin + F.col("width") * F.col("cellsize")
-    ymax = ymin + F.col("height") * F.col("cellsize")
-    ring = F.array(
-        F.array(xmin, ymin), F.array(xmax, ymin),
-        F.array(xmax, ymax), F.array(xmin, ymax), F.array(xmin, ymin),
+    ROADMAP item 2 holds that step. It is SQL text, one JVM call to
+    select, where the same expression built with Column functions makes
+    hundreds."""
+    xmin, ymin = "xllcorner", "yllcorner"
+    xmax = "(xllcorner + width * cellsize)"
+    ymax = "(yllcorner + height * cellsize)"
+    ring = ", ".join(
+        f"array({x}, {y})"
+        for x, y in ((xmin, ymin), (xmax, ymin), (xmax, ymax), (xmin, ymax), (xmin, ymin))
     )
-    iso = "yyyy-MM-dd'T'HH:mm:ss'Z'"
-    doc = F.struct(
-        F.col("product_name").alias("title"),
-        F.struct(
-            F.lit("Polygon").alias("type"),
-            F.array(ring).alias("coordinates"),
-        ).alias("geojson"),
-        F.struct(
-            F.date_format(F.to_date(F.lit(START_DATE)), iso).alias("$date")
-        ).alias("dateMin"),
-        F.struct(
-            F.date_format(F.to_date(F.lit(STOP_DATE)), iso).alias("$date")
-        ).alias("dateMax"),
-        F.struct(
-            F.date_format(F.current_timestamp(), iso).alias("$date")
-        ).alias("updatedAt"),
-        F.col("crs").alias("footprint_crs"),
-    )
-    return F.to_json(doc)
+
+    def date(value: str) -> str:
+        return f"""named_struct('$date', date_format({value}, "yyyy-MM-dd'T'HH:mm:ss'Z'"))"""
+
+    return f"""to_json(named_struct(
+        'title', product_name,
+        'geojson', named_struct('type', 'Polygon', 'coordinates', array(array({ring}))),
+        'dateMin', {date(f"to_date('{START_DATE}')")},
+        'dateMax', {date(f"to_date('{STOP_DATE}')")},
+        'updatedAt', {date("current_timestamp()")},
+        'footprint_crs', crs))"""
 
 
 def product_metadata(products: DataFrame) -> DataFrame:
@@ -278,8 +275,8 @@ def product_metadata(products: DataFrame) -> DataFrame:
     ``$date`` document of ``_metadata_json`` — the input shape of
     ``sinks.write_metadata_json``. ``run`` does not use it: its kernel
     writes each product's document from the same column."""
-    return products.select(
-        "product_name", _metadata_json().alias("metadata_json")
+    return products.selectExpr(
+        "product_name", f"{_metadata_json()} AS metadata_json"
     )
 
 
@@ -305,8 +302,8 @@ def _package_products(
                 targets.append(f"{upload_base}{name}.zip" if upload_base else None)
             yield pd.DataFrame({"upload_target": pd.Series(targets, dtype=object)})
 
-    return products.select(
-        *_PRODUCT_COLUMNS, _metadata_json().alias("metadata_json")
+    return products.selectExpr(
+        *_PRODUCT_COLUMNS, f"{_metadata_json()} AS metadata_json"
     ).mapInPandas(package, "upload_target string")
 
 
@@ -342,9 +339,12 @@ def run(
                 f"strict mode: {n_dropped} grid×region "
                 "products dropped by unknown parameter/period codes"
             )
-    products = build_products(spark, rasters, regions).filter(
-        F.col("product_name").isNotNull()
-    )
+    # a product without a name is dropped (permissive) before the fan-out:
+    # a filter on product_name would stop above the clip kernel, which no
+    # filter is pushed through, and clip every product it drops
+    _, parameter, period = _decoded_names()
+    known = rasters.filter(parameter.isNotNull() & period.isNotNull())
+    products = build_products(spark, known, regions)
 
     zip_dir = output_folder_zipped or os.path.join(output_folder, "zips")
     base = upload_prefix(bucket_name, s3prefix, "") if bucket_name else None

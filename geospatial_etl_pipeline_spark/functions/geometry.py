@@ -6,7 +6,7 @@ runs outside Spark expressions, as plain functions on numpy arrays:
 - WKT polygon decode (``parse_wkt_polygon``) and the clip's cell window
   with its scanline point-in-polygon mask (``window_mask``), which
   ``operators.raster.clip_to_polygon`` builds once per distinct
-  (georeference, polygon) pair;
+  (georeference, polygon) pair in each task;
 - even-odd point-in-polygon (``points_in_polygon``), the reference
   predicate the clip's mask is tested against;
 - the Transverse Mercator forward to the reference's output CRS,

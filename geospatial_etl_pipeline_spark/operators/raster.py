@@ -16,9 +16,10 @@ as composable DataFrame transformations:
 - ``clip_to_polygon``: ClippingGeometry semantics (:307) with
   NO_MAINTAIN_EXTENT (:309) — crop to the polygon's cell window, then
   mask cells whose centres fall outside it to NODATA (the engine's
-  defined clip contract, SURVEY §7 hard-part 1). The window and its mask
-  are built once per distinct (georeference, polygon) pair; the crop and
-  the mask are JVM array expressions.
+  defined clip contract, SURVEY §7 hard-part 1). One ``mapInPandas``
+  kernel clips each row where it is, with no job of its own; in each
+  task it builds the window and its mask once per distinct
+  (georeference, polygon) pair and crops and masks the cells in numpy.
 - ``resample_nearest``: cellSize="MINOF" resampling analogue (:300) in
   JVM expressions (nearest-neighbor decimation/replication).
 
@@ -37,16 +38,10 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    IntegerType,
-    StructField,
-    StructType,
-)
 
 from ..functions.geometry import parse_wkt_polygon, window_mask
 
@@ -174,6 +169,41 @@ def clip_to_bbox(
 _GEOREF = ("width", "height", "xllcorner", "yllcorner", "cellsize")
 
 
+def clip_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """``clip_to_polygon``'s ``mapInPandas`` kernel over batches of the
+    caller's rows plus the polygon's WKT as ``_wkt``; yields the rows
+    without ``_wkt``, each cropped to its window and masked.
+
+    One dict memoises ``window_mask`` per distinct (georeference,
+    polygon) key for the life of one call, which is one task: rows on
+    one georeference and polygon share one mask, and nothing outlives
+    the task. The window's extent is ``x + c0 * cs`` and
+    ``(y + h * cs) - (r0 + nh) * cs``, evaluated in that order: another
+    order can change the last bit."""
+    windows: dict[tuple, tuple] = {}
+    for pdf in batches:
+        out = pdf.drop(columns="_wkt")
+        geo = {c: pdf[c].tolist() for c in (*_GEOREF, "nodata_value", "_wkt")}
+        cells = pdf["cells"].tolist()
+        for i in range(len(pdf)):
+            w, h, x, y, cs, wkt = (geo[c][i] for c in (*_GEOREF, "_wkt"))
+            if wkt is None:
+                continue  # no polygon: the row passes through unmasked
+            key = (w, h, x, y, cs, wkt)
+            if key not in windows:
+                windows[key] = window_mask(w, h, x, y, cs, parse_wkt_polygon(wkt))
+            c0, r0, nw, nh, mask = windows[key]
+            grid = cells[i].reshape(h, w)[r0:r0 + nh, c0:c0 + nw].ravel()
+            cells[i] = np.where(mask, grid, geo["nodata_value"][i])
+            geo["width"][i], geo["height"][i] = nw, nh
+            geo["xllcorner"][i] = x + c0 * cs
+            geo["yllcorner"][i] = (y + h * cs) - (r0 + nh) * cs
+        for c in ("width", "height", "xllcorner", "yllcorner"):
+            out[c] = np.asarray(geo[c], dtype=pdf[c].dtype)
+        out["cells"] = cells
+        yield out
+
+
 def clip_to_polygon(rasters: DataFrame, wkt_col: Column | str) -> DataFrame:
     """ClippingGeometry + NO_MAINTAIN_EXTENT (:303–310): crop each raster
     to its polygon's cell window and mask the window's cells whose
@@ -187,69 +217,24 @@ def clip_to_polygon(rasters: DataFrame, wkt_col: Column | str) -> DataFrame:
     beside the raster (a region's code and name in
     ``cli.build_products``) stays on the product's own row.
 
-    One Python kernel builds each mask, once per distinct (georeference,
-    polygon) pair rather than once per row: a series of grids on one
-    georeference shares its masks. A broadcast join attaches each pair's
-    window and mask to its rows, and the crop and the mask run as JVM
-    array expressions, so no row crosses into Python.
+    One ``mapInPandas`` kernel (``clip_kernel``) clips the rows where
+    they are: no shuffle, no join and no job of its own. In each task it
+    builds a mask once per distinct (georeference, polygon) pair, so a
+    series of grids on one georeference shares its masks, then crops and
+    masks each row's cells in numpy.
 
     A row whose polygon is null (no regions file, or a region without
     geometry) passes through unmasked at full extent. A polygon that
     misses the grid gives a 0×0 raster with no cells, at the grid's
     top-left corner.
+
+    Scale note: each row's full grid crosses into Python through Arrow,
+    one copy per polygon it is clipped to (perfbench's job sends 96 ×
+    14,400 doubles, about 11 MB a run). ``tile`` large grids first, so
+    that a row holds one tile, not a whole raster.
     """
     staged = rasters.withColumn("_wkt", _col(wkt_col))
-    pairs = (
-        staged.select(*_GEOREF, "_wkt").filter(F.col("_wkt").isNotNull()).distinct()
-    )
-
-    def window_masks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            windows = [
-                window_mask(w, h, x, y, cs, parse_wkt_polygon(wkt))
-                for w, h, x, y, cs, wkt in zip(*(pdf[c] for c in (*_GEOREF, "_wkt")))
-            ]
-            out = pdf.copy()
-            for i, name in enumerate(("_c0", "_r0", "_nw", "_nh", "_mask")):
-                out[name] = [win[i] for win in windows]
-            yield out
-
-    schema = StructType(
-        pairs.schema.fields
-        + [StructField(c, IntegerType()) for c in ("_c0", "_r0", "_nw", "_nh")]
-        + [StructField("_mask", ArrayType(BooleanType()))]
-    )
-    masks = pairs.mapInPandas(window_masks, schema)
-    joined = staged.join(F.broadcast(masks), [*_GEOREF, "_wkt"], "left")
-
-    # A row without a mask (a null polygon) has null window columns, so
-    # each coalesce below falls back to the row's own value.
-    w, cs, nw = F.col("width"), F.col("cellsize"), F.col("_nw")
-    cells = F.transform(
-        "_mask",
-        lambda inside, k: F.when(
-            inside,
-            F.element_at(
-                "cells",
-                ((F.col("_r0") + (k / nw).cast("int")) * w
-                 + F.col("_c0") + k % nw + 1).cast("int"),
-            ),
-        ).otherwise(F.col("nodata_value")),
-    )
-    # Build the cells BEFORE width/height/... are aliased: the lambdas
-    # would otherwise bind to the new values (lateral column aliases).
-    cropped = joined.select("*", F.coalesce(cells, "cells").alias("_cells"))
-    ytop = F.col("yllcorner") + F.col("height") * cs
-    rewritten = {
-        "width": F.coalesce(nw, w),
-        "height": F.coalesce("_nh", "height"),
-        "xllcorner": F.coalesce(F.col("xllcorner") + F.col("_c0") * cs, "xllcorner"),
-        "yllcorner": F.coalesce(ytop - (F.col("_r0") + F.col("_nh")) * cs, "yllcorner"),
-        "cells": F.col("_cells"),
-    }
-    return cropped.select(
-        *[rewritten[c].alias(c) if c in rewritten else c for c in rasters.columns]
-    )
+    return staged.mapInPandas(clip_kernel, rasters.schema)
 
 
 def resample_nearest(rasters: DataFrame, factor: int) -> DataFrame:

@@ -151,7 +151,9 @@ def upload_artifacts(
     uri = jvm.java.net.URI(dest_base)
     dst_fs = jvm.org.apache.hadoop.fs.FileSystem.get(uri, conf)
     local_fs = jvm.org.apache.hadoop.fs.FileSystem.getLocal(conf)
+    # each attribute step is a py4j round trip: resolve the classes once
     hpath = jvm.org.apache.hadoop.fs.Path
+    file_util = jvm.org.apache.hadoop.fs.FileUtil
     if not os.path.isdir(src_dir):
         if tolerate_missing:
             return {"uploaded": [], "skipped_lock": 0, "dest_base": dest_base}
@@ -162,7 +164,7 @@ def upload_artifacts(
     def copy(name: str) -> str:
         src = os.path.join(src_dir, name)
         dst = hpath(f"{dest_base}/{name}")
-        ok = jvm.org.apache.hadoop.fs.FileUtil.copy(
+        ok = file_util.copy(
             local_fs, hpath(src), dst_fs, dst,
             False,  # keep the source
             True,   # overwrite (arcpy.env.overwriteOutput=True, REF:98)

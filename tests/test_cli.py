@@ -105,11 +105,13 @@ def test_cli_passthrough_without_regions(spark, io_dirs):
     assert result["zips"] == 2
 
 
-def test_build_products_crosses_python_once(spark, io_dirs):
+def test_build_products_scans_each_grid_once_and_clips_in_one_kernel(spark, io_dirs):
     """The decode runs in the JVM and the stats come from the clipped
-    row itself, so the executed plan of ``build_products`` holds one
-    ``MapInPandas``, the clip's, and ``read_asc``'s holds none. Counting
-    the grids reads no file content."""
+    row itself, so ``read_asc``'s executed plan holds no Python node and
+    ``build_products``' holds one ``binaryFile`` scan, one
+    ``BroadcastExchange`` (the regions') and one ``MapInPandas``: the
+    clip kernel, fed the product rows. Counting the grids reads no file
+    content."""
     src, _, regions = io_dirs
     rasters = read_asc(spark, str(src))
     read_plan = rasters._jdf.queryExecution().executedPlan().toString()
@@ -125,29 +127,30 @@ def test_build_products_crosses_python_once(spark, io_dirs):
         spark, rasters, cli.load_regions(spark, str(regions))
     )
     plan = products._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan binaryFile") == 1, plan
+    # the region rides on its product's row and the names come from map
+    # lookups, not joins: the fan-out's is the one broadcast
+    assert plan.count("BroadcastExchange") == 1, plan
     nodes = [ln for ln in plan.splitlines() if "MapInPandas" in ln]
     assert len(nodes) == 1, plan
-    # the clip's mask kernel, fed the distinct (georeference, polygon)
-    # pairs: no product's cells reach it
-    assert "window_masks(" in nodes[0], nodes[0]
-    assert not re.search(r"\bcells#", nodes[0]), nodes[0]
-    # three broadcasts: the regions for the fan-out; the regions again
-    # for the pairs' fan-out, which reads only the polygons and so is
-    # not reused; and the masks, which join back onto the products. The
-    # region rides on its product's row and the names come from map
-    # lookups, not joins.
-    assert plan.count("BroadcastExchange") == 3, plan
+    # the clip kernel, fed each product's row with its cells and polygon
+    assert "clip_kernel(" in nodes[0], nodes[0]
+    assert re.search(r"\bcells#", nodes[0]) and re.search(r"\bwkt#", nodes[0]), nodes[0]
 
 
 def test_cli_run_job_count(spark, io_dirs, tmp_path):
-    """One strict ``cli.run`` with a bucket and an upload issues 7 Spark
-    jobs: the strict check's collect of the grids with an unknown code
-    (it reads the file listing only), the regions' broadcast for the
-    fan-out, three for the clip's masks (the regions' broadcast for the
-    pairs' fan-out, the pairs' distinct and the masks' broadcast), the
-    upload manifest's write, which runs the one kernel that writes every
-    zip and document, and the manifest's read-back for the counts and
-    the sample. Reading the regions CSV with its schema runs no job."""
+    """One strict ``cli.run`` with a bucket and an upload issues 4 Spark
+    jobs:
+
+    1. the strict check's collect of the grids with an unknown code (it
+       reads the file listing only);
+    2. the regions' broadcast for the fan-out;
+    3. the upload manifest's write, which runs the clip kernel and the
+       one packaging kernel that writes every zip and document;
+    4. the manifest's read-back for the counts and the sample.
+
+    Reading the regions CSV with its schema runs no job, and the clip
+    runs none of its own."""
     src, _, regions = io_dirs
     sc = spark.sparkContext
     sc.setJobGroup("test_cli_run_job_count", "one cli.run")
@@ -161,7 +164,7 @@ def test_cli_run_job_count(spark, io_dirs, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup("test_cli_run_job_count")
-    assert len(jobs) == 7, sorted(jobs)
+    assert len(jobs) == 4, sorted(jobs)
 
 
 def test_cli_kernel_matches_the_wrappers(spark, io_dirs, tmp_path):

@@ -177,7 +177,7 @@ def test_lonlat_to_nztm_datum_hook():
     lat = np.array([-41.2865])
     e0, n0 = lonlat_to_nztm(lon, lat)
     e1, n1 = lonlat_to_nztm(lon, lat, datum_shift=nzgd1949_to_nzgd2000)
-    d = float(np.hypot(e1 - e0, n1 - n0))
+    d = float(np.hypot(e1 - e0, n1 - n0)[0])
     assert 50.0 < d < 400.0
 
 

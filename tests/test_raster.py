@@ -190,34 +190,12 @@ def test_clip_to_polygon_crops_to_the_window(spark, rasters):
     assert none["cells"] == [float(v) for v in range(100)]
 
 
-def _plan_metrics(df) -> list[tuple[str, dict]]:
-    """(node name, SQL metrics) of ``df``'s executed plan in pre-order,
-    through the query stages of adaptive execution."""
-    out = []
-
-    def walk(node):
-        ms = node.metrics()
-        keys = ms.keySet().iterator()
-        metrics = {}
-        while keys.hasNext():
-            k = keys.next()
-            metrics[k] = ms.apply(k).value()
-        out.append((node.nodeName(), metrics))
-        if node.nodeName().endswith("QueryStage"):
-            walk(node.plan())
-        children = node.children().iterator()
-        while children.hasNext():
-            walk(children.next())
-
-    plan = df._jdf.queryExecution().executedPlan()
-    walk(plan.executedPlan() if plan.nodeName() == "AdaptiveSparkPlan" else plan)
-    return out
-
-
-def test_clip_to_polygon_builds_one_mask_per_distinct_pair(spark, tmp_path):
+def test_clip_to_polygon_builds_one_mask_per_distinct_pair(spark, tmp_path, monkeypatch):
     """3 grids on one georeference × 2 regions are 6 rows but 2 distinct
-    (georeference, polygon) pairs: the mask kernel is fed 2 rows, and the
-    masks reach all 6."""
+    (georeference, polygon) pairs: the clip kernel builds 2 masks for one
+    batch of the 6 rows, and the masks reach all 6."""
+    from geospatial_etl_pipeline_spark.operators import raster
+
     for i in range(3):
         write_asc(str(tmp_path / f"g{i}.asc"), 10, 10, [float(v + i) for v in range(100)])
     polygons = spark.createDataFrame(
@@ -225,25 +203,42 @@ def test_clip_to_polygon_builds_one_mask_per_distinct_pair(spark, tmp_path):
          ("b", "POLYGON((2 2, 8 2, 2 8, 2 2))")],
         "region string, wkt string",
     )
-    out = clip_to_polygon(read_asc(spark, str(tmp_path)).crossJoin(polygons), "wkt")
-    rows = out.collect()
+    rasters = read_asc(spark, str(tmp_path)).crossJoin(polygons)
+
+    def want(base_name, region):
+        i = int(base_name[1:])
+        if region == "a":
+            return [float(r_ * 10 + c + i) for r_ in range(5, 10) for c in range(5)]
+        return [float(r_ * 10 + c + i) if c < r_ else -9999.0
+                for r_ in range(2, 8) for c in range(2, 8)]
+
+    rows = clip_to_polygon(rasters, "wkt").collect()
     assert len(rows) == 6
     for r in rows:
-        i = int(r["base_name"][1:])
-        if r["region"] == "a":
-            want = [float(r_ * 10 + c + i) for r_ in range(5, 10) for c in range(5)]
-        else:
-            want = [float(r_ * 10 + c + i) if c < r_ else -9999.0
-                    for r_ in range(2, 8) for c in range(2, 8)]
-        assert r["cells"] == want, (r["base_name"], r["region"])
+        assert r["cells"] == want(r["base_name"], r["region"]), (r["base_name"], r["region"])
 
-    nodes = _plan_metrics(out)
-    at = [i for i, (name, _) in enumerate(nodes) if name == "MapInPandas"]
-    assert len(at) == 1, nodes
-    assert nodes[at[0]][1]["pythonNumRowsReceived"] == 2
-    # the distinct aggregate under the kernel: the rows the kernel is fed
-    fed = next(m["numOutputRows"] for _, m in nodes[at[0] + 1:] if "numOutputRows" in m)
-    assert fed == 2, nodes
+    # the kernel itself, on the driver, over one pandas batch of the rows
+    calls = []
+    window_mask = raster.window_mask
+
+    def counting_window_mask(*args):
+        calls.append(args[:5])
+        return window_mask(*args)
+
+    monkeypatch.setattr(raster, "window_mask", counting_window_mask)
+    batch = rasters.withColumn("_wkt", rasters["wkt"]).toPandas()
+    (out,) = raster.clip_kernel(iter([batch]))
+    assert len(calls) == 2, calls
+    assert list(out.columns) == rasters.columns
+    spark_rows = {(r["base_name"], r["region"]): r for r in rows}
+    for _, r in out.iterrows():
+        assert list(r["cells"]) == want(r["base_name"], r["region"])
+        spark_row = spark_rows[(r["base_name"], r["region"])]
+        for c in ("width", "height", "xllcorner", "yllcorner"):
+            assert r[c] == spark_row[c], c
+    # the masks live for one call (one task): a second call builds its own
+    list(raster.clip_kernel(iter([batch])))
+    assert len(calls) == 4, calls
 
 
 def _same(a, b) -> bool:
