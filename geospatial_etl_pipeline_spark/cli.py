@@ -13,21 +13,20 @@ regardless of ``--regions_layer`` — SURVEY §2k.2; here both work):
 
 Dataflow (DataFrame operators, not a file loop):
   recursive .asc scan → decode (sources.asc) → × regions fan-out
-  (broadcast; region "99" excluded, :271–273) → crop to the region
-  polygon's cell window and mask the cells outside it (operators.raster,
-  NO_MAINTAIN_EXTENT, :309) → sidecar stats from the clipped row itself
-  → product naming via map lookups (:244–251, 292) → one kernel per
-  product row that encodes the .asc, the COG and the stats, writes the
-  zip and the metadata JSON (operators.sinks) and returns its S3 URI
-  target (:377–406) → upload manifest → optional upload. Each product
-  is one row from the fan-out to its zip, carrying its region and its
-  name, and no shuffle moves its cells. Each grid is scanned and decoded
-  once. Each product crosses into Python twice, in one task: the clip
-  kernel, then the packaging kernel, with the stats taken in the JVM
-  between them.
+  (broadcast; region "99" excluded, :271–273) → product naming via map
+  lookups in the JVM (:244–251, 292) → one kernel per product row that
+  crops it to the region polygon's cell window and masks the cells
+  outside it (operators.raster, NO_MAINTAIN_EXTENT, :309), takes its
+  sidecar stats (``raster.cell_stats``), encodes the .asc and the COG,
+  writes the zip and the metadata JSON (operators.sinks) and returns its
+  S3 URI target (:377–406) → upload manifest → optional upload. Each
+  product is one row from the fan-out to its zip, carrying its region
+  and its name, and no shuffle moves its cells. Each grid is scanned and
+  decoded once, and each product crosses into Python once: one
+  ``MapInPandas``, one Python worker start per task.
 
 ``run`` issues a short sequence of Spark jobs. One strict ``run`` with
-a bucket and an upload issues 4 (counted under a job group,
+a bucket and an upload issues 3 (counted under a job group,
 ``test_cli``), on perfbench's 96-product etl_grids job as on the
 4-product test fixture:
 
@@ -36,9 +35,9 @@ a bucket and an upload issues 4 (counted under a job group,
    any output is written;
 2. the regions' broadcast for the fan-out;
 3. the upload manifest's parquet write, the one action that runs the
-   whole pipeline: the clip, the stats and the packaging kernel, in
-   one stage (without a bucket, a collect of the kernel's rows);
-4. the manifest's read-back for the counts and the 10-row sample.
+   whole pipeline in one stage (without a bucket, a collect of the
+   kernel's rows). The product count and the 10-target sample are
+   observed on that write (``pyspark.sql.Observation``), in its job.
 
 The upload itself is a driver-side file copy, one thread per core.
 
@@ -68,10 +67,13 @@ import argparse
 import json
 import os
 from collections.abc import Iterator
+from datetime import datetime, timezone
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 from .functions.naming import (
     MONTH_SEASON,
@@ -85,7 +87,7 @@ from .functions.naming import (
     region_title,
 )
 from .operators.geotiff import encode_cog
-from .operators.raster import clip_to_polygon, with_raster_stats
+from .operators.raster import cell_stats, clip_rows
 from .operators.sinks import (
     upload_artifacts,
     upload_prefix,
@@ -152,22 +154,11 @@ def unknown_code_grids(rasters: DataFrame) -> DataFrame:
     )
 
 
-def build_products(
-    spark: SparkSession, rasters: DataFrame, regions: DataFrame
-) -> DataFrame:
-    """rasters × regions → clipped rasters with stats and product names.
-
-    Returns one row per (grid, region) product: the grid's raster
-    columns, its region's ``regc_code``/``region_name_ascii``/``wkt``,
-    n_cells/min/max/mean and ``product_name``. The region rides on the
-    product's own row from the fan-out through the clip, so nothing is
-    split back out or joined again. A clip that masks every cell keeps
-    its row, with n_cells = 0 and null min/max/mean, so strict mode
-    counts it as a product. ``product_name`` is null when the grid's
+def _named_fanout(rasters: DataFrame, regions: DataFrame) -> DataFrame:
+    """rasters × regions, one row per (grid, region) product, with its
+    ``product_name`` from map lookups in the JVM: null when the grid's
     parameter or period code is unknown (``unknown_code_grids``)."""
     fanout = rasters.crossJoin(F.broadcast(_real_regions(regions)))
-    with_stats = with_raster_stats(clip_to_polygon(fanout, F.col("wkt")))
-
     parsed, parameter, period = _decoded_names()
     name = F.when(
         parameter.isNotNull() & period.isNotNull(),
@@ -177,7 +168,56 @@ def build_products(
             region_title(F.col("region_name_ascii")),
         ),
     )
-    return with_stats.select("*", name.alias("product_name"))
+    return fanout.select("*", name.alias("product_name"))
+
+
+_STATS = (
+    ("n_cells", np.int32, IntegerType()),
+    ("min_val", np.float64, DoubleType()),
+    ("max_val", np.float64, DoubleType()),
+    ("mean_val", np.float64, DoubleType()),
+)
+
+
+def product_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """The one pass over each named product row: crop and mask its cells
+    to its region's polygon (``raster.clip_rows``, one mask per distinct
+    georeference and polygon in the task) and add its ``cell_stats`` as
+    n_cells/min_val/max_val/mean_val, null min/max/mean where no cell is
+    valid. ``build_products`` runs it alone; ``run``'s kernel packages
+    the rows it yields, in the same worker."""
+    windows: dict[tuple, tuple] = {}
+    for pdf in batches:
+        out = clip_rows(pdf, pdf["wkt"].tolist(), windows)
+        stats = [cell_stats(c, nd) for c, nd in zip(out["cells"], out["nodata_value"])]
+        for i, (name, dtype, _) in enumerate(_STATS):
+            # a null stat goes in as NaN, which Arrow sends as null
+            out[name] = np.array([s[i] for s in stats], dtype=dtype)
+        yield out
+
+
+def build_products(
+    spark: SparkSession, rasters: DataFrame, regions: DataFrame
+) -> DataFrame:
+    """rasters × regions → clipped rasters with stats and product names.
+
+    Returns one row per (grid, region) product: the grid's raster
+    columns, its region's ``regc_code``/``region_name_ascii``/``wkt``,
+    n_cells/min/max/mean and ``product_name``. The region rides on the
+    product's own row from the fan-out through the clip, so nothing is
+    split back out or joined again, and one kernel (``product_kernel``)
+    clips each row and takes its stats. A clip that masks every cell
+    keeps its row, with n_cells = 0 and null min/max/mean, so strict
+    mode counts it as a product. ``product_name`` is null when the
+    grid's parameter or period code is unknown (``unknown_code_grids``)."""
+    named = _named_fanout(rasters, regions)
+    fields = [f for f in named.schema.fields if f.name != "product_name"]
+    schema = StructType([
+        *fields,
+        *(StructField(name, t) for name, _, t in _STATS),
+        named.schema["product_name"],
+    ])
+    return named.mapInPandas(product_kernel, schema)
 
 
 # the columns of a product row that its zip and its document are made from
@@ -240,71 +280,105 @@ def product_files(products: DataFrame) -> DataFrame:
     )
 
 
-def _metadata_json() -> str:
-    """SQL for a product row's metadata document as JSON text: the title,
-    the clipped extent's envelope → polygon ring (REF:438) encoded as
-    GeoJSON (:451), the climatology window's ``$date`` bounds and the
-    run's ``updatedAt``. The footprint is in the grid's CRS, named by
-    ``footprint_crs``; nothing is reprojected, so no reprojection
-    tolerance applies. The reference reprojects it to WGS84 (:434–439);
-    ROADMAP item 2 holds that step. It is SQL text, one JVM call to
-    select, where the same expression built with Column functions makes
-    hundreds."""
-    xmin, ymin = "xllcorner", "yllcorner"
-    xmax = "(xllcorner + width * cellsize)"
-    ymax = "(yllcorner + height * cellsize)"
-    ring = ", ".join(
-        f"array({x}, {y})"
-        for x, y in ((xmin, ymin), (xmax, ymin), (xmax, ymax), (xmin, ymax), (xmin, ymin))
-    )
+def _utc_now() -> str:
+    """The current time in UTC as the document's ``$date`` text."""
+    return datetime.now(timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ")
 
-    def date(value: str) -> str:
-        return f"""named_struct('$date', date_format({value}, "yyyy-MM-dd'T'HH:mm:ss'Z'"))"""
 
-    return f"""to_json(named_struct(
-        'title', product_name,
-        'geojson', named_struct('type', 'Polygon', 'coordinates', array(array({ring}))),
-        'dateMin', {date(f"to_date('{START_DATE}')")},
-        'dateMax', {date(f"to_date('{STOP_DATE}')")},
-        'updatedAt', {date("current_timestamp()")},
-        'footprint_crs', crs))"""
+def product_document(row: dict, updated_at: str) -> dict:
+    """One product's metadata document: the title, the clipped extent's
+    envelope → polygon ring (REF:438) as GeoJSON (:451), the climatology
+    window's ``$date`` bounds, the run's ``updatedAt`` and
+    ``footprint_crs``, in that key order; a null field is left out. The
+    footprint is in the grid's CRS, named by ``footprint_crs``; nothing
+    is reprojected, so no reprojection tolerance applies. The reference
+    reprojects it to WGS84 (:434–439); ROADMAP item 2 holds that step.
+    ``row`` is one record of a pandas batch of product rows, its extent
+    the clipped one."""
+    x0, y0 = row["xllcorner"], row["yllcorner"]
+    x1 = x0 + row["width"] * row["cellsize"]
+    y1 = y0 + row["height"] * row["cellsize"]
+    doc = {
+        "title": row["product_name"],
+        "geojson": {
+            "type": "Polygon",
+            "coordinates": [[[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]],
+        },
+        "dateMin": {"$date": f"{START_DATE}T00:00:00Z"},
+        "dateMax": {"$date": f"{STOP_DATE}T00:00:00Z"},
+        "updatedAt": {"$date": updated_at},
+        "footprint_crs": row["crs"],
+    }
+    return {k: v for k, v in doc.items() if v is not None}
+
+
+_DOCUMENT_COLUMNS = (
+    "product_name", "width", "height", "xllcorner", "yllcorner", "cellsize", "crs",
+)
 
 
 def product_metadata(products: DataFrame) -> DataFrame:
-    """(product_name, metadata_json) rows, one per product: the flat
-    ``$date`` document of ``_metadata_json`` — the input shape of
-    ``sinks.write_metadata_json``. ``run`` does not use it: its kernel
-    writes each product's document from the same column."""
-    return products.selectExpr(
-        "product_name", f"{_metadata_json()} AS metadata_json"
+    """(product_name, metadata_json) rows, one per product: the
+    ``product_document`` as JSON text, ``updatedAt`` taken once per call
+    — the input shape of ``sinks.write_metadata_json``. ``run`` does not
+    use it: its kernel writes each product's document from the same
+    builder."""
+    updated_at = _utc_now()
+
+    def documents(batches: Iterator) -> Iterator:
+        for pdf in batches:
+            yield pd.DataFrame({
+                "product_name": pdf["product_name"],
+                "metadata_json": [
+                    json.dumps(product_document(row, updated_at))
+                    for row in pdf.to_dict("records")
+                ],
+            })
+
+    return products.select(*_DOCUMENT_COLUMNS).mapInPandas(
+        documents, "product_name string, metadata_json string"
     )
 
 
+# what run's kernel reads of a named product row; it takes the stats itself
+_KERNEL_COLUMNS = (
+    "product_name", "width", "height", "xllcorner", "yllcorner", "cellsize",
+    "nodata_value", "crs", "cells", "wkt",
+)
+
+
 def _package_products(
-    products: DataFrame, zip_dir: str, doc_dir: str, upload_base: str | None
+    named: DataFrame, zip_dir: str, doc_dir: str, upload_base: str | None
 ) -> DataFrame:
-    """The one kernel that packages each named product: per row it
-    builds the ``_product_members``, writes ``{zip_dir}/{name}.zip`` and
+    """``run``'s one kernel over the named product rows:
+    ``product_kernel`` clips each row and takes its stats, then, in the
+    same worker, its ``_product_members`` are written to
+    ``{zip_dir}/{name}.zip`` and its ``product_document`` to
     ``{doc_dir}/{name}.json`` (``sinks.write_zip``/``write_document``),
-    and returns one ``upload_target`` row: ``{upload_base}{name}.zip``,
-    or null without a base. Lazy: the caller's one action writes the
-    files, and a second action over the result would write them again."""
+    with ``updatedAt`` taken once, here on the driver. Returns one
+    ``upload_target`` row per product: ``{upload_base}{name}.zip``, or
+    null without a base. Lazy: the caller's one action writes the files,
+    and a second action over the result would write them again."""
     os.makedirs(zip_dir, exist_ok=True)
     os.makedirs(doc_dir, exist_ok=True)
+    updated_at = _utc_now()
 
-    def package(batches: Iterator) -> Iterator:
-        for pdf in batches:
+    def package_kernel(batches: Iterator) -> Iterator:
+        for pdf in product_kernel(batches):
             targets = []
             for row in pdf.to_dict("records"):
                 name = row["product_name"]
                 write_zip(os.path.join(zip_dir, f"{name}.zip"), _product_members(row))
-                write_document(os.path.join(doc_dir, f"{name}.json"), row["metadata_json"])
+                write_document(
+                    os.path.join(doc_dir, f"{name}.json"),
+                    product_document(row, updated_at),
+                )
                 targets.append(f"{upload_base}{name}.zip" if upload_base else None)
             yield pd.DataFrame({"upload_target": pd.Series(targets, dtype=object)})
 
-    return products.selectExpr(
-        *_PRODUCT_COLUMNS, f"{_metadata_json()} AS metadata_json"
-    ).mapInPandas(package, "upload_target string")
+    return named.select(*_KERNEL_COLUMNS).mapInPandas(
+        package_kernel, "upload_target string"
+    )
 
 
 def run(
@@ -344,26 +418,26 @@ def run(
     # filter is pushed through, and clip every product it drops
     _, parameter, period = _decoded_names()
     known = rasters.filter(parameter.isNotNull() & period.isNotNull())
-    products = build_products(spark, known, regions)
+    named = _named_fanout(known, regions)
 
     zip_dir = output_folder_zipped or os.path.join(output_folder, "zips")
     base = upload_prefix(bucket_name, s3prefix, "") if bucket_name else None
-    written = _package_products(products, zip_dir, output_folder, base)
+    written = _package_products(named, zip_dir, output_folder, base)
     uploads: list[str] = []
     if bucket_name:
         # the filesystem IS the uploader on a cluster (s3a committer):
         # the full manifest lands beside the documents as parquet, and
-        # writing it is the action that runs the kernel. The counts and
-        # a bounded sample for logging (permissive like :77–92) are read
-        # back from it: one short string per product.
-        manifest = os.path.join(output_folder, "_upload_manifest")
-        written.write.mode("overwrite").parquet(manifest)
-        targets = sorted(
-            r["upload_target"]
-            for r in spark.read.schema(written.schema).parquet(manifest).collect()
-        )
-        n_products = len(targets)
-        uploads = targets[:10]
+        # writing it is the action that runs the kernel. The count and a
+        # bounded sample for logging (permissive like :77–92) are
+        # observed on that same write, in its one job.
+        observed = Observation("upload_manifest")
+        written.observe(
+            observed,
+            F.expr("count(1)").alias("products"),
+            F.expr("slice(array_sort(collect_list(upload_target)), 1, 10)").alias("sample"),
+        ).write.mode("overwrite").parquet(os.path.join(output_folder, "_upload_manifest"))
+        metrics = observed.get
+        n_products, uploads = metrics["products"], list(metrics["sample"])
     else:
         n_products = len(written.collect())
     upload_result = None

@@ -19,7 +19,7 @@ GRS80); the NZGD1949 datum shift is a pluggable hook (functions/datum.py:
 NTv2 .gsb parser + bilinear shift when a grid is supplied, published
 3-parameter geocentric fallback within a pinned tolerance otherwise —
 SURVEY §7 hard-part 2). No pipeline output is reprojected yet: the
-footprint ``cli.run`` writes stays in the grid's CRS (``cli._metadata_json``).
+footprint ``cli.run`` writes stays in the grid's CRS (``cli.product_document``).
 """
 
 from __future__ import annotations

@@ -3,14 +3,14 @@
 Re-expresses the reference's raster pipeline (copy_esrigrid…py:259–346)
 as composable DataFrame transformations:
 
-- ``with_raster_stats`` and ``raster_stats``: the per-raster statistics
-  arcpy writes as sidecars (:5, :315), in two forms. ``with_raster_stats``
-  adds them to each row with JVM array expressions — the form for
-  products that are one row each (``cli.build_products``): no shuffle,
-  and every row keeps its stats, all-NODATA rows included.
-  ``raster_stats`` is the grouped form — explode + partial-aggregable
-  hash agg by ``base_name`` — for rasters split over several rows
-  (``tile``). On a one-row raster the two agree bit for bit.
+- ``raster_stats`` and ``cell_stats``: the per-raster statistics arcpy
+  writes as sidecars (:5, :315), in two forms. ``raster_stats`` is the
+  grouped form — explode + partial-aggregable hash agg by ``base_name``
+  — for rasters split over several rows (``tile``). ``cell_stats`` is
+  the per-row form in numpy, for a kernel that already holds a
+  product's cells (``cli.build_products``): no shuffle, and every row
+  keeps its stats, all-NODATA rows included. On a one-row raster the
+  two agree bit for bit.
 - ``clip_to_bbox``: extent clip with shrink-to-geometry
   (NO_MAINTAIN_EXTENT, :309) in pure JVM array expressions.
 - ``clip_to_polygon``: ClippingGeometry semantics (:307) with
@@ -20,6 +20,8 @@ as composable DataFrame transformations:
   kernel clips each row where it is, with no job of its own; in each
   task it builds the window and its mask once per distinct
   (georeference, polygon) pair and crops and masks the cells in numpy.
+  ``clip_rows`` is that crop and mask over one pandas batch;
+  ``cli.run``'s one kernel runs it too, then ``cell_stats``.
 - ``resample_nearest``: cellSize="MINOF" resampling analogue (:300) in
   JVM expressions (nearest-neighbor decimation/replication).
 
@@ -37,6 +39,7 @@ the explicit width/height arithmetic.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial, update_wrapper
 
 import numpy as np
 import pandas as pd
@@ -62,32 +65,24 @@ def raster_stats(rasters: DataFrame) -> DataFrame:
     )
 
 
-def with_raster_stats(rasters: DataFrame) -> DataFrame:
-    """Each raster row plus its statistics excluding NODATA cells:
-    ``n_cells``, ``min_val``, ``max_val``, ``mean_val``.
+def cell_stats(
+    cells: np.ndarray, nodata: float
+) -> tuple[int, float | None, float | None, float | None]:
+    """``(n_cells, min, max, mean)`` of one raster's cells, NODATA cells
+    excluded; min, max and mean are None when no cell is valid.
 
-    The sum folds left to right from 0.0, the order ``avg`` in
-    ``raster_stats`` takes over a one-row raster, so both forms give the
-    same bits. An all-NODATA row keeps ``n_cells`` = 0 with null
-    min/max/mean (``raster_stats`` emits no row for it)."""
-    # the valid cells are staged once, not re-filtered for each stat
-    staged = rasters.select(
-        "*", F.filter("cells", lambda v: v != F.col("nodata_value")).alias("_valid")
-    )
-    valid = F.col("_valid")
-    n = F.size(valid)
-    total = F.aggregate(valid, F.lit(0.0), lambda acc, v: acc + v)
-    return staged.select(
-        *rasters.columns,
-        n.alias("n_cells"),
-        F.array_min(valid).alias("min_val"),
-        F.array_max(valid).alias("max_val"),
-        F.when(n > 0, total / n).alias("mean_val"),
-    )
-
-
-def _col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
+    The same bits as ``raster_stats`` over a one-row raster: the sum
+    folds left from 0.0, the order ``avg`` takes (``np.sum`` sums
+    pairwise), and among equal values min and max keep the first, as
+    Spark does (``np.min`` of ``[0.0, -0.0]`` is ``-0.0``; Spark's is
+    ``0.0``)."""
+    cells = np.asarray(cells, dtype=np.float64)
+    valid = cells[cells != nodata]
+    n = len(valid)
+    if n == 0:
+        return 0, None, None, None
+    total = np.concatenate(([0.0], valid)).cumsum()[-1]
+    return n, float(valid[valid.argmin()]), float(valid[valid.argmax()]), float(total / n)
 
 
 def clip_to_bbox(
@@ -169,39 +164,53 @@ def clip_to_bbox(
 _GEOREF = ("width", "height", "xllcorner", "yllcorner", "cellsize")
 
 
-def clip_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """``clip_to_polygon``'s ``mapInPandas`` kernel over batches of the
-    caller's rows plus the polygon's WKT as ``_wkt``; yields the rows
-    without ``_wkt``, each cropped to its window and masked.
+def clip_rows(pdf: pd.DataFrame, wkts: list, windows: dict) -> pd.DataFrame:
+    """One pandas batch of raster rows, each cropped to its polygon's
+    window and masked: ``wkts`` holds each row's polygon as WKT, or None
+    for a row that passes through unmasked at full extent. Columns other
+    than the georeference and ``cells`` pass through.
 
-    One dict memoises ``window_mask`` per distinct (georeference,
-    polygon) key for the life of one call, which is one task: rows on
-    one georeference and polygon share one mask, and nothing outlives
-    the task. The window's extent is ``x + c0 * cs`` and
+    ``windows`` memoises ``window_mask`` per distinct (georeference,
+    polygon) key; the caller keeps one dict for one task, so rows on one
+    georeference and polygon share one mask and nothing outlives the
+    task. The window's extent is ``x + c0 * cs`` and
     ``(y + h * cs) - (r0 + nh) * cs``, evaluated in that order: another
     order can change the last bit."""
+    geo = {c: pdf[c].tolist() for c in (*_GEOREF, "nodata_value")}
+    cells = pdf["cells"].tolist()
+    for i, wkt in enumerate(wkts):
+        if wkt is None:
+            continue
+        w, h, x, y, cs = (geo[c][i] for c in _GEOREF)
+        key = (w, h, x, y, cs, wkt)
+        if key not in windows:
+            windows[key] = window_mask(w, h, x, y, cs, parse_wkt_polygon(wkt))
+        c0, r0, nw, nh, mask = windows[key]
+        grid = cells[i].reshape(h, w)[r0:r0 + nh, c0:c0 + nw].ravel()
+        cells[i] = np.where(mask, grid, geo["nodata_value"][i])
+        geo["width"][i], geo["height"][i] = nw, nh
+        geo["xllcorner"][i] = x + c0 * cs
+        geo["yllcorner"][i] = (y + h * cs) - (r0 + nh) * cs
+    out = pdf.copy(deep=False)
+    for c in ("width", "height", "xllcorner", "yllcorner"):
+        out[c] = np.asarray(geo[c], dtype=pdf[c].dtype)
+    out["cells"] = cells
+    return out
+
+
+def clip_kernel(
+    batches: Iterator[pd.DataFrame], wkt: str = "_wkt"
+) -> Iterator[pd.DataFrame]:
+    """``clip_to_polygon``'s ``mapInPandas`` kernel over batches of the
+    caller's rows, with each row's polygon as WKT in column ``wkt``;
+    yields the rows ``clip_rows`` crops and masks, with one mask per
+    distinct (georeference, polygon) key for the life of one call, which
+    is one task. A ``_wkt`` column, staged for a polygon given as an
+    expression, is dropped from the output."""
     windows: dict[tuple, tuple] = {}
     for pdf in batches:
-        out = pdf.drop(columns="_wkt")
-        geo = {c: pdf[c].tolist() for c in (*_GEOREF, "nodata_value", "_wkt")}
-        cells = pdf["cells"].tolist()
-        for i in range(len(pdf)):
-            w, h, x, y, cs, wkt = (geo[c][i] for c in (*_GEOREF, "_wkt"))
-            if wkt is None:
-                continue  # no polygon: the row passes through unmasked
-            key = (w, h, x, y, cs, wkt)
-            if key not in windows:
-                windows[key] = window_mask(w, h, x, y, cs, parse_wkt_polygon(wkt))
-            c0, r0, nw, nh, mask = windows[key]
-            grid = cells[i].reshape(h, w)[r0:r0 + nh, c0:c0 + nw].ravel()
-            cells[i] = np.where(mask, grid, geo["nodata_value"][i])
-            geo["width"][i], geo["height"][i] = nw, nh
-            geo["xllcorner"][i] = x + c0 * cs
-            geo["yllcorner"][i] = (y + h * cs) - (r0 + nh) * cs
-        for c in ("width", "height", "xllcorner", "yllcorner"):
-            out[c] = np.asarray(geo[c], dtype=pdf[c].dtype)
-        out["cells"] = cells
-        yield out
+        out = clip_rows(pdf, pdf[wkt].tolist(), windows)
+        yield out.drop(columns="_wkt", errors="ignore")
 
 
 def clip_to_polygon(rasters: DataFrame, wkt_col: Column | str) -> DataFrame:
@@ -214,14 +223,15 @@ def clip_to_polygon(rasters: DataFrame, wkt_col: Column | str) -> DataFrame:
     keeps falls outside it. ``width``, ``height``, ``xllcorner``,
     ``yllcorner`` and ``cells`` are rewritten to the window; every other
     column the caller passes rides through unchanged, so identity carried
-    beside the raster (a region's code and name in
-    ``cli.build_products``) stays on the product's own row.
+    beside the raster (a region's code and name) stays on its own row.
 
     One ``mapInPandas`` kernel (``clip_kernel``) clips the rows where
     they are: no shuffle, no join and no job of its own. In each task it
     builds a mask once per distinct (georeference, polygon) pair, so a
     series of grids on one georeference shares its masks, then crops and
-    masks each row's cells in numpy.
+    masks each row's cells in numpy. A ``wkt_col`` that names a column
+    is read by name, so the ring crosses into Python once; an expression
+    is staged as ``_wkt`` first.
 
     A row whose polygon is null (no regions file, or a region without
     geometry) passes through unmasked at full extent. A polygon that
@@ -233,7 +243,10 @@ def clip_to_polygon(rasters: DataFrame, wkt_col: Column | str) -> DataFrame:
     14,400 doubles, about 11 MB a run). ``tile`` large grids first, so
     that a row holds one tile, not a whole raster.
     """
-    staged = rasters.withColumn("_wkt", _col(wkt_col))
+    if isinstance(wkt_col, str):
+        kernel = update_wrapper(partial(clip_kernel, wkt=wkt_col), clip_kernel)
+        return rasters.mapInPandas(kernel, rasters.schema)
+    staged = rasters.withColumn("_wkt", wkt_col)
     return staged.mapInPandas(clip_kernel, rasters.schema)
 
 

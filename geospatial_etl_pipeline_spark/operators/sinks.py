@@ -57,11 +57,12 @@ def write_zip(path: str, files: Iterable[tuple[str, bytes]]) -> None:
             zf.writestr(_member(member), bytes(content))
 
 
-def write_document(path: str, metadata_json: str) -> None:
-    """Write one metadata document at ``path``, pretty-printed with
-    ``indent=4`` exactly like the reference (copy_esrigrid…py:496–498)."""
+def write_document(path: str, document: dict) -> None:
+    """Write one parsed metadata document at ``path``, pretty-printed
+    with ``indent=4`` exactly like the reference (copy_esrigrid…py:
+    496–498)."""
     with open(path, "w") as f:
-        json.dump(json.loads(metadata_json), f, indent=4)
+        json.dump(document, f, indent=4)
 
 
 def write_product_zips(files: DataFrame, out_dir: str) -> int:
@@ -92,7 +93,7 @@ def write_metadata_json(docs: DataFrame, out_dir: str) -> int:
         for row in rows:
             write_document(
                 os.path.join(out_dir, f"{row['product_name']}.json"),
-                row["metadata_json"],
+                json.loads(row["metadata_json"]),
             )
             n += 1
         yield n

@@ -6,6 +6,7 @@ import json
 import os
 import re
 import zipfile
+from datetime import datetime, timezone
 
 import pytest
 
@@ -75,6 +76,17 @@ def test_cli_end_to_end(spark, io_dirs):
     ring = doc["geojson"]["coordinates"][0]
     assert {y for _, y in ring} == {0.0, 6.0}
     assert {x for x, _ in ring} == {0.0, 10.0}
+    # the whole document, key order included, apart from updatedAt
+    assert list(doc) == ["title", "geojson", "dateMin", "dateMax",
+                         "updatedAt", "footprint_crs"]
+    assert {k: v for k, v in doc.items() if k != "updatedAt"} == {
+        "title": northland,
+        "geojson": {"type": "Polygon", "coordinates": [[
+            [0.0, 0.0], [10.0, 0.0], [10.0, 6.0], [0.0, 6.0], [0.0, 0.0]]]},
+        "dateMin": {"$date": "1991-01-01T00:00:00Z"},
+        "dateMax": {"$date": "2020-12-31T00:00:00Z"},
+        "footprint_crs": "EPSG:27200",
+    }
 
     docs = sorted(p for p in os.listdir(out) if p.endswith(".json"))
     assert len(docs) == 4
@@ -88,8 +100,7 @@ def test_cli_end_to_end(spark, io_dirs):
     assert result["upload_targets"][0].startswith(
         "s3a://climate-bucket/products/"
     )
-    # the counts are read back from the written manifest; Spark logs
-    # that "_upload_manifest" is a hidden path, but its rows are read
+    # the count and the sample are observed on the manifest's write
     assert result["n_upload_targets"] == len(result["upload_targets"]) == 4
     assert sorted(result["upload_targets"]) == result["upload_targets"]
     manifest = spark.read.parquet(str(out / "_upload_manifest"))
@@ -110,8 +121,8 @@ def test_build_products_scans_each_grid_once_and_clips_in_one_kernel(spark, io_d
     row itself, so ``read_asc``'s executed plan holds no Python node and
     ``build_products``' holds one ``binaryFile`` scan, one
     ``BroadcastExchange`` (the regions') and one ``MapInPandas``: the
-    clip kernel, fed the product rows. Counting the grids reads no file
-    content."""
+    product kernel that clips each row and takes its stats, fed the
+    product rows. Counting the grids reads no file content."""
     src, _, regions = io_dirs
     rasters = read_asc(spark, str(src))
     read_plan = rasters._jdf.queryExecution().executedPlan().toString()
@@ -133,21 +144,21 @@ def test_build_products_scans_each_grid_once_and_clips_in_one_kernel(spark, io_d
     assert plan.count("BroadcastExchange") == 1, plan
     nodes = [ln for ln in plan.splitlines() if "MapInPandas" in ln]
     assert len(nodes) == 1, plan
-    # the clip kernel, fed each product's row with its cells and polygon
-    assert "clip_kernel(" in nodes[0], nodes[0]
+    # the product kernel, fed each product's row with its cells and polygon
+    assert "product_kernel(" in nodes[0], nodes[0]
     assert re.search(r"\bcells#", nodes[0]) and re.search(r"\bwkt#", nodes[0]), nodes[0]
 
 
 def test_cli_run_job_count(spark, io_dirs, tmp_path):
-    """One strict ``cli.run`` with a bucket and an upload issues 4 Spark
+    """One strict ``cli.run`` with a bucket and an upload issues 3 Spark
     jobs:
 
     1. the strict check's collect of the grids with an unknown code (it
        reads the file listing only);
     2. the regions' broadcast for the fan-out;
-    3. the upload manifest's write, which runs the clip kernel and the
-       one packaging kernel that writes every zip and document;
-    4. the manifest's read-back for the counts and the sample.
+    3. the upload manifest's write, which runs the one kernel that clips
+       each product, takes its stats and writes its zip and document,
+       and observes the count and the sample.
 
     Reading the regions CSV with its schema runs no job, and the clip
     runs none of its own."""
@@ -164,7 +175,52 @@ def test_cli_run_job_count(spark, io_dirs, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup("test_cli_run_job_count")
-    assert len(jobs) == 4, sorted(jobs)
+    assert len(jobs) == 3, sorted(jobs)
+
+
+def _write_plan(spark, path: str) -> str:
+    """The physical plan of the session's last SQL execution that wrote
+    ``path``, from the SQL status store (kept with the UI off)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    runs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    for i in reversed(range(runs.length())):
+        plan = runs.apply(i).physicalPlanDescription()
+        if "InsertIntoHadoopFsRelationCommand" in plan and path in plan:
+            return plan
+    raise AssertionError(f"no write of {path}")
+
+
+def test_cli_run_crosses_into_python_once_per_product(spark, io_dirs, tmp_path):
+    """The executed plan of ``run``'s manifest write holds one
+    ``MapInPandas``, the kernel that clips, takes the stats and packages
+    each product, fed each product's cells and polygon once."""
+    src, _, regions = io_dirs
+    out = tmp_path / "out"
+    cli.run(spark, str(src), str(out), regions_csv=str(regions),
+            bucket_name="climate-bucket", strict=True)
+    plan = _write_plan(spark, str(out / "_upload_manifest"))
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert final.count("MapInPandas") == 1, plan
+    (args,) = set(re.findall(r"^Arguments: (package_kernel\(.*?\))#", plan, re.M))
+    assert len(re.findall(r"\bcells#", args)) == 1, args
+    assert len(re.findall(r"\bwkt#", args)) == 1, args
+
+
+def test_cli_updated_at_is_utc_in_any_session_time_zone(spark, io_dirs, tmp_path):
+    """``updatedAt`` is UTC whatever the session's time zone."""
+    src, _, regions = io_dirs
+    auckland = spark.newSession()
+    auckland.conf.set("spark.sql.session.timeZone", "Pacific/Auckland")
+    out = tmp_path / "out"
+    cli.run(auckland, str(src), str(out), regions_csv=str(regions))
+    now = datetime.now(timezone.utc)
+    docs = [p for p in os.listdir(out) if p.endswith(".json")]
+    assert len(docs) == 4
+    for d in docs:
+        stamp = json.loads((out / d).read_text())["updatedAt"]["$date"]
+        updated = datetime.strptime(stamp, "%Y-%m-%dT%H:%M:%SZ")
+        age = now - updated.replace(tzinfo=timezone.utc)
+        assert abs(age.total_seconds()) < 60, (stamp, now)
 
 
 def test_cli_kernel_matches_the_wrappers(spark, io_dirs, tmp_path):

@@ -3,17 +3,18 @@
 from __future__ import annotations
 
 import math
+import re
 import struct
 
 import pytest
 
 from geospatial_etl_pipeline_spark.operators.geotiff import encode_cog
 from geospatial_etl_pipeline_spark.operators.raster import (
+    cell_stats,
     clip_to_bbox,
     clip_to_polygon,
     raster_stats,
     resample_nearest,
-    with_raster_stats,
 )
 from geospatial_etl_pipeline_spark.sources.asc import read_asc, write_asc
 
@@ -154,6 +155,38 @@ def test_clip_to_polygon_masks_outside(spark, rasters):
     assert out["cells"][99] == 99.0
 
 
+def test_clip_to_polygon_sends_a_named_polygon_once(spark, rasters):
+    """A polygon column given by name is read by name: the kernel's
+    input holds the ring once, with no staged ``_wkt`` copy beside it.
+    A polygon given as an expression still clips."""
+    from pyspark.sql import functions as F
+
+    tri = "POLYGON((0 0, 10 0, 10 10, 0 0))"
+    inputs = rasters.withColumn("wkt", F.lit(tri))
+    clipped = clip_to_polygon(inputs, "wkt")
+    plan = clipped._jdf.queryExecution().executedPlan().toString()
+    (node,) = [ln for ln in plan.splitlines() if "MapInPandas" in ln]
+    assert "clip_kernel(" in node and "_wkt#" not in node, node
+    assert len(re.findall(r"\bwkt#", node.split(")#")[0])) == 1, node
+    by_expr = clip_to_polygon(inputs.drop("wkt"), F.lit(tri))
+    assert by_expr.columns == inputs.drop("wkt").columns
+    assert sorted(r["cells"] for r in by_expr.collect()) == sorted(
+        r["cells"] for r in clipped.collect())
+
+
+def test_cell_stats_keeps_the_first_of_equal_values():
+    """Among equal values min and max keep the first, as Spark's do, so
+    the sign of a zero follows the cells' order; NODATA cells are left
+    out, and a raster without a valid cell has null min/max/mean."""
+    for cells in ([0.0, -0.0], [-0.0, 0.0]):
+        n, lo, hi, mean = cell_stats(cells, -9999.0)
+        assert n == 2 and mean == 0.0
+        assert math.copysign(1.0, lo) == math.copysign(1.0, hi) == math.copysign(1.0, cells[0])
+    assert cell_stats([-9999.0, 2.0, 1.0], -9999.0) == (2, 1.0, 2.0, 1.5)
+    assert cell_stats([-9999.0] * 3, -9999.0) == (0, None, None, None)
+    assert cell_stats([], -9999.0) == (0, None, None, None)
+
+
 def test_clip_to_polygon_crops_to_the_window(spark, rasters):
     """The clip shrinks each raster to its polygon's cell window
     (NO_MAINTAIN_EXTENT, :309) and masks the window's outside cells; a
@@ -249,10 +282,13 @@ def _same(a, b) -> bool:
 
 
 def test_row_stats_equal_grouped_stats(spark, rasters, tmp_path):
-    """with_raster_stats (one pass per row) equals raster_stats (explode
-    + groupBy) bit for bit, and keeps the all-NODATA rows raster_stats
-    drops with n_cells = 0 and null min/max/mean."""
+    """The stats ``cli.build_products``' one kernel takes (``cell_stats``
+    on each clipped row) equal raster_stats (explode + groupBy) bit for
+    bit, and keep the all-NODATA rows raster_stats drops with n_cells = 0
+    and null min/max/mean."""
     from pyspark.sql import functions as F
+
+    from geospatial_etl_pipeline_spark import cli
 
     d = tmp_path / "grids"
     d.mkdir()
@@ -271,13 +307,16 @@ def test_row_stats_equal_grouped_stats(spark, rasters, tmp_path):
          ("none", None)],
         "region string, wkt string",
     )
-    fanout = rasters.unionByName(extra).crossJoin(polygons).withColumn(
+    grids = rasters.unionByName(extra)
+    fanout = grids.crossJoin(polygons).withColumn(
         "base_name", F.concat_ws("#", "base_name", "region")
     ).drop("region")
-    clipped = clip_to_polygon(fanout, "wkt").cache()
+    clipped = clip_to_polygon(fanout, "wkt")
     grouped = {r["base_name"]: r for r in raster_stats(clipped).collect()}
-    rows = {r["base_name"]: r for r in with_raster_stats(clipped).collect()}
-    clipped.unpersist()
+    regions = polygons.selectExpr(
+        "region AS regc_code", "region AS region_name_ascii", "wkt")
+    rows = {f"{r['base_name']}#{r['regc_code']}": r
+            for r in cli.build_products(spark, grids, regions).collect()}
 
     assert len(rows) == 6 * 3
     empty = {n for n in rows if n.startswith("all_nodata#") or n.endswith("#miss")}
@@ -330,12 +369,13 @@ def test_read_asc_nan_cells_are_nodata(spark, tmp_path):
 
     whole = "POLYGON((0 0, 4 0, 4 4, 0 4, 0 0))"
     clipped = clip_to_polygon(grid.withColumn("wkt", F.lit(whole)), "wkt")
-    assert clipped.collect()[0]["cells"] == row["cells"]
+    clipped_row = clipped.collect()[0]
+    assert clipped_row["cells"] == row["cells"]
     s = raster_stats(clipped).collect()[0]
     assert s["n_cells"] == 15
     assert (s["min_val"], s["max_val"]) == (1.0, 16.0)
     assert s["mean_val"] == pytest.approx((136 - 6) / 15)
-    assert with_raster_stats(clipped).collect()[0]["n_cells"] == 15
+    assert cell_stats(clipped_row["cells"], clipped_row["nodata_value"])[0] == 15
 
     non_ansi = spark.newSession()
     non_ansi.conf.set("spark.sql.ansi.enabled", "false")
